@@ -122,7 +122,7 @@ object GraftExtensions {
     describe("graft_percentile_disc",
       "graft_percentile_disc(x, p) - running discrete percentile (reference UDAF semantics)",
       arity = 2) { args =>
-      DiscretePercentileAgg(args.head, doubleArg("graft_percentile_disc", "p", args(1)))
+      ExactPercentileAgg(args.head, doubleArg("graft_percentile_disc", "p", args(1)), discrete = true)
     },
     describe("graft_nfc",
       "graft_nfc(text string) - Unicode NFC normalization (ASCII/already-NFC pass through)",

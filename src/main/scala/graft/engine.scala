@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.functions.ExactPercentileAgg
 
 /** The window-aggregation engine: WindowQuerySpec → DataFrame transform.
   *
@@ -25,13 +27,18 @@ import org.apache.spark.sql.types._
   *    they need the whole partition.
   *  - Spark's WindowExec sorts within partitions via UnsafeExternalSorter and
   *    spills; frames are evaluated incrementally (no per-row re-scan).
-  *  - DISCRETE_PERCENTILE is a TypedImperativeAggregate over the shared spec
-  *    ([[graft.functions.DiscretePercentileAgg]]) with the reference UDAF's
-  *    exact semantics (running RANGE frame per the order clause, null inputs
-  *    skipped). Its buffer is O(distinct values) per partition — same
-  *    complexity envelope as the reference (DiscretePercentile.java:98-168);
-  *    for high-cardinality value columns prefer CONTINUOUS_PERCENTILE, whose
-  *    exact-percentile buffer Spark spills.
+  *  - MEDIAN, CONTINUOUS_PERCENTILE and DISCRETE_PERCENTILE are one
+  *    TypedImperativeAggregate over the shared spec
+  *    ([[graft.functions.ExactPercentileAgg]]): Spark `percentile`'s exact
+  *    interpolation (continuous) or the reference UDAF's semantics (discrete),
+  *    null inputs skipped. Its buffer is a sorted value → count table held in
+  *    memory at O(distinct values) per partition (none of it spills); rows
+  *    are appended unsorted and sorted in with one primitive `Arrays.sort`
+  *    plus a linear merge before each eval. Unordered (whole-partition) use
+  *    therefore costs O(n log n) per partition. Under a running frame each
+  *    peer group costs O(distinct) to merge and read, so a high-cardinality
+  *    value column over a huge ordered partition is quadratic in its distinct
+  *    values.
   */
 object WindowEngine {
 
@@ -146,26 +153,27 @@ object WindowEngine {
     case WindowFn.NTile       => ntile(agg.args.head.toInt)
     case WindowFn.RowNumber   => row_number()
     // Exact percentile (Hive-style interpolation), NOT approx_percentile —
-    // reference uses callUDF("percentile", ...) (WindowsAggregationUtil.java:140-147).
-    case WindowFn.Median                => percentile(col(agg.field), lit(0.5))
-    case WindowFn.ContinuousPercentile  => percentile(col(agg.field), lit(agg.args.head.toDouble))
+    // reference uses callUDF("percentile", ...) (WindowsAggregationUtil.java:140-147);
+    // the kernel reproduces Spark's `percentile` arithmetic bit for bit.
+    case WindowFn.Median                => exactPercentile(agg, 0.5, discrete = false)
+    case WindowFn.ContinuousPercentile  => exactPercentile(agg, agg.args.head.toDouble, discrete = false)
     case WindowFn.Lead        => lead(agg.field, agg.args.head.toInt)
     case WindowFn.Lag         => lag(agg.field, agg.args.head.toInt)
     case WindowFn.First       => first(agg.field, firstLastIgnoreNulls(agg))
     case WindowFn.Last        => last(agg.field, firstLastIgnoreNulls(agg))
     case WindowFn.CumulativeDistribution => cume_dist()
     case WindowFn.Accumulate  => sum(agg.field)
-    // Typed imperative aggregate reproducing the reference UDAF
-    // (DiscretePercentile.java) — over the SAME shared spec, so with an order
-    // clause it evaluates per row on the default running RANGE frame, exactly
-    // like the reference's .over(spec) application
-    // (WindowsAggregationUtil.java:119-124).
-    case WindowFn.DiscretePercentile =>
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.DiscretePercentileAgg(
-          org.apache.spark.sql.GraftColumnBridge.expression(col(agg.field)),
-          agg.args.head.toDouble).toAggregateExpression())
+    // The reference UDAF's semantics (DiscretePercentile.java) — over the
+    // SAME shared spec, so with an order clause it evaluates per row on the
+    // default running RANGE frame, exactly like the reference's .over(spec)
+    // application (WindowsAggregationUtil.java:119-124).
+    case WindowFn.DiscretePercentile    => exactPercentile(agg, agg.args.head.toDouble, discrete = true)
   }
+
+  private def exactPercentile(agg: AggregateSpec, p: Double, discrete: Boolean): Column =
+    GraftColumnBridge.column(
+      ExactPercentileAgg(GraftColumnBridge.expression(col(agg.field)), p, discrete)
+        .toAggregateExpression())
 
   /** Post-.over() cast honoring the reference's declared output types:
     * PERCENT_RANK is declared FLOAT (WindowAggregationConfig.java:333) though

@@ -178,10 +178,10 @@ object SqlEmitter {
       case WindowFn.DiscretePercentile => dialect match {
         case BigQuery => s"PERCENTILE_DISC($col, $arg0)"
         // DuckDB's quantile_disc picks the same cume_dist>=p element as the
-        // engine's DiscretePercentileAgg, including over running frames
+        // engine's discrete ExactPercentileAgg, including over running frames
         case DuckDb => s"quantile_disc($col, $arg0)"
         // whole-partition only (see partitionOnly above); the engine's
-        // running-frame form still needs the native DiscretePercentileAgg
+        // running-frame form still needs the native ExactPercentileAgg
         case Spark => s"PERCENTILE_DISC($arg0) WITHIN GROUP (ORDER BY $col)"
       }
       case WindowFn.Lead => s"LEAD($col, $arg0)"

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.ExactPercentileAgg
 
 object TestSpark {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -107,23 +109,45 @@ class EngineSpec extends AnyFunSuite {
   test("DISCRETE_PERCENTILE aggregate survives the shuffle serialize path (groupBy)") {
     // the engine only exercises the window path; a plain groupBy partial-
     // aggregates per input partition and merges across the exchange, which
-    // runs serialize/deserialize + merge — pin that path too
-    import org.apache.spark.sql.functions.col
+    // runs serialize/deserialize + merge — pin that path too, in both kernel
+    // modes, over DOUBLE and over LONG keys above 2^53 (no double rounding).
+    // Group "gbig" holds two longs that round to one double: Spark still
+    // interpolates between them, and the result is not that double.
+    import org.apache.spark.sql.functions.{col, lit, percentile}
+    val big = 1L << 53
     val many = spark.createDataFrame(
-      spark.sparkContext.parallelize((1 to 1000).map(i => Row(s"g${i % 3}", (i % 50).toDouble)), 8),
-      StructType(Seq(StructField("g", StringType), StructField("x", DoubleType))))
-    val agg = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.DiscretePercentileAgg(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("x")), 0.5).toAggregateExpression())
-    val got = many.groupBy("g").agg(agg.as("dp")).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    // per group: values are (i%50) for i ≡ group (mod 3) — compute expected directly
-    val expected = (0 until 3).map { g =>
-      val vs = (1 to 1000).filter(_ % 3 == g).map(_ % 50).map(_.toDouble).sorted
-      val n = vs.size
-      s"g$g" -> vs((math.ceil(0.5 * n).toInt - 1).max(0))
-    }.toMap
-    assert(got == expected)
+      spark.sparkContext.parallelize(
+        (1 to 1000).map(i => Row(s"g${i % 3}", (i % 50).toDouble, big + (i % 37))) ++
+          Seq(Row("gbig", 1.0, (1L << 54) + 3), Row("gbig", 2.0, (1L << 54) + 5)), 8),
+      StructType(Seq(StructField("g", StringType), StructField("x", DoubleType),
+        StructField("y", LongType))))
+    def kernel(c: String, p: Double, discrete: Boolean) = GraftColumnBridge.column(
+      ExactPercentileAgg(GraftColumnBridge.expression(col(c)), p, discrete).toAggregateExpression())
+    val got = many.groupBy("g").agg(
+        kernel("x", 0.5, discrete = true).as("dp"),
+        kernel("y", 0.5, discrete = true).as("dpl"),
+        kernel("x", 0.3, discrete = false).as("cp"),
+        percentile(col("x"), lit(0.3)).as("cp_ref"),
+        kernel("y", 0.3, discrete = false).as("cpl"),
+        percentile(col("y"), lit(0.3)).as("cpl_ref"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    // per group: values are (i%50) and 2^53+(i%37) for i ≡ group (mod 3) —
+    // compute the discrete expectation directly
+    (0 until 3).foreach { g =>
+      val is = (1 to 1000).filter(_ % 3 == g)
+      def disc[T: Ordering](vs: Seq[T]): T = vs.sorted.apply((math.ceil(0.5 * vs.size).toInt - 1).max(0))
+      val r = got(s"g$g")
+      assert(r.getDouble(1) == disc(is.map(i => (i % 50).toDouble)))
+      assert(r.getLong(2) == disc(is.map(i => big + (i % 37))))
+      assert(r.getLong(2) > big)
+    }
+    // continuous mode: Spark's built-in percentile is the reference
+    for (r <- got.values) {
+      assert(r.getDouble(3) == r.getDouble(4))
+      assert(r.getDouble(5) == r.getDouble(6))
+    }
+    assert(got("gbig").getLong(2) == (1L << 54) + 3)
+    assert(got("gbig").getDouble(6) != ((1L << 54) + 4).toDouble)
   }
 
   test("DISCRETE_PERCENTILE skips null inputs (reference UDAF update:104-107)") {
@@ -135,6 +159,21 @@ class EngineSpec extends AnyFunSuite {
     assert(m(("a", 2)) == 10.0) // prefix values {10.0} — null skipped
     assert(m(("a", 3)) == 10.0) // {10.0, 30.0} → cd(10)=0.5
     assert(m(("a", 4)) == 20.0) // {10.0, 30.0, 20.0} → cd(20)=2/3
+  }
+
+  test("MEDIAN rejects DATE and ANSI interval inputs at analysis") {
+    // the declared output type is DOUBLE; an interval median would return an
+    // interval, so the kernel accepts numeric input only
+    val odd = spark.sql(
+      """SELECT 'a' AS k, 1 AS ord, DATE'2024-01-01' AS d,
+        |       make_dt_interval(0, 0, 0, 1.5) AS dt, make_ym_interval(1, 2) AS ym""".stripMargin)
+    for (field <- Seq("d", "dt", "ym")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        WindowEngine.run(odd, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
+          aggregates = Seq(AggregateSpec("med", WindowFn.Median, field))))
+      }
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    }
   }
 
   test("multiple aggregates share one window (single shuffle) and append in order") {

@@ -185,7 +185,7 @@ class SqlEmitterSpec extends AnyFunSuite {
     // INVALID_WINDOW_SPEC_FOR_AGGREGATION_FUNC), so BOTH pushdown dialects
     // drop the spec's order from the OVER and evaluate whole-partition —
     // the documented divergence from the engine's running-frame
-    // DiscretePercentileAgg (which remains the execution path).
+    // ExactPercentileAgg (which remains the execution path).
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("v")),
       aggregates = Seq(AggregateSpec("dp", WindowFn.DiscretePercentile, "v", Seq("0.5"))))
     df.createOrReplaceTempView("t")
