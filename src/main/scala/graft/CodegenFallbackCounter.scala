@@ -7,15 +7,15 @@ import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 
-/** Counts Spark's silent codegen-fallback events for the bench record.
+/** Counts Spark's silent codegen-fallback events for the benchmark record.
   *
   * Why this exists: in round 13 the inlined URL-normalization column chain
   * blew past the JVM's 64 KB generated-method limit and every consumer
   * stage SILENTLY fell back to interpreted execution — 21 `CodeGenerator`
-  * "failed to compile" warnings per bench run that nothing surfaced until
-  * the stderr logs were read by hand (BENCH_NOTES r13). The class of
+  * "failed to compile" warnings per benchmark run that nothing surfaced
+  * until the stderr logs were read by hand (BENCH_NOTES r13). The class of
   * defect is guaranteed to recur as expression chains compose further, so
-  * the bench record now carries a `codegen_fallbacks` count (expected 0)
+  * the benchmark record now carries a `codegen_fallbacks` count (expected 0)
   * and a first-sample message for attribution, and a spec pins the known
   * big chains at zero.
   *
@@ -25,7 +25,7 @@ import org.apache.logging.log4j.core.config.Property
   * the expression-level interpreter fallback ("falling back to interpreter
   * mode"), and the raw janino failure ("failed to compile"). The root
   * logger must sit at WARN or lower for the first two (ERROR-only
-  * sessions still catch the third); Bench sets WARN explicitly.
+  * sessions still catch the third); Verify sets WARN explicitly.
   */
 object CodegenFallbackCounter {
   private val n = new AtomicLong(0L)
@@ -38,7 +38,7 @@ object CodegenFallbackCounter {
     * phrase "failed to compile" is additionally gated on the LOGGER NAME
     * containing "codegen" (the emitter is
     * o.a.s.sql.catalyst.expressions.codegen.CodeGenerator) so an unrelated
-    * component logging that phrase can't inflate the bench count; the
+    * component logging that phrase can't inflate the count; the
     * other two phrases are codegen-specific wording but their emitters'
     * names don't all carry "codegen" (the interpreter fallback logs under
     * the concrete CodeGeneratorWithInterpretedFallback SUBCLASS, e.g.

@@ -110,7 +110,7 @@ object SparkEntry {
     // clean feeds BOTH union branches; caching it saves the second pass
     // over the membership anti-join (measured 3.27 → 2.82 s at sf0.1 —
     // modest because ReuseExchange already shares the LSH subtree's
-    // shuffles). The bench/Verify clear the session cache per query, so
+    // shuffles). Verify clears the session cache per query, so
     // this is per-query storage — the q61 stage-boundary posture.
     val clean = docs.join(members, Seq("doc_id"), "left_anti").cache()
     clean.unionAll(clean.filter(col("doc_id") % 5 === 0)
@@ -2207,15 +2207,9 @@ object SparkEntry {
     })
   }
 
-  /** The live temp dir of an already-built fixture (None if not built
-    * in this JVM) — the bench's streaming stress probe reads the
-    * per-batch state ledger out of it after a timed rebuild. */
-  private[graft] def fixturePath(kind: String, dir: String): Option[String] =
-    Option(tempFixtureDirs.get(s"$kind|$dir"))
-
-  /** Evict one cached fixture so its next use REBUILDS — the bench's
-    * stress section uses this to time q174's store builds (gate +
-    * appends + materialization) per sample instead of a cached read. */
+  /** Evict one cached fixture so its next use REBUILDS — the
+    * CodegenFallbackSpec uses this so a staged stream actually runs
+    * instead of reading a fixture an earlier test left cached. */
   private[graft] def dropFixture(kind: String, dir: String): Unit = {
     val p = tempFixtureDirs.remove(s"$kind|$dir")
     if (p != null) {
@@ -2234,7 +2228,7 @@ object SparkEntry {
 
   /** q22's [[signatureDocuments]] materialized once per SF dir — the
     * fixture's LSH+verify derivation is several times the cost of the
-    * query it feeds, so it must not be re-derived per bench sweep. */
+    * query it feeds, so it must not be re-derived per query run. */
   private def q22FixturePath(s: SparkSession, dir: String): String =
     lazyFixtureDir("sig_docs_q22", dir) { path =>
       signatureDocuments(s, dir).write.mode("overwrite").parquet(s"$path/docs")
@@ -2319,7 +2313,7 @@ object SparkEntry {
         val fIvfApp = fIvf.map { _ =>
           // batch id → base corpus id, mirroring incrementalBatch's id scheme
           // explicitly (NOT doc_id % 10⁶, which would mis-resolve on corpora
-          // whose own ids exceed 10⁶ — the bench's 10× amplified dir)
+          // whose own ids exceed 10⁶, e.g. a 10× amplified corpus)
           val b = docs.select(col("doc_id").as("__base"))
           val idMap = b.filter(col("__base") % 4 === 1)
             .select((col("__base") + 1000000L).as("doc_id"), col("__base"))
@@ -2429,30 +2423,24 @@ object SparkEntry {
     * under both. The conf is session-global for the duration of `body`:
     * a concurrently-STARTING test query could pick it up, which is benign
     * (the operators are provider-agnostic — that is the point) and cannot
-    * happen in the sequential Verify/Bench drivers.
+    * happen in the sequential Verify main.
     *
     * Invocations SERIALIZE on a private lock (r15 ADVICE): without it,
     * two overlapping calls interleave capture/restore (A captures unset,
     * B captures RocksDB, A unsets, B restores RocksDB) and leave the
     * provider pinned after both exit. `synchronized` is reentrant, so a
-    * same-thread nested call stays safe, and the sequential Verify/Bench
-    * drivers never contend — the lock only matters under parallel test
+    * same-thread nested call stays safe, and the sequential Verify
+    * main never contends — the lock only matters under parallel test
     * suites.
     *
     * `changelog = true` additionally enables RocksDB CHANGELOG
     * checkpointing — the production recovery posture at 100 TB: each
     * micro-batch persists only the batch's state delta instead of full
     * SST-file snapshots, so commit cost tracks the update rate rather
-    * than the store size, and restart replays snapshot + changelog. The
-    * restart fixtures (q207/q208/q210/q211) run under it, proving
-    * recovery works on the fast path, not only the snapshot-per-batch
-    * slow path. */
-  /** Checkpoint mode the RESTART fixtures run under — changelog (the
-    * production fast path, default) unless the recovery-cost probe
-    * ([[RecoveryProbe]]) flips it to measure the snapshot-per-batch
-    * slow path on identical fixtures. Never mutated by Verify/Bench. */
-  @volatile private[graft] var restartChangelogMode: Boolean = true
-
+    * than the store size, and restart replays snapshot + changelog. Every
+    * two-run restart fixture (q207/q208/q210/q211, the restart joins,
+    * q215, q264) runs under it, proving recovery works on the fast path;
+    * the single-run fixtures keep the snapshot-per-batch default. */
   private val stateStoreConfLock = new Object
   private[graft] def withRocksDbStateStore[T](s: SparkSession,
       changelog: Boolean = false)(body: => T): T = stateStoreConfLock.synchronized {
@@ -2473,23 +2461,14 @@ object SparkEntry {
 
   /** The shared tail of every staged streaming fixture: run `out` to the
     * fixture's parquet file sink (`$path/out`, checkpoint `$path/ck`,
-    * append mode, `Trigger.AvailableNow`) under [[withRocksDbStateStore]],
-    * then append EVERY micro-batch's state-operator metrics (rows held,
-    * memory) to `$path/state_metrics.jsonl` — the per-query state-size
-    * evidence BENCH_NOTES cites. Per-batch rather than final-progress
-    * capture (r15 verdict #5): eviction operators drain to a residual by
-    * the last batch, so the final progress under-reports the peak; the
-    * per-batch ledger records the true high-water mark. `recentProgress`
-    * retains the last 100 progress events — far above any staged
-    * fixture's batch count — so no batch is ever dropped. The provider is
-    * pinned in the checkpoint's offset log at first start, so a restart
-    * fixture calling this twice against one checkpoint keeps RocksDB
-    * automatically; `changelog` selects RocksDB changelog checkpointing
-    * (see [[withRocksDbStateStore]]). */
+    * append mode, `Trigger.AvailableNow`) under [[withRocksDbStateStore]].
+    * The provider is pinned in the checkpoint's offset log at first start,
+    * so a restart fixture calling this twice against one checkpoint keeps
+    * RocksDB automatically; `changelog` selects RocksDB changelog
+    * checkpointing (see [[withRocksDbStateStore]]). */
   private def runStreamToSink(out: org.apache.spark.sql.Dataset[_], path: String,
       changelog: Boolean = false): Unit =
     withRocksDbStateStore(out.sparkSession, changelog) {
-      val t0 = System.nanoTime()
       val q = out.writeStream
         .format("parquet")
         .option("path", s"$path/out")
@@ -2498,62 +2477,7 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      recordRunTime(path, (System.nanoTime() - t0) / 1000000L, changelog)
-      recordStateMetrics(q, path)
     }
-
-  /** Append one streaming run's wall time to the fixture's
-    * `run_times.jsonl` — for a two-run RESTART fixture, line 2 is the
-    * resume (recovery + remaining batches), the number the
-    * changelog-vs-snapshot recovery table (BENCH_NOTES r17) reads. */
-  private def recordRunTime(path: String, wallMs: Long, changelog: Boolean): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "run_times.jsonl"),
-      s"""{"wall_ms":$wallMs,"changelog":$changelog}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-
-  /** Append every micro-batch's state-operator metrics from a finished
-    * query's `recentProgress` to the fixture's `state_metrics.jsonl`
-    * (shared by [[runStreamToSink]] and the foreachBatch fixtures,
-    * which cannot route through the common sink tail). */
-  private def recordStateMetrics(
-      q: org.apache.spark.sql.streaming.StreamingQuery, path: String): Unit = {
-    val lines = q.recentProgress.iterator.flatMap(p =>
-      p.stateOperators.map(op =>
-        s"""{"batchId":${p.batchId},"op":${op.json}}""" + "\n")).mkString
-    if (lines.nonEmpty) {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, "state_metrics.jsonl"), lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      // The fixture dir is a shutdown-swept temp dir; when set, this
-      // mirrors the ledger somewhere durable so the BENCH_NOTES state
-      // table regenerates from real per-batch records after the run.
-      sys.env.get("SPARK_GRAFT_STATE_METRICS_DIR").foreach { d =>
-        val kind = "stream_q\\d{3}".r.findFirstIn(new java.io.File(path).getName)
-          .getOrElse(new java.io.File(path).getName)
-        // dir rides along so sf0.01/sf0.1/bench-10x records never
-        // conflate in the append-only mirror (r16 review finding).
-        // Interpolated values are JSON-escaped (r16 ADVICE): a temp path
-        // with a quote/backslash/control char must not corrupt the line
-        def jesc(v: String): String = v.flatMap {
-          case '\\' => "\\\\"
-          case '"' => "\\\""
-          case c if c < 0x20 => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        }
-        val tagged = lines.linesIterator
-          .map(l => s"""{"fixture":"${jesc(kind)}","dir":"${jesc(path)}",${
-            l.stripPrefix("{")}""" + "\n").mkString
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(d, "state_metrics.jsonl"), tagged,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      }
-    }
-  }
 
   private def q185StreamPath(s: SparkSession, dir: String): String =
     lazyFixtureDir("stream_q185", dir) { path =>
@@ -3166,7 +3090,7 @@ object SparkEntry {
         val out = streaming.StreamingWindows
           .streamingFirstFitPack(stream, maxTokens = 256, shards = 8,
             maxOpenBins = 4096)
-        runStreamToSink(out, path, changelog = restartChangelogMode)
+        runStreamToSink(out, path, changelog = true)
       }
       stageMicroBatches("q207", path,
         Seq(docs.filter(col("doc_id") % 3 === 0)))
@@ -3216,7 +3140,7 @@ object SparkEntry {
         val out = streaming.StreamingWindows
           .streamingMinHashCandidates(stream, watermark = "1 hour",
             n = 3, numHashes = 32, bands = 8)
-        runStreamToSink(out, path, changelog = restartChangelogMode)
+        runStreamToSink(out, path, changelog = true)
       }
       stageMicroBatches("q208", path,
         Seq(docs.filter(col("doc_id") % 3 === 0).withColumn("ts", ts)))
@@ -3271,7 +3195,7 @@ object SparkEntry {
         val out = streaming.StreamingWindows
           .streamingChatRender(stream, gap = "30 minutes",
             watermark = "1440 hours")
-        runStreamToSink(out, path, changelog = restartChangelogMode)
+        runStreamToSink(out, path, changelog = true)
       }
       stageMicroBatches("q210", path,
         Seq(events.filter(col("event_id") % 3 === 0)))
@@ -3326,7 +3250,7 @@ object SparkEntry {
           stream.as[streaming.FunnelEvent],
           stages = Seq("view", "click", "purchase"),
           idleTimeout = "1440 hours")
-        runStreamToSink(out, path, changelog = restartChangelogMode)
+        runStreamToSink(out, path, changelog = true)
       }
       stageMicroBatches("q211", path, Seq(events.filter(stageOf === 0)))
       runOnce() // run 1: batch 0 only — timers set, nothing evicts
@@ -3468,7 +3392,7 @@ object SparkEntry {
           .streamingClickAttribution(stream,
             attributionWindow = "30 minutes", watermark = "1440 hours",
             joinType = joinType)
-        runStreamToSink(out, path, changelog = restartChangelogMode)
+        runStreamToSink(out, path, changelog = true)
       }
       stageMicroBatches(qname, path,
         Seq(events.filter(col("event_id") % 3 === 0)))
@@ -3554,7 +3478,6 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      recordStateMetrics(q, path)
     }
   }
 
@@ -3649,8 +3572,7 @@ object SparkEntry {
           .parquet(new java.io.File(path, "in").getAbsolutePath)
         val counts = streaming.StreamingWindows
           .userActivityCounts(stream, watermark = "1440 hours")
-        withRocksDbStateStore(s, changelog = restartChangelogMode) {
-          val t0 = System.nanoTime()
+        withRocksDbStateStore(s, changelog = true) {
           val q = counts.writeStream
             .outputMode("update")
             .foreachBatch(
@@ -3659,9 +3581,6 @@ object SparkEntry {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           q.awaitTermination()
-          recordRunTime(path, (System.nanoTime() - t0) / 1000000L,
-            restartChangelogMode)
-          recordStateMetrics(q, path)
         }
       }
       stageMicroBatches("q215", path,
@@ -3708,7 +3627,7 @@ object SparkEntry {
           .parquet(new java.io.File(path, "in").getAbsolutePath)
         val counts = streaming.StreamingWindows
           .userActivityCounts(stream, watermark = "1440 hours")
-        withRocksDbStateStore(s, changelog = restartChangelogMode) {
+        withRocksDbStateStore(s, changelog = true) {
           val q = counts.writeStream
             .outputMode("update")
             .foreachBatch(
@@ -3717,7 +3636,6 @@ object SparkEntry {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           q.awaitTermination()
-          recordStateMetrics(q, path)
         }
       }
       stageMicroBatches("q264", path,
@@ -3775,7 +3693,6 @@ object SparkEntry {
       .userActivityCountsWindowed(stream, windowLength = "1 day",
         watermark = "1440 hours")
     withRocksDbStateStore(s) {
-      val t0 = System.nanoTime()
       val q = counts.writeStream
         .outputMode("update")
         .foreachBatch(streaming.StreamingWindows
@@ -3784,9 +3701,6 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      recordRunTime(path, (System.nanoTime() - t0) / 1000000L,
-        changelog = false)
-      recordStateMetrics(q, path)
     }
   }
 
@@ -5002,11 +4916,10 @@ object SparkEntry {
     // 1.0 and the construction-reproducing oracle applies. The operator on
     // RAW corpora stays approximate; its production point is q53. The
     // fixture derives ONCE per SF dir onto disk (the q98-index pattern):
-    // its LSH+verify chain costs ~4× the query itself, and the r8
-    // interleaved harness's per-query clearCache rebuilt the in-session
-    // cached variant EVERY sweep, quadrupling the committed number on
-    // unchanged code (BENCH_NOTES r9) — reading the derived parquet makes
-    // the bench measure the QUERY, cache policy notwithstanding.
+    // its LSH+verify chain costs ~4× the query itself, and a per-query
+    // clearCache (as Verify does) would rebuild an in-session cached
+    // variant on every run — reading the derived parquet keeps the
+    // derivation out of the query, cache policy notwithstanding.
     "q22_dedup_minhash" -> ((s, dir) =>
       Dedup.minHashLshPairs(s.read.parquet(s"${q22FixturePath(s, dir)}/docs"),
         n = 3, numHashes = 16, bands = 4, minEstimate = 0.4)),
@@ -6811,7 +6724,6 @@ object SparkEntry {
     // where 8-bit tables collide at ~4%/table (≈40% over 14 tables ⇒
     // candidates ≈ n²/2); 16 bits cut background collisions ~25× while
     // keeping planted-pair misses ≤ 3e-6 (probe-verified 0 at all 3 SFs).
-    // Bench logs the measured candidates/(n choose 2) ratio per round.
     "q52_embed_neardup_lsh_prod" -> ((s, dir) =>
       Similarity.lshNearDupPairs(derivedEmbeddings(s, dir), threshold = 0.9,
         planesPerTable = 16, numTables = 14)),
@@ -7300,10 +7212,8 @@ object SparkEntry {
     // once (writeMinHashIndex), every later batch probes the parquet layout
     // without re-reading corpus text. The index builds lazily on the FIRST
     // q98 construction for an SF dir and is reused by every later one (the
-    // steady-state serving shape; the one-off build cost is recorded
-    // separately in the bench's mh_index section), and the result must
-    // hash-match q68's oracle exactly: the layout loses nothing vs
-    // recomputation.
+    // steady-state serving shape), and the result must hash-match q68's
+    // oracle exactly: the layout loses nothing vs recomputation.
     "q98_neardup_indexed" -> ((s, dir) =>
       Dedup.nearDupAgainstIndex(nearDupBatch(s, dir), q98IndexPath(s, dir),
         threshold = 0.5)),

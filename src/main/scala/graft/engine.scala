@@ -106,6 +106,8 @@ object WindowEngine {
     StructType(replaced ++ appended)
   }
 
+  /** The reference's declared output type (WindowFn.declaredOutput), else the
+    * input field's — the one source of the engine's result types. */
   private def aggregateOutputType(agg: AggregateSpec, input: StructType): DataType =
     agg.fn.declaredOutput.getOrElse(
       input.fields.find(_.name == agg.field).map(_.dataType).getOrElse(NullType))
@@ -114,10 +116,19 @@ object WindowEngine {
     val shared = buildWindowSpec(spec)
     var out = df
     for (agg <- spec.aggregates) {
-      // Cast AFTER .over(): wrapping the aggregate in a Cast before
-      // .over() would hide it from Spark's window-expression extraction.
+      // Only PERCENT_RANK (declared FLOAT, WindowAggregationConfig.java:333;
+      // Spark computes DOUBLE) and ACCUMULATE (declared = input type, :398;
+      // Spark's sum widens int→long) differ from aggregateOutputType; every
+      // other function already returns it (EngineSpec checks all 14). A
+      // no-op cast is not free: Catalyst drops it, but the renaming Project
+      // it split off above the Window stays. Cast AFTER .over(): wrapping
+      // the aggregate in a Cast before .over() would hide it from Spark's
+      // window-expression extraction.
       val overCol = column(agg).over(shared)
-      out = out.withColumn(agg.alias, postCast(agg, df.schema).fold(overCol)(overCol.cast))
+      out = out.withColumn(agg.alias,
+        if (agg.fn == WindowFn.PercentRank || agg.fn == WindowFn.Accumulate)
+          overCol.cast(aggregateOutputType(agg, df.schema))
+        else overCol)
     }
     spec.numberOfPartitions match {
       case Some(n) => out.repartition(n) // reference knob: WindowsAggregationUtil.java:84-90
@@ -175,21 +186,12 @@ object WindowEngine {
       ExactPercentileAgg(GraftColumnBridge.expression(col(agg.field)), p, discrete)
         .toAggregateExpression())
 
-  /** Post-.over() cast honoring the reference's declared output types:
-    * PERCENT_RANK is declared FLOAT (WindowAggregationConfig.java:333) though
-    * Spark computes DOUBLE; ACCUMULATE's output = input type
-    * (WindowAggregationConfig.java:398) though Spark's sum widens (int→long). */
-  private def postCast(agg: AggregateSpec, schema: StructType): Option[DataType] = agg.fn match {
-    case WindowFn.PercentRank => Some(FloatType)
-    case WindowFn.Accumulate  => schema.fields.find(_.name == agg.field).map(_.dataType)
-    case _                    => None
-  }
-
   /** FIRST/LAST ignoreNulls: config flag OR'd with an optional boolean arg
-    * (reference: WindowsAggregationUtil.java:158-171). Parsed like Java's
+    * (reference: WindowsAggregationUtil.java:158-171, and the pushdown's
+    * WindowAggregation.java:640-645). Parsed like Java's
     * Boolean.parseBoolean — true iff the literal "true", never throws (the
-    * e2e fixture passes "1" here). */
-  private def firstLastIgnoreNulls(agg: AggregateSpec): Boolean =
+    * e2e fixture passes "1" here). Shared with [[SqlEmitter]]. */
+  private[graft] def firstLastIgnoreNulls(agg: AggregateSpec): Boolean =
     agg.ignoreNulls || agg.args.headOption.exists(_.equalsIgnoreCase("true"))
 
 }

@@ -220,9 +220,9 @@ object Similarity {
 
   /** Candidate (id1 < id2) pairs for [[lshNearDupPairs]] — the equi-join
     * bucket collision stage without the exact rerank, exposed so callers
-    * (bench instrumentation, completeness probes) can measure candidate
-    * volume against n²/2: the number that decides whether the LSH shape is
-    * winning on a given corpus. `planesPerTable` is the corpus-dependent
+    * (completeness probes) can measure candidate volume against n²/2:
+    * the number that decides whether the LSH shape is winning on a given
+    * corpus. `planesPerTable` is the corpus-dependent
     * knob — per-table collision for a background pair at cosine c is
     * (1 - acos(c)/π)^b, so corpora whose unrelated pairs are already
     * correlated (this testdata's background sits at cos ≈ 0.5) need wider

@@ -79,7 +79,7 @@ object SqlEmitter {
     s"SELECT ${(inPlace ++ appended).mkString(", ")} FROM $table"
   }
 
-  /** Declared output types, matching [[WindowEngine]]'s post-casts:
+  /** Declared output types, matching [[WindowEngine.outputSchema]]:
     * PERCENT_RANK → FLOAT, ACCUMULATE → input type (SUM widens). Type names
     * are dialect-mapped — BigQuery has only FLOAT64/INT64 (FLOAT, DOUBLE,
     * INT, BIGINT are not accepted type names there). */
@@ -155,10 +155,7 @@ object SqlEmitter {
     import Dialect._
     val col = agg.field
     def arg0 = agg.args.head
-    // FIRST/LAST null handling: config flag OR'd with optional boolean arg,
-    // parsed like Boolean.parseBoolean (reference WindowAggregation.java:640-645)
-    def ignoreNulls: Boolean =
-      agg.ignoreNulls || agg.args.headOption.exists(_.equalsIgnoreCase("true"))
+    def ignoreNulls: Boolean = WindowEngine.firstLastIgnoreNulls(agg)
     agg.fn match {
       case WindowFn.Rank        => "RANK()"
       case WindowFn.DenseRank   => "DENSE_RANK()"

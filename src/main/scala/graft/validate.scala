@@ -117,18 +117,26 @@ object Validator {
 
   /** ACCUMULATE + RANGE frame requires exactly one order clause regardless of
     * bounds — the reference rule verbatim (WindowAggregation.java:272-289).
-    * Additional generalized guard beyond the reference: ANY bounded RANGE
-    * frame (true value offsets) needs a single NUMERIC order key — matches
-    * Spark's own rangeBetween restriction (reference states it in prose,
+    * Additional generalized guards beyond the reference: a ROW or RANGE
+    * frame must not start after it ends (a positive "preceding" is the
+    * usual cause — the convention is -2 for "2 preceding"; Spark rejects
+    * such a frame at analysis), and ANY bounded RANGE frame (true value
+    * offsets) needs a single NUMERIC order key — matches Spark's own
+    * rangeBetween restriction (reference states it in prose,
     * WindowAggregationConfig.java:53-56).
     */
   private def validateSpecialCase(
       spec: WindowQuerySpec, fieldTypes: Map[String, DataType]): Seq[ValidationFailure] = {
-    if (spec.frame.frameType != FrameType.Range) return Seq.empty
+    if (spec.frame.frameType == FrameType.NoFrame) return Seq.empty
     val fs = Seq.newBuilder[ValidationFailure]
+    if (spec.frame.startBound > spec.frame.endBound)
+      fs += ValidationFailure(
+        s"Window frame start ${spec.frame.startBound} must not be after frame end ${spec.frame.endBound}.",
+        "Use negative values for preceding bounds, e.g. -2 for 2 preceding.")
+    val range = spec.frame.frameType == FrameType.Range
     // Reference rule: ACCUMULATE with a RANGE frame of ANY bounds (including
     // unbounded sentinels) demands exactly one ordering clause.
-    if (spec.aggregates.exists(_.fn == WindowFn.Accumulate) && spec.order.size != 1)
+    if (range && spec.aggregates.exists(_.fn == WindowFn.Accumulate) && spec.order.size != 1)
       fs += ValidationFailure(
         "partitionOrder needs to have exactly one clause when using RANGE frametype " +
           "for function ACCUMULATE.",
@@ -138,7 +146,8 @@ object Validator {
     // with any order keys (RANGE UNBOUNDED PRECEDING AND CURRENT ROW is
     // Spark's own default).
     def isValueOffset(b: Long) = b != Long.MinValue && b != Long.MaxValue && b != 0L
-    val bounded = isValueOffset(spec.frame.startBound) || isValueOffset(spec.frame.endBound)
+    val bounded = range &&
+      (isValueOffset(spec.frame.startBound) || isValueOffset(spec.frame.endBound))
     if (bounded) {
       if (spec.order.size != 1)
         fs += ValidationFailure(

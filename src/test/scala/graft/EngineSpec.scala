@@ -203,6 +203,27 @@ class EngineSpec extends AnyFunSuite {
     assert(schema("r").dataType == IntegerType)
     assert(schema("pr").dataType == FloatType)
     assert(schema("nxt").dataType == DoubleType) // inherits input type
+    // the executed result carries exactly the declared types: all 14
+    // functions over int, long, float and double value columns
+    val typed = Seq((1, 1, 1L, 1.5f, 1.5), (1, 2, 2L, 2.5f, 2.5), (2, 1, 3L, 3.5f, 3.5))
+      .toDF("k", "ord", "iv", "lv", "fv").withColumn("dv", $"fv".cast(DoubleType))
+    val values = Seq("iv", "lv", "fv", "dv")
+    def args(fn: WindowFn): Seq[String] = fn match {
+      case WindowFn.NTile => Seq("2")
+      case WindowFn.DiscretePercentile | WindowFn.ContinuousPercentile => Seq("0.5")
+      case WindowFn.Lead | WindowFn.Lag => Seq("1")
+      case _ => Seq.empty
+    }
+    def aggs(fns: Seq[WindowFn]) = for (fn <- fns; v <- values)
+      yield AggregateSpec(s"${fn.fnName}_$v", fn, v, args(fn))
+    val (unordered, ordered) = WindowFn.all.partition(_ == WindowFn.ContinuousPercentile)
+    for (spec <- Seq(
+        WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = aggs(ordered)),
+        WindowQuerySpec(Seq("k"), aggregates = aggs(unordered)))) {
+      def types(st: StructType) = st.fields.map(f => f.name -> f.dataType).toSeq
+      assert(types(WindowEngine.run(typed, spec).schema) ==
+        types(WindowEngine.outputSchema(typed.schema, spec)))
+    }
   }
 
   test("validation failures throw with all failures accumulated") {

@@ -119,6 +119,25 @@ class ValidatorSpec extends AnyFunSuite {
       spec(order = Seq(OrderSpec("v")), frame = unb, aggs = acc), schema).isEmpty)
   }
 
+  test("a ROW or RANGE frame that starts after it ends is rejected") {
+    def acc = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))
+    def check(frame: FrameSpec) = Validator.validate(spec(frame = frame, aggs = acc), schema)
+    // "2" written for "2 preceding": start 2 > end 0
+    for (ft <- Seq(FrameType.Row, FrameType.Range)) {
+      assert(check(FrameSpec(ft, Some(2L), Some(0L))).map(_.message) ==
+        Seq("Window frame start 2 must not be after frame end 0."))
+      assert(check(FrameSpec(ft, Some(5L), Some(-5L)))
+        .exists(_.message.contains("start 5 must not be after frame end -5")))
+      // equal bounds and the unbounded sentinels stay valid
+      assert(check(FrameSpec(ft, Some(3L), Some(3L))).isEmpty)
+      assert(check(FrameSpec(ft, Some(-3L), Some(-3L))).isEmpty)
+      assert(check(FrameSpec(ft)).isEmpty)
+      assert(check(FrameSpec(ft, unboundedPreceding = true, unboundedFollowing = true)).isEmpty)
+      assert(check(FrameSpec(ft, Some(5L), unboundedFollowing = true)).isEmpty)
+      assert(check(FrameSpec(ft, unboundedPreceding = true, following = Some(-5L))).isEmpty)
+    }
+  }
+
   test("duplicate aliases on hand-built specs rejected") {
     val fs = Validator.validate(spec(aggs = Seq(
       AggregateSpec("x", WindowFn.Rank, "v"), AggregateSpec("x", WindowFn.DenseRank, "v"))), schema)
