@@ -31,7 +31,9 @@ import graft.functions._
   *  - `graft_heavy_hitters(item, cap)`     → Misra-Gries frequent-items agg
   *  - `graft_percentile_disc(x, p)`        → reference-fidelity running
   *    DISCRETE_PERCENTILE aggregate (usable with OVER, like the reference's
-  *    registered UDAF — WindowsAggregationUtil.java:114)
+  *    registered UDAF — WindowsAggregationUtil.java:114). [[SqlEmitter]]'s
+  *    Spark dialect emits it for DISCRETE_PERCENTILE, so that SQL needs a
+  *    session with these extensions registered.
   *
   * For a session that already exists (REPL, notebook, shared test session)
   * use [[GraftExtensions.register]], the post-construction equivalent.

@@ -112,22 +112,24 @@ object WindowEngine {
     agg.fn.declaredOutput.getOrElse(
       input.fields.find(_.name == agg.field).map(_.dataType).getOrElse(NullType))
 
+  /** Whether Spark's result type differs from [[aggregateOutputType]], so
+    * both backends cast: PERCENT_RANK (declared FLOAT,
+    * WindowAggregationConfig.java:333; Spark computes DOUBLE) and ACCUMULATE
+    * (declared = input type, :398; sum widens int→long). EngineSpec checks
+    * that the other 12 match; a no-op cast is not free (Catalyst drops it
+    * but keeps the renaming Project it split off above the Window). */
+  private[graft] def castsToDeclared(fn: WindowFn): Boolean =
+    fn == WindowFn.PercentRank || fn == WindowFn.Accumulate
+
   private def applyUnchecked(df: DataFrame, spec: WindowQuerySpec): DataFrame = {
     val shared = buildWindowSpec(spec)
     var out = df
     for (agg <- spec.aggregates) {
-      // Only PERCENT_RANK (declared FLOAT, WindowAggregationConfig.java:333;
-      // Spark computes DOUBLE) and ACCUMULATE (declared = input type, :398;
-      // Spark's sum widens int→long) differ from aggregateOutputType; every
-      // other function already returns it (EngineSpec checks all 14). A
-      // no-op cast is not free: Catalyst drops it, but the renaming Project
-      // it split off above the Window stays. Cast AFTER .over(): wrapping
-      // the aggregate in a Cast before .over() would hide it from Spark's
-      // window-expression extraction.
+      // Cast AFTER .over(): wrapping the aggregate in a Cast before .over()
+      // would hide it from Spark's window-expression extraction.
       val overCol = column(agg).over(shared)
       out = out.withColumn(agg.alias,
-        if (agg.fn == WindowFn.PercentRank || agg.fn == WindowFn.Accumulate)
-          overCol.cast(aggregateOutputType(agg, df.schema))
+        if (castsToDeclared(agg.fn)) overCol.cast(aggregateOutputType(agg, df.schema))
         else overCol)
     }
     spec.numberOfPartitions match {
@@ -140,7 +142,7 @@ object WindowEngine {
     * (Long.MinValue/MaxValue) pass through verbatim — they ARE Spark's
     * Window.unboundedPreceding/unboundedFollowing. */
   private[graft] def buildWindowSpec(spec: WindowQuerySpec): WindowSpec = {
-    val partitioned = Window.partitionBy(spec.partitionFields.map(col): _*)
+    val partitioned = Window.partitionBy(spec.partitionFields.map(field): _*)
     val ordered =
       if (spec.order.isEmpty) partitioned
       else partitioned.orderBy(spec.order.map(orderColumn): _*)
@@ -152,9 +154,13 @@ object WindowEngine {
   }
 
   private def orderColumn(o: OrderSpec): Column = o.direction match {
-    case SortDirection.Ascending  => col(o.field).asc
-    case SortDirection.Descending => col(o.field).desc
+    case SortDirection.Ascending  => field(o.field).asc
+    case SortDirection.Descending => field(o.field).desc
   }
+
+  /** A top-level field by its exact name: backtick-quoted (inner backticks
+    * doubled), so a name like `a.b` is one column, not a struct path. */
+  private def field(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
   /** Function → Column (reference dispatch: WindowsAggregationUtil.java:126-179). */
   private def column(agg: AggregateSpec): Column = agg.fn match {
@@ -168,12 +174,12 @@ object WindowEngine {
     // the kernel reproduces Spark's `percentile` arithmetic bit for bit.
     case WindowFn.Median                => exactPercentile(agg, 0.5, discrete = false)
     case WindowFn.ContinuousPercentile  => exactPercentile(agg, agg.args.head.toDouble, discrete = false)
-    case WindowFn.Lead        => lead(agg.field, agg.args.head.toInt)
-    case WindowFn.Lag         => lag(agg.field, agg.args.head.toInt)
-    case WindowFn.First       => first(agg.field, firstLastIgnoreNulls(agg))
-    case WindowFn.Last        => last(agg.field, firstLastIgnoreNulls(agg))
+    case WindowFn.Lead        => lead(field(agg.field), agg.args.head.toInt)
+    case WindowFn.Lag         => lag(field(agg.field), agg.args.head.toInt)
+    case WindowFn.First       => first(field(agg.field), firstLastIgnoreNulls(agg))
+    case WindowFn.Last        => last(field(agg.field), firstLastIgnoreNulls(agg))
     case WindowFn.CumulativeDistribution => cume_dist()
-    case WindowFn.Accumulate  => sum(agg.field)
+    case WindowFn.Accumulate  => sum(field(agg.field))
     // The reference UDAF's semantics (DiscretePercentile.java) — over the
     // SAME shared spec, so with an order clause it evaluates per row on the
     // default running RANGE frame, exactly like the reference's .over(spec)
@@ -183,7 +189,7 @@ object WindowEngine {
 
   private def exactPercentile(agg: AggregateSpec, p: Double, discrete: Boolean): Column =
     GraftColumnBridge.column(
-      ExactPercentileAgg(GraftColumnBridge.expression(col(agg.field)), p, discrete)
+      ExactPercentileAgg(GraftColumnBridge.expression(field(agg.field)), p, discrete)
         .toAggregateExpression())
 
   /** FIRST/LAST ignoreNulls: config flag OR'd with an optional boolean arg

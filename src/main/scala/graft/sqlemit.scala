@@ -11,28 +11,26 @@ import org.apache.spark.sql.types._
   * specification of the engine's semantics (the parity test runs the emitted
   * Spark dialect through spark.sql and compares against WindowEngine.run).
   *
-  * Select-list shape mirrors the engine's output schema exactly
-  * ([[WindowEngine.outputSchema]]): every input column in order, an aggregate
-  * whose alias matches an input column REPLACES it in place, remaining
-  * aggregates append. Declared output types (PERCENT_RANK → FLOAT,
-  * ACCUMULATE → input type) are honored with CASTs so the emitted query is a
-  * true drop-in for the engine result — with ONE documented exception: the
-  * percentile family under BigQuery, and DISCRETE_PERCENTILE under Spark,
-  * are navigation functions whose OVER admits PARTITION BY only, so an
-  * ordered spec's running frame emits as whole-partition there (the engine
-  * and the DuckDb dialect keep the running-frame semantics).
+  * It prints decisions the engine makes: the select list walks
+  * [[WindowEngine.outputSchema]], and a declared type is CAST where
+  * [[WindowEngine.castsToDeclared]] says Spark's result differs from it.
+  * Names that are not plain identifiers are quoted. The one divergence left
+  * is BigQuery's navigation functions (see `partitionOnly`). The Spark
+  * dialect's DISCRETE_PERCENTILE is the engine's kernel,
+  * `graft_percentile_disc`: it needs a session with [[GraftExtensions]]
+  * registered, and fails with UNRESOLVED_ROUTINE, never a wrong result,
+  * on one without.
   */
 object SqlEmitter {
 
   /** Target dialect. BigQuery reproduces the reference's templates verbatim
     * (PERCENTILE_CONT/DISC as window functions, `IGNORE NULLS` inside the
-    * FIRST_VALUE arg list); Spark emits what spark.sql / ANSI engines accept
-    * (Hive `percentile`, boolean ignore-nulls argument); DuckDb emits the
-    * ORACLE form — the engine's declared output types surface as explicit
-    * casts (rank family → INT, PERCENT_RANK → REAL, ACCUMULATE → input type)
-    * and Spark's null-ordering defaults surface as NULLS FIRST/LAST, so a
-    * result computed by DuckDB from the emitted text is value- and
-    * dtype-identical to the engine's. The correctness gate consumes this
+    * FIRST_VALUE arg list); Spark emits what spark.sql accepts (Hive
+    * `percentile`, boolean ignore-nulls argument); DuckDb emits the ORACLE
+    * form — DuckDB-native result types surface as explicit casts and Spark's
+    * null-ordering defaults as NULLS FIRST/LAST, so a result computed by
+    * DuckDB from the emitted text is value- and dtype-identical to the
+    * engine's. The correctness gate consumes this
     * dialect directly (SparkEntry.oracleSql), which removes hand-written
     * oracle drift as a failure mode: the spec is the single source of truth
     * for both the executed query and its oracle. */
@@ -43,47 +41,52 @@ object SqlEmitter {
     case object DuckDb   extends Dialect
   }
 
-  /** Emit `SELECT ... FROM table` for a validated spec. `schema` drives the
-    * select list and the ACCUMULATE output cast. */
+  /** Emit `SELECT ... FROM table` for a validated spec over `schema`. */
   def emit(spec: WindowQuerySpec, table: String, schema: StructType,
       dialect: Dialect = Dialect.Spark): String = {
-    // the cast (declared output types) wraps the whole windowed expression —
-    // CAST(fn() AS t) OVER (...) is a syntax error in every dialect
-    def windowed(agg: AggregateSpec): String = {
-      // BigQuery's PERCENTILE_CONT/PERCENTILE_DISC are navigation functions:
-      // their window specification permits PARTITION BY only (ORDER BY or a
-      // frame is a compile error), and they evaluate over the WHOLE
-      // partition — a documented semantic divergence from the engine's
-      // running-frame DISCRETE_PERCENTILE when an order clause is present.
-      // Spark's percentile_disc (WITHIN GROUP form) carries the SAME
-      // restriction — INVALID_WINDOW_SPEC_FOR_AGGREGATION_FUNC on any OVER
-      // order/frame — so its emission is partition-only too.
-      val partitionOnly = agg.fn match {
-        case WindowFn.Median | WindowFn.ContinuousPercentile | WindowFn.DiscretePercentile
-          if dialect == Dialect.BigQuery => true
-        case WindowFn.DiscretePercentile if dialect == Dialect.Spark => true
-        case _ => false
-      }
-      val base = s"${aggregateSql(agg, dialect)} ${overClause(spec, dialect, partitionOnly)}"
-      outputCast(agg, schema, dialect).fold(base)(t => s"CAST($base AS $t)") + s" AS ${agg.alias}"
+    def name(n: String) = quote(n, dialect)
+    // the cast wraps the whole windowed expression — CAST(fn() AS t) OVER
+    // (...) is a syntax error in every dialect
+    def windowed(agg: AggregateSpec, declared: DataType): String = {
+      val base = s"${aggregateSql(agg, dialect)} ${overClause(spec, dialect, partitionOnly(agg, dialect))}"
+      outputCast(agg, declared, dialect).fold(base)(t => s"CAST($base AS $t)") + s" AS ${name(agg.alias)}"
     }
     val byAlias = spec.aggregates.map(a => a.alias -> a).toMap
-    val inputNames = schema.fieldNames.toSet
-    val inPlace = schema.fields.map { f =>
-      byAlias.get(f.name) match {
-        case Some(agg) => windowed(agg)
-        case None      => f.name
-      }
+    val select = WindowEngine.outputSchema(schema, spec).fields.map { f =>
+      byAlias.get(f.name).fold(name(f.name))(windowed(_, f.dataType))
     }
-    val appended = spec.aggregates.filterNot(a => inputNames.contains(a.alias)).map(windowed)
-    s"SELECT ${(inPlace ++ appended).mkString(", ")} FROM $table"
+    s"SELECT ${select.mkString(", ")} FROM $table"
   }
 
-  /** Declared output types, matching [[WindowEngine.outputSchema]]:
-    * PERCENT_RANK → FLOAT, ACCUMULATE → input type (SUM widens). Type names
-    * are dialect-mapped — BigQuery has only FLOAT64/INT64 (FLOAT, DOUBLE,
-    * INT, BIGINT are not accepted type names there). */
-  private def outputCast(agg: AggregateSpec, schema: StructType, dialect: Dialect): Option[String] = {
+  /** BigQuery's PERCENTILE_CONT/DISC are navigation functions: their OVER
+    * admits PARTITION BY only, so an ordered spec's running frame evaluates
+    * over the whole partition there — a documented divergence from the
+    * engine, kept because these are the reference's own templates. */
+  private def partitionOnly(agg: AggregateSpec, dialect: Dialect): Boolean =
+    dialect == Dialect.BigQuery && (agg.fn match {
+      case WindowFn.Median | WindowFn.ContinuousPercentile | WindowFn.DiscretePercentile => true
+      case _ => false
+    })
+
+  private val Plain = "[A-Za-z_][A-Za-z0-9_]*".r
+
+  /** A name as an identifier: as it is when plain, else quoted —
+    * backticks for Spark and BigQuery, double quotes for DuckDb. */
+  private def quote(n: String, dialect: Dialect): String =
+    if (Plain.matches(n)) n
+    else dialect match {
+      case Dialect.Spark    => s"`${n.replace("`", "``")}`"
+      case Dialect.BigQuery => s"`${n.replace("\\", "\\\\").replace("`", "\\`")}`"
+      case Dialect.DuckDb   => "\"" + n.replace("\"", "\"\"") + "\""
+    }
+
+  /** The cast to the declared output type, dialect-mapped (BigQuery has
+    * only FLOAT64/INT64 — FLOAT, DOUBLE, INT, BIGINT are not accepted type
+    * names there). Applied where Spark's result type differs
+    * ([[WindowEngine.castsToDeclared]]), and in DuckDb to two DuckDB-native
+    * results: the rank family, which DuckDB returns as BIGINT, and
+    * DISCRETE_PERCENTILE, pinned to its input type. */
+  private def outputCast(agg: AggregateSpec, declared: DataType, dialect: Dialect): Option[String] = {
     def typeName(dt: DataType): String = dialect match {
       case Dialect.BigQuery => dt match {
         case FloatType | DoubleType           => "FLOAT64"
@@ -97,26 +100,16 @@ object SqlEmitter {
       }
       case Dialect.Spark => dt.sql
     }
-    agg.fn match {
-      case WindowFn.PercentRank => Some(typeName(FloatType))
-      case WindowFn.Accumulate  => schema.fields.find(_.name == agg.field).map(f => typeName(f.dataType))
-      // declared output = input type; Spark's percentile_disc and a SQL
-      // engine's widened aggregate need the pin (BigQuery keeps the
-      // reference template verbatim, uncast)
-      case WindowFn.DiscretePercentile if dialect != Dialect.BigQuery =>
-        schema.fields.find(_.name == agg.field).map(f => typeName(f.dataType))
-      // DuckDB's rank family returns BIGINT; the engine declares INT
-      // (reference Function enum) — surfaced as an explicit cast so the
-      // oracle's dtype matches the engine's
-      case WindowFn.Rank | WindowFn.DenseRank | WindowFn.NTile | WindowFn.RowNumber
-        if dialect == Dialect.DuckDb => Some(typeName(IntegerType))
-      case _                    => None
-    }
+    val duckNative = dialect == Dialect.DuckDb && (agg.fn match {
+      case WindowFn.Rank | WindowFn.DenseRank | WindowFn.NTile | WindowFn.RowNumber |
+           WindowFn.DiscretePercentile => true
+      case _ => false
+    })
+    if (WindowEngine.castsToDeclared(agg.fn) || duckNative) Some(typeName(declared)) else None
   }
 
-  private def overClause(spec: WindowQuerySpec, dialect: Dialect,
-      partitionOnly: Boolean = false): String = {
-    val partition = s"PARTITION BY ${spec.partitionFields.mkString(", ")}"
+  private def overClause(spec: WindowQuerySpec, dialect: Dialect, partitionOnly: Boolean): String = {
+    val partition = s"PARTITION BY ${spec.partitionFields.map(quote(_, dialect)).mkString(", ")}"
     if (partitionOnly) return s"OVER ($partition)"
     val order =
       if (spec.order.isEmpty) ""
@@ -130,7 +123,7 @@ object SqlEmitter {
           case (SortDirection.Ascending, _)               => "ASC"
           case (SortDirection.Descending, _)              => "DESC"
         }
-        s"${o.field} $dir"
+        s"${quote(o.field, dialect)} $dir"
       }.mkString(", ")
     val frame = spec.frame.frameType match {
       case FrameType.NoFrame => ""
@@ -153,7 +146,7 @@ object SqlEmitter {
 
   private def aggregateSql(agg: AggregateSpec, dialect: Dialect): String = {
     import Dialect._
-    val col = agg.field
+    val col = quote(agg.field, dialect)
     def arg0 = agg.args.head
     def ignoreNulls: Boolean = WindowEngine.firstLastIgnoreNulls(agg)
     agg.fn match {
@@ -177,9 +170,8 @@ object SqlEmitter {
         // DuckDB's quantile_disc picks the same cume_dist>=p element as the
         // engine's discrete ExactPercentileAgg, including over running frames
         case DuckDb => s"quantile_disc($col, $arg0)"
-        // whole-partition only (see partitionOnly above); the engine's
-        // running-frame form still needs the native ExactPercentileAgg
-        case Spark => s"PERCENTILE_DISC($arg0) WITHIN GROUP (ORDER BY $col)"
+        // the engine's kernel itself, registered by GraftExtensions
+        case Spark => s"graft_percentile_disc($col, $arg0)"
       }
       case WindowFn.Lead => s"LEAD($col, $arg0)"
       case WindowFn.Lag  => s"LAG($col, $arg0)"

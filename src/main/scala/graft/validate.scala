@@ -49,10 +49,31 @@ object Validator {
               s"Field '${agg.field}' has type ${dt.simpleString} which is not supported by " +
                 s"function ${agg.fn.fnName} (alias '${agg.alias}').",
               "Supported types are: int, long, float, double.")
+          // MEDIAN casts its input to DOUBLE the way Spark's `percentile`
+          // does: numeric types and strings analyse, nothing else does.
+          if (agg.fn == WindowFn.Median && !(dt.isInstanceOf[NumericType] || dt.isInstanceOf[StringType]))
+            fs += ValidationFailure(
+              s"Field '${agg.field}' has type ${dt.simpleString} which is not supported by " +
+                s"function MEDIAN (alias '${agg.alias}').",
+              "Supported types are: numeric types and numeric strings.")
       }
       fs ++= validateClauseConstraints(agg, spec)
       fs ++= validateArguments(agg)
     }
+
+    // The engine adds aggregates one withColumn at a time, so an alias that
+    // replaces an input column is what every LATER aggregate reads, as its
+    // field and through the shared partition and order clauses; the emitter
+    // and outputSchema read the original column. Only the last aggregate may
+    // replace a column the spec reads (the reference's e2e fixture does).
+    val clauseFields = spec.partitionFields ++ spec.order.map(_.field)
+    for ((agg, i) <- spec.aggregates.zipWithIndex; later = spec.aggregates.drop(i + 1)
+         if later.nonEmpty && fieldTypes.contains(agg.alias) &&
+           (clauseFields.contains(agg.alias) || later.exists(_.field == agg.alias)))
+      fs += ValidationFailure(
+        s"Alias '${agg.alias}' replaces an input field that a later aggregate or the " +
+          "partition or order clause reads.",
+        "Use a new alias, or make this aggregate the last one.")
 
     fs ++= validateSpecialCase(spec, fieldTypes)
     fs.result()

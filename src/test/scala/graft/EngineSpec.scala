@@ -163,16 +163,27 @@ class EngineSpec extends AnyFunSuite {
 
   test("MEDIAN rejects DATE and ANSI interval inputs at analysis") {
     // the declared output type is DOUBLE; an interval median would return an
-    // interval, so the kernel accepts numeric input only
+    // interval, so the kernel accepts numeric input only, and the validator
+    // rejects such a spec before Spark analyses it
     val odd = spark.sql(
       """SELECT 'a' AS k, 1 AS ord, DATE'2024-01-01' AS d,
         |       make_dt_interval(0, 0, 0, 1.5) AS dt, make_ym_interval(1, 2) AS ym""".stripMargin)
+    val running = org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("ord")
     for (field <- Seq("d", "dt", "ym")) {
-      val e = intercept[org.apache.spark.sql.AnalysisException] {
+      val e = intercept[GraftValidationException] {
         WindowEngine.run(odd, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
           aggregates = Seq(AggregateSpec("med", WindowFn.Median, field))))
       }
-      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+      assert(e.failures.map(_.message) == Seq(s"Field '$field' has type ${odd.schema(field).dataType.simpleString} " +
+        "which is not supported by function MEDIAN (alias 'med')."))
+      // the kernel itself still refuses them at analysis
+      val kernel = GraftColumnBridge.column(ExactPercentileAgg(
+        GraftColumnBridge.expression(org.apache.spark.sql.functions.col(field)), 0.5, discrete = false)
+        .toAggregateExpression())
+      val ae = intercept[org.apache.spark.sql.AnalysisException] {
+        odd.select(kernel.over(running)).queryExecution.assertAnalyzed()
+      }
+      assert(ae.getMessage.contains("DATATYPE_MISMATCH"), ae.getMessage)
     }
   }
 

@@ -3,14 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The emitted SQL must be a drop-in for the engine: running the Spark
-  * dialect through spark.sql yields the exact rows (values AND schema) of
-  * WindowEngine.run for the same spec — except DISCRETE_PERCENTILE, where
-  * Spark shares BigQuery's navigation-function OVER restriction and both
-  * pushdown dialects document whole-partition semantics instead (pinned by
-  * its own test below). BigQuery dialect is pinned against the reference's
-  * pushdown templates (WindowAggregation.java:75-93). */
+  * dialect through spark.sql (with [[GraftExtensions]] registered, for
+  * `graft_percentile_disc`) yields the exact rows (values AND schema) of
+  * WindowEngine.run for the same spec. BigQuery dialect is pinned against
+  * the reference's pushdown templates (WindowAggregation.java:75-93). */
 class SqlEmitterSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = { GraftExtensions.register(TestSpark.spark); TestSpark.spark }
   import spark.implicits._
 
   private lazy val df = Seq(
@@ -124,35 +122,46 @@ class SqlEmitterSpec extends AnyFunSuite {
       AggregateSpec("f", WindowFn.First, "v"),
       AggregateSpec("l", WindowFn.Last, "v", ignoreNulls = false),
       AggregateSpec("m", WindowFn.Median, "ord"),
+      AggregateSpec("dp", WindowFn.DiscretePercentile, "v", Seq("0.5")),
       AggregateSpec("acc", WindowFn.Accumulate, "ord"))
     val framed: Seq[AggregateSpec] = Seq(
       AggregateSpec("f2", WindowFn.First, "v"),
       AggregateSpec("l2", WindowFn.Last, "v"),
       AggregateSpec("acc2", WindowFn.Accumulate, "ord"))
+    val unordered: Seq[AggregateSpec] = Seq(
+      AggregateSpec("cp", WindowFn.ContinuousPercentile, "v", Seq("0.25")),
+      AggregateSpec("tot", WindowFn.Accumulate, "ord"))
     val specGen: Gen[WindowQuerySpec] = for {
-      useFrame <- Gen.oneOf(false, false, true) // frame-less twice as often
+      shape <- Gen.oneOf("frameless", "frameless", "framed", "unordered") // frame-less twice as often
       dir <- Gen.oneOf(SortDirection.Ascending, SortDirection.Descending)
-      spec <-
-        if (!useFrame)
+      spec <- shape match {
+        case "frameless" =>
           Gen.someOf(frameless).suchThat(_.nonEmpty).map(aggs =>
             WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord", dir)), aggregates = aggs.toSeq))
-        else for {
+        case "unordered" =>
+          Gen.someOf(unordered).suchThat(_.nonEmpty).map(aggs =>
+            WindowQuerySpec(Seq("k"), aggregates = aggs.toSeq))
+        case _ => for {
           aggs <- Gen.someOf(framed).suchThat(_.nonEmpty)
           ft <- Gen.oneOf(FrameType.Row, FrameType.Range)
           lo <- Gen.oneOf(Some(-3L), Some(-1L), None)
           hi <- Gen.oneOf(Some(0L), Some(2L), None)
         } yield WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord", dir)),
           FrameSpec(ft, lo, hi), aggs.toSeq)
+      }
     } yield spec
     val params = Gen.Parameters.default
-    var checked = 0
-    for (i <- 0 until 15) specGen.apply(params, org.scalacheck.rng.Seed(i.toLong)).foreach { spec =>
+    var checked = Seq.empty[WindowQuerySpec]
+    for (i <- 0 until 20) specGen.apply(params, org.scalacheck.rng.Seed(i.toLong)).foreach { spec =>
       if (Validator.validate(spec, df.schema).isEmpty) { // skip reference-invalid combos
         assertParity(spec)
-        checked += 1
+        checked :+= spec
       }
     }
-    assert(checked >= 8, s"only $checked random specs survived validation — generator too narrow")
+    assert(checked.size >= 12, s"only ${checked.size} random specs survived validation — generator too narrow")
+    val drawn = checked.flatMap(_.aggregates.map(_.fn)).toSet
+    assert(Set[WindowFn](WindowFn.DiscretePercentile, WindowFn.ContinuousPercentile).subsetOf(drawn),
+      s"the percentile family was not drawn: $drawn")
   }
 
   test("DuckDb dialect pins declared-type casts, null ordering, and quantile names") {
@@ -179,21 +188,151 @@ class SqlEmitterSpec extends AnyFunSuite {
     assert(sql.contains("FIRST_VALUE(v IGNORE NULLS)"))
   }
 
-  test("Spark dialect emits DISCRETE_PERCENTILE with the BigQuery navigation semantics") {
-    // Spark's percentile_disc carries the same navigation-function OVER
-    // restriction as BigQuery's (ORDER BY/frame in the window spec is
-    // INVALID_WINDOW_SPEC_FOR_AGGREGATION_FUNC), so BOTH pushdown dialects
-    // drop the spec's order from the OVER and evaluate whole-partition —
-    // the documented divergence from the engine's running-frame
-    // ExactPercentileAgg (which remains the execution path).
+  test("Spark dialect emits ordered DISCRETE_PERCENTILE as the engine's kernel") {
+    // the engine's running-frame ExactPercentileAgg, under its SQL name and
+    // the spec's full OVER clause — no whole-partition divergence
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("v")),
       aggregates = Seq(AggregateSpec("dp", WindowFn.DiscretePercentile, "v", Seq("0.5"))))
-    df.createOrReplaceTempView("t")
     val sql = SqlEmitter.emit(spec, "t", df.schema)
-    assert(sql.contains("PERCENTILE_DISC(0.5) WITHIN GROUP (ORDER BY v) OVER (PARTITION BY k)"))
-    // whole-partition disc percentile, nulls skipped: a → [10,20,30] → 20; b → [5,7] → 5
-    val rows = spark.sql(sql).collect().map(r => (r.getString(0), r.getAs[Double]("dp"))).toSet
-    assert(rows == Set(("a", 20.0), ("b", 5.0)))
+    assert(sql == "SELECT k, ord, v, graft_percentile_disc(v, 0.5) " +
+      "OVER (PARTITION BY k ORDER BY v ASC) AS dp FROM t")
+    assertParity(spec)
+    // running, nulls skipped: a → [null]=null, [10]=10, [10,20]=10, [10,20,30]=20; b → 5, 5
+    df.createOrReplaceTempView("t")
+    val rows = spark.sql(sql).collect().map(r => (r.getString(0), r.getInt(1)) -> r.getAs[Any]("dp")).toMap
+    assert(rows == Map(("a", 2) -> null, ("a", 1) -> 10.0, ("a", 4) -> 10.0, ("a", 3) -> 20.0,
+      ("b", 1) -> 5.0, ("b", 2) -> 5.0))
+  }
+
+  test("names that are not plain identifiers are quoted per dialect; plain names are not") {
+    val odd = df.withColumnRenamed("v", "a.b").withColumnRenamed("ord", "o`rd")
+    val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("o`rd")), aggregates = Seq(
+      AggregateSpec("my sum", WindowFn.Accumulate, "a.b"),
+      AggregateSpec("a.b", WindowFn.Lag, "a.b", Seq("1"))))
+    def emit(d: SqlEmitter.Dialect) = SqlEmitter.emit(spec, "t", odd.schema, d)
+    assert(emit(SqlEmitter.Dialect.Spark) == "SELECT k, `o``rd`, " +
+      "LAG(`a.b`, 1) OVER (PARTITION BY k ORDER BY `o``rd` ASC) AS `a.b`, " +
+      "CAST(SUM(`a.b`) OVER (PARTITION BY k ORDER BY `o``rd` ASC) AS DOUBLE) AS `my sum` FROM t")
+    assert(emit(SqlEmitter.Dialect.DuckDb) == "SELECT k, \"o`rd\", " +
+      "LAG(\"a.b\", 1) OVER (PARTITION BY k ORDER BY \"o`rd\" ASC NULLS FIRST) AS \"a.b\", " +
+      "CAST(SUM(\"a.b\") OVER (PARTITION BY k ORDER BY \"o`rd\" ASC NULLS FIRST) AS DOUBLE) AS \"my sum\" FROM t")
+    assert(emit(SqlEmitter.Dialect.BigQuery).startsWith("SELECT k, `o\\`rd`, LAG(`a.b`, 1)"))
+    // the engine resolves the same names, and spark.sql agrees with it
+    odd.createOrReplaceTempView("t")
+    val viaEngine = WindowEngine.run(odd, spec)
+    val viaSql = spark.sql(emit(SqlEmitter.Dialect.Spark))
+    assert(viaSql.schema == viaEngine.schema)
+    assert(viaSql.collect().toSet == viaEngine.collect().toSet)
+    assert(viaEngine.columns.toSeq == Seq("k", "o`rd", "a.b", "my sum"))
+  }
+
+  test("validator => analysis: every accepted spec runs on both backends with one schema and one result") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    val schema = StructType(Seq(
+      StructField("k", StringType), StructField("g", IntegerType), StructField("i", IntegerType),
+      StructField("l", LongType), StructField("f", FloatType), StructField("d", DoubleType),
+      StructField("dec", DecimalType(10, 2)), StructField("s", StringType),
+      StructField("b", BooleanType), StructField("dt", DateType), StructField("ts", TimestampType),
+      StructField("a.b", IntegerType)))
+    val rnd = new scala.util.Random(11)
+    def orNull(v: Any): Any = if (rnd.nextInt(7) == 0) null else v
+    val rows = (0 until 24).map { n =>
+      Row(Seq("a", "b", "c")(n % 3), n % 2, orNull(rnd.nextInt(6)), orNull(rnd.nextInt(5) * 1000L),
+        orNull(rnd.nextInt(8) * 0.5f), orNull(rnd.nextInt(9) * 1.25),
+        orNull(java.math.BigDecimal.valueOf(rnd.nextInt(500).toLong, 2)),
+        orNull((rnd.nextInt(7) * 0.5).toString), orNull(rnd.nextBoolean()),
+        orNull(java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1 + rnd.nextInt(5)))),
+        orNull(java.sql.Timestamp.valueOf(java.time.LocalDateTime.of(2024, 1, 1, rnd.nextInt(4), 0))), n)
+    }
+    // one input partition, so ties in an order key meet the window in the
+    // same order on both backends
+    val in = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    in.createOrReplaceTempView("prop_t")
+
+    val cols = schema.fieldNames.toSeq
+    val numeric = Seq("g", "i", "l", "f", "d", "a.b")
+    def args(fn: WindowFn): Gen[Seq[String]] = fn match {
+      case WindowFn.NTile => Gen.frequency(
+        4 -> Gen.oneOf("1", "3", "5").map(Seq(_)), 1 -> Gen.oneOf(Seq("0"), Seq("-2"), Seq("x"), Nil))
+      case WindowFn.ContinuousPercentile | WindowFn.DiscretePercentile => Gen.frequency(
+        4 -> Gen.oneOf("0", "0.25", "0.5", "1").map(Seq(_)),
+        1 -> Gen.oneOf(Seq("1.5"), Seq("-0.1"), Seq("p"), Nil, Seq("0.5", "0.5")))
+      case WindowFn.Lead | WindowFn.Lag => Gen.frequency(
+        4 -> Gen.oneOf("0", "1", "2").map(Seq(_)), 1 -> Gen.oneOf(Seq("-1"), Seq("x"), Nil))
+      case WindowFn.First | WindowFn.Last => Gen.oneOf(Nil, Seq("true"), Seq("false"), Seq("1"))
+      case _ => Gen.const(Nil)
+    }
+    def aggGen(fns: Seq[WindowFn]): Gen[AggregateSpec] = for {
+      fn <- Gen.oneOf(fns)
+      field <- Gen.frequency(5 -> Gen.oneOf(numeric), 5 -> Gen.oneOf(cols), 1 -> Gen.const("nope"))
+      a <- args(fn)
+      ignoreNulls <- Gen.oneOf(true, false)
+      alias <- Gen.frequency(3 -> Gen.oneOf("x", "y", "z", "w", "my col"), 2 -> Gen.oneOf(cols))
+    } yield AggregateSpec(alias, fn, field, a, ignoreNulls)
+    val bound = Gen.oneOf(None, Some(-3L), Some(-1L), Some(0L), Some(2L), Some(4L))
+    val frameGen: Gen[FrameSpec] = Gen.frequency(
+      4 -> Gen.const(FrameSpec()),
+      2 -> (for {
+        ft <- Gen.oneOf(FrameType.Row, FrameType.Range)
+        lo <- bound
+        hi <- bound
+        up <- Gen.frequency(3 -> false, 1 -> true)
+        uf <- Gen.frequency(3 -> false, 1 -> true)
+      } yield FrameSpec(ft, lo, hi, up, uf)))
+    // one spec in six draws only the two functions an unordered spec takes
+    val unordered = Seq(WindowFn.ContinuousPercentile, WindowFn.Accumulate)
+    val specGen: Gen[WindowQuerySpec] = for {
+      fns <- Gen.frequency(5 -> WindowFn.all, 1 -> unordered)
+      parts <- Gen.frequency(8 -> Gen.oneOf(Seq("k"), Seq("g"), Seq("k", "g"), Seq("a.b"), Seq("b")),
+        1 -> Gen.oneOf(Seq("nope"), Nil))
+      nOrder <- if (fns == unordered) Gen.frequency(3 -> 0, 1 -> 1) else Gen.frequency(1 -> 0, 5 -> 1, 2 -> 2)
+      order <- Gen.listOfN(nOrder, for {
+        f <- Gen.frequency(3 -> Gen.oneOf(numeric), 2 -> Gen.oneOf(cols))
+        dir <- Gen.oneOf(SortDirection.Ascending, SortDirection.Descending)
+      } yield OrderSpec(f, dir))
+      frame <- frameGen
+      n <- Gen.frequency(3 -> 1, 2 -> 2, 1 -> 3)
+      aggs <- Gen.listOfN(n, aggGen(fns))
+    } yield WindowQuerySpec(parts, order, frame, aggs)
+
+    def types(st: StructType) = st.fields.map(f => f.name -> f.dataType).toSeq
+    // the rows, or the error a run raises: MEDIAN over a STRING analyses,
+    // and a non-numeric value then fails the cast at run time (ANSI mode),
+    // which both backends must do alike
+    def outcome(df: org.apache.spark.sql.DataFrame): Either[String, Seq[String]] =
+      try Right(df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
+      catch { case e: org.apache.spark.SparkThrowable => Left(e.getCondition) }
+    val problems = Seq.newBuilder[String]
+    var accepted, rejected = 0
+    var drawn = Set.empty[WindowFn]
+    for (seed <- 0L until 500L; spec <- specGen.apply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))) {
+      if (Validator.validate(spec, schema).nonEmpty) rejected += 1
+      else {
+        accepted += 1
+        drawn ++= spec.aggregates.map(_.fn)
+        try {
+          val engine = WindowEngine.run(in, spec)
+          val declared = WindowEngine.outputSchema(schema, spec)
+          val viaSql = spark.sql(SqlEmitter.emit(spec, "prop_t", schema))
+          if (types(engine.schema) != types(declared))
+            problems += s"outputSchema ${types(declared)} != engine ${types(engine.schema)}: $spec"
+          else if (viaSql.schema != engine.schema)
+            problems += s"emitted schema ${viaSql.schema} != engine ${engine.schema}: $spec"
+          else if (outcome(viaSql) != outcome(engine))
+            problems += s"emitted rows != engine rows: $spec"
+        } catch {
+          case e: Exception => problems += s"${e.getClass.getSimpleName} ${e.getMessage.linesIterator.next()}: $spec"
+        }
+      }
+    }
+    val found = problems.result()
+    info(s"$accepted accepted, $rejected rejected")
+    assert(found.isEmpty, s"${found.size} of $accepted accepted specs broke the property:\n" +
+      found.take(10).mkString("\n"))
+    assert(accepted >= 100 && rejected >= 100, s"generator too narrow: $accepted accepted, $rejected rejected")
+    assert(drawn == WindowFn.all.toSet, s"accepted specs never drew ${WindowFn.all.toSet -- drawn}")
   }
 
   test("static liSchema matches li()'s live projection (oracle-cast drift guard)") {

@@ -138,6 +138,41 @@ class ValidatorSpec extends AnyFunSuite {
     }
   }
 
+  test("MEDIAN takes numeric and string input only, like Spark's percentile") {
+    val wide = StructType(schema.fields ++ Seq(
+      StructField("b", BooleanType), StructField("d", DateType),
+      StructField("dec", DecimalType(10, 2)), StructField("l", LongType)))
+    def median(f: String) = Validator.validate(
+      spec(aggs = Seq(AggregateSpec("m", WindowFn.Median, f))), wide).map(_.message)
+    for (f <- Seq("v", "i", "s", "dec", "l")) assert(median(f).isEmpty, f)
+    for (f <- Seq("b", "d", "ts"))
+      assert(median(f) == Seq(s"Field '$f' has type ${wide(f).dataType.simpleString} " +
+        "which is not supported by function MEDIAN (alias 'm')."))
+  }
+
+  test("an alias replacing a column that a later aggregate or the clauses read is rejected") {
+    def check(order: Seq[OrderSpec], aggs: AggregateSpec*) =
+      Validator.validate(spec(order = order, aggs = aggs), schema).map(_.message)
+    val failure = "Alias 'v' replaces an input field that a later aggregate or the partition or order clause reads."
+    // read by a later aggregate as its field
+    assert(check(Seq(OrderSpec("i")), AggregateSpec("v", WindowFn.Rank, "i"),
+      AggregateSpec("x", WindowFn.First, "v")) == Seq(failure))
+    // named by the order or the partition clause, with an aggregate after it
+    assert(check(Seq(OrderSpec("v")), AggregateSpec("v", WindowFn.Rank, "i"),
+      AggregateSpec("x", WindowFn.Rank, "i")) == Seq(failure))
+    assert(Validator.validate(spec(parts = Seq("k"), order = Seq(OrderSpec("i")), aggs = Seq(
+      AggregateSpec("k", WindowFn.Rank, "i"), AggregateSpec("x", WindowFn.Rank, "i"))), schema)
+      .exists(_.message.startsWith("Alias 'k' replaces an input field")))
+    // the last aggregate may replace what it reads (the reference's e2e fixture)
+    assert(check(Seq(OrderSpec("v")), AggregateSpec("x", WindowFn.Rank, "i"),
+      AggregateSpec("v", WindowFn.First, "v")).isEmpty)
+    // a replaced column nothing later reads is fine, as is an earlier reader
+    assert(check(Seq(OrderSpec("i")), AggregateSpec("v", WindowFn.Rank, "i"),
+      AggregateSpec("x", WindowFn.First, "s")).isEmpty)
+    assert(check(Seq(OrderSpec("i")), AggregateSpec("x", WindowFn.First, "v"),
+      AggregateSpec("v", WindowFn.Rank, "i")).isEmpty)
+  }
+
   test("duplicate aliases on hand-built specs rejected") {
     val fs = Validator.validate(spec(aggs = Seq(
       AggregateSpec("x", WindowFn.Rank, "v"), AggregateSpec("x", WindowFn.DenseRank, "v"))), schema)
