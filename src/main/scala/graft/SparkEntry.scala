@@ -4847,11 +4847,11 @@ object SparkEntry {
     } ++ Map[String, (SparkSession, String) => DataFrame](
     // ---- §2.3 the aggregate-spec DSL end to end ---------------------------
     "q17_dsl" -> ((s, dir) => {
-      val out = WindowEngine.runDsl(li(s, dir),
+      val spec = DslParser.parseSpec(
         partitionFields = "l_returnflag",
         partitionOrder = q17PartitionOrder,
-        aggregates = q17Aggregates)
-      out.select(winDefs("q17_dsl").outCols.map(org.apache.spark.sql.functions.col): _*)
+        aggregates = q17Aggregates).fold(fs => throw new GraftValidationException(fs), identity)
+      WindowEngine.run(li(s, dir), spec).select(winDefs("q17_dsl").outCols.map(org.apache.spark.sql.functions.col): _*)
     }),
 
     // ---- §2.5 relational plumbing (scan→filter→agg, broadcast join + top-N)

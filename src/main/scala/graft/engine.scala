@@ -11,10 +11,11 @@ import graft.functions.ExactPercentileAgg
   *
   * Spark-first re-expression of the reference's execution path
   * (WindowsAggregationUtil.java:49-91): one WindowSpec shared by every
-  * aggregate, one `withColumn(alias, fn.over(spec))` per aggregate — Catalyst
-  * collapses the chain into a single physical Window node (one
-  * `Exchange hashpartitioning(partitionFields)` + one intra-partition sort),
-  * so N aggregates over the same clause cost one shuffle, not N.
+  * aggregate, and one `select` laid out like [[SqlEmitter]]'s (`layout`)
+  * instead of one `withColumn` per aggregate: both backends share one layout
+  * rule, Spark analyses the plan once, and the aggregates share one Window
+  * node (one `Exchange hashpartitioning(partitionFields)` + one sort), so N
+  * aggregates over the same clause cost one shuffle, not N.
   *
   * Scale notes (100 TB design):
   *  - The only shuffle is the hash partition on `partitionFields`; AQE
@@ -50,25 +51,6 @@ object WindowEngine {
     applyUnchecked(df, spec)
   }
 
-  /** Parse config-style strings, validate, and run — the full reference
-    * lifecycle (configure → validate → transform) in one call. */
-  def runDsl(
-      df: DataFrame,
-      partitionFields: String,
-      partitionOrder: String = "",
-      aggregates: String = "",
-      windowFrameType: String = "NONE",
-      preceding: Option[Long] = None,
-      following: Option[Long] = None,
-      unboundedPreceding: Boolean = false,
-      unboundedFollowing: Boolean = false,
-      numberOfPartitions: Option[Int] = None): DataFrame =
-    DslParser.parseSpec(partitionFields, partitionOrder, aggregates, windowFrameType,
-        preceding, following, unboundedPreceding, unboundedFollowing, numberOfPartitions) match {
-      case Left(failures) => throw new GraftValidationException(failures)
-      case Right(spec)    => run(df, spec)
-    }
-
   /** Field-level lineage for a spec: one record per aggregate describing the
     * generated output field, its source field, and the operation — the
     * engine-side equivalent of the reference's prepareRun lineage recording
@@ -92,18 +74,18 @@ object WindowEngine {
     * (reference: WindowAggregation.java:361-371); an alias matching an input
     * field replaces it in place (the e2e pipeline relies on this,
     * WindowAggregation.feature:32-36). */
-  def outputSchema(input: StructType, spec: WindowQuerySpec): StructType = {
-    val inputNames = input.fieldNames.toSet
-    val appended = spec.aggregates.filterNot(a => inputNames.contains(a.alias)).map { agg =>
-      StructField(agg.alias, aggregateOutputType(agg, input), nullable = true)
+  def outputSchema(input: StructType, spec: WindowQuerySpec): StructType =
+    StructType(layout(input, spec).map(_._1))
+
+  /** The output fields, each with the aggregate that fills it (None: an input
+    * column kept as it is) — the one walk both backends select from. */
+  private[graft] def layout(input: StructType, spec: WindowQuerySpec): Seq[(StructField, Option[AggregateSpec])] = {
+    def filled(agg: AggregateSpec) =
+      StructField(agg.alias, aggregateOutputType(agg, input), nullable = true) -> Some(agg)
+    val replaced = input.fields.toSeq.map { f =>
+      spec.aggregates.find(_.alias == f.name).fold(f -> Option.empty[AggregateSpec])(filled)
     }
-    val replaced = input.fields.map { f =>
-      spec.aggregates.find(_.alias == f.name) match {
-        case Some(agg) => StructField(f.name, aggregateOutputType(agg, input), nullable = true)
-        case None      => f
-      }
-    }
-    StructType(replaced ++ appended)
+    replaced ++ spec.aggregates.filterNot(a => input.fieldNames.contains(a.alias)).map(filled)
   }
 
   /** The reference's declared output type (WindowFn.declaredOutput), else the
@@ -123,15 +105,14 @@ object WindowEngine {
 
   private def applyUnchecked(df: DataFrame, spec: WindowQuerySpec): DataFrame = {
     val shared = buildWindowSpec(spec)
-    var out = df
-    for (agg <- spec.aggregates) {
-      // Cast AFTER .over(): wrapping the aggregate in a Cast before .over()
-      // would hide it from Spark's window-expression extraction.
-      val overCol = column(agg).over(shared)
-      out = out.withColumn(agg.alias,
-        if (castsToDeclared(agg.fn)) overCol.cast(aggregateOutputType(agg, df.schema))
-        else overCol)
-    }
+    val out = df.select(layout(df.schema, spec).map {
+      case (f, None) => field(f.name)
+      case (f, Some(agg)) =>
+        // Cast AFTER .over(): wrapping the aggregate in a Cast before .over()
+        // would hide it from Spark's window-expression extraction.
+        val overCol = column(agg).over(shared)
+        (if (castsToDeclared(agg.fn)) overCol.cast(f.dataType) else overCol).as(agg.alias)
+    }: _*)
     spec.numberOfPartitions match {
       case Some(n) => out.repartition(n) // reference knob: WindowsAggregationUtil.java:84-90
       case None    => out
@@ -167,15 +148,15 @@ object WindowEngine {
     case WindowFn.Rank        => rank()
     case WindowFn.DenseRank   => dense_rank()
     case WindowFn.PercentRank => percent_rank()
-    case WindowFn.NTile       => ntile(agg.args.head.toInt)
+    case WindowFn.NTile       => ntile(count(agg))
     case WindowFn.RowNumber   => row_number()
     // Exact percentile (Hive-style interpolation), NOT approx_percentile —
     // reference uses callUDF("percentile", ...) (WindowsAggregationUtil.java:140-147);
     // the kernel reproduces Spark's `percentile` arithmetic bit for bit.
     case WindowFn.Median                => exactPercentile(agg, 0.5, discrete = false)
-    case WindowFn.ContinuousPercentile  => exactPercentile(agg, agg.args.head.toDouble, discrete = false)
-    case WindowFn.Lead        => lead(field(agg.field), agg.args.head.toInt)
-    case WindowFn.Lag         => lag(field(agg.field), agg.args.head.toInt)
+    case WindowFn.ContinuousPercentile  => exactPercentile(agg, fraction(agg), discrete = false)
+    case WindowFn.Lead        => lead(field(agg.field), count(agg))
+    case WindowFn.Lag         => lag(field(agg.field), count(agg))
     case WindowFn.First       => first(field(agg.field), firstLastIgnoreNulls(agg))
     case WindowFn.Last        => last(field(agg.field), firstLastIgnoreNulls(agg))
     case WindowFn.CumulativeDistribution => cume_dist()
@@ -184,8 +165,12 @@ object WindowEngine {
     // SAME shared spec, so with an order clause it evaluates per row on the
     // default running RANGE frame, exactly like the reference's .over(spec)
     // application (WindowsAggregationUtil.java:119-124).
-    case WindowFn.DiscretePercentile    => exactPercentile(agg, agg.args.head.toDouble, discrete = true)
+    case WindowFn.DiscretePercentile    => exactPercentile(agg, fraction(agg), discrete = true)
   }
+
+  // a validated aggregate's argument, as WindowFn.parseArg read it
+  private def count(agg: AggregateSpec) = (agg.arg: @unchecked) match { case Right(Some(FnArg.Count(n))) => n }
+  private def fraction(agg: AggregateSpec) = (agg.arg: @unchecked) match { case Right(Some(FnArg.Fraction(p))) => p }
 
   private def exactPercentile(agg: AggregateSpec, p: Double, discrete: Boolean): Column =
     GraftColumnBridge.column(

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Try
+
 import org.apache.spark.sql.types._
 
 /** Clause constraint for a window function clause (partition / order / frame).
@@ -75,8 +77,28 @@ sealed abstract class WindowFn(
     val order: Constraint,
     val frame: Constraint,
     val numericOnly: Boolean,
-    val declaredOutput: Option[DataType],
-    val requiredArgs: Int = 0)
+    val declaredOutput: Option[DataType]) {
+
+  /** The one parse of an aggregate's argument, read by the validator, the engine and every SQL
+    * dialect (reference: WindowAggregation.java:295-358): exactly one argument, read by Java's
+    * parseInt or parseDouble as the reference reads it. Right(None): the function takes none. */
+  def parseArg(agg: AggregateSpec): Either[ValidationFailure, Option[FnArg]] = {
+    def one(must: String)(read: String => Option[FnArg]) = agg.args match {
+      case Seq(a) => read(a).map(Some(_)).toRight(
+        ValidationFailure(s"$fnName argument '$a' (alias '${agg.alias}') must be $must."))
+      case _ => Left(ValidationFailure(s"Function $fnName (alias '${agg.alias}') takes exactly 1 argument.",
+        "Make sure there is only one argument specified."))
+    }
+    def count(min: Int)(a: String) = Try(Integer.parseInt(a)).toOption.filter(_ >= min).map(FnArg.Count)
+    this match {
+      case WindowFn.NTile               => one("a positive integer")(count(1))
+      case WindowFn.Lead | WindowFn.Lag => one("a non-negative integer")(count(0))
+      case WindowFn.ContinuousPercentile | WindowFn.DiscretePercentile => one("a double in range 0.0-1.0")(a =>
+        Try(java.lang.Double.parseDouble(a)).toOption.filter(p => p >= 0.0 && p <= 1.0).map(FnArg.Fraction))
+      case _ => Right(None)
+    }
+  }
+}
 
 object WindowFn {
   import Constraint._
@@ -84,15 +106,15 @@ object WindowFn {
   case object Rank          extends WindowFn("RANK", Required, Required, NotSupported, false, Some(IntegerType))
   case object DenseRank     extends WindowFn("DENSE_RANK", Required, Required, NotSupported, false, Some(IntegerType))
   case object PercentRank   extends WindowFn("PERCENT_RANK", Required, Required, NotSupported, false, Some(FloatType))
-  case object NTile         extends WindowFn("N_TILE", Required, Required, NotSupported, true, Some(IntegerType), 1)
+  case object NTile         extends WindowFn("N_TILE", Required, Required, NotSupported, true, Some(IntegerType))
   case object RowNumber     extends WindowFn("ROW_NUMBER", Required, Required, NotSupported, false, Some(IntegerType))
   case object Median        extends WindowFn("MEDIAN", Required, Required, NotSupported, false, Some(DoubleType))
   case object ContinuousPercentile
-      extends WindowFn("CONTINUOUS_PERCENTILE", Required, NotSupported, NotSupported, true, Some(DoubleType), 1)
+      extends WindowFn("CONTINUOUS_PERCENTILE", Required, NotSupported, NotSupported, true, Some(DoubleType))
   case object DiscretePercentile
-      extends WindowFn("DISCRETE_PERCENTILE", Required, Required, NotSupported, true, None, 1)
-  case object Lead          extends WindowFn("LEAD", Required, Required, NotSupported, false, None, 1)
-  case object Lag           extends WindowFn("LAG", Required, Required, NotSupported, false, None, 1)
+      extends WindowFn("DISCRETE_PERCENTILE", Required, Required, NotSupported, true, None)
+  case object Lead          extends WindowFn("LEAD", Required, Required, NotSupported, false, None)
+  case object Lag           extends WindowFn("LAG", Required, Required, NotSupported, false, None)
   case object First         extends WindowFn("FIRST", Required, Required, Optional, false, None)
   case object Last          extends WindowFn("LAST", Required, Required, Optional, false, None)
   case object CumulativeDistribution
@@ -130,7 +152,19 @@ case class AggregateSpec(
     fn: WindowFn,
     field: String,
     args: Seq[String] = Seq.empty,
-    ignoreNulls: Boolean = true)
+    ignoreNulls: Boolean = true) {
+  /** The argument, parsed once by its function ([[WindowFn.parseArg]]). */
+  lazy val arg: Either[ValidationFailure, Option[FnArg]] = fn.parseArg(this)
+}
+
+/** A parsed argument: N_TILE's bucket count or LEAD/LAG's offset, or a percentile. The engine
+  * reads the value and every SQL dialect prints `sql`, never the user's spelling, which only
+  * Java reads alike (`0x1p-1`, `0.5d` and Arabic-Indic digits are not SQL numbers). */
+sealed abstract class FnArg(val sql: String)
+object FnArg {
+  case class Count(n: Int)       extends FnArg(n.toString)
+  case class Fraction(p: Double) extends FnArg(p.toString)
+}
 
 /** One order clause entry. */
 case class OrderSpec(field: String, direction: SortDirection = SortDirection.Ascending)

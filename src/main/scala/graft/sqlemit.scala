@@ -11,9 +11,11 @@ import org.apache.spark.sql.types._
   * specification of the engine's semantics (the parity test runs the emitted
   * Spark dialect through spark.sql and compares against WindowEngine.run).
   *
-  * It prints decisions the engine makes: the select list walks
-  * [[WindowEngine.outputSchema]], and a declared type is CAST where
-  * [[WindowEngine.castsToDeclared]] says Spark's result differs from it.
+  * It prints decisions the engine makes: the select list is the engine's
+  * own walk of [[WindowEngine.outputSchema]] (`WindowEngine.layout`), an
+  * argument is the value [[WindowFn.parseArg]] read, and a declared type is
+  * CAST where [[WindowEngine.castsToDeclared]] says Spark's result differs
+  * from it.
   * Names that are not plain identifiers are quoted. The one divergence left
   * is BigQuery's navigation functions (see `partitionOnly`). The Spark
   * dialect's DISCRETE_PERCENTILE is the engine's kernel,
@@ -51,9 +53,9 @@ object SqlEmitter {
       val base = s"${aggregateSql(agg, dialect)} ${overClause(spec, dialect, partitionOnly(agg, dialect))}"
       outputCast(agg, declared, dialect).fold(base)(t => s"CAST($base AS $t)") + s" AS ${name(agg.alias)}"
     }
-    val byAlias = spec.aggregates.map(a => a.alias -> a).toMap
-    val select = WindowEngine.outputSchema(schema, spec).fields.map { f =>
-      byAlias.get(f.name).fold(name(f.name))(windowed(_, f.dataType))
+    val select = WindowEngine.layout(schema, spec).map {
+      case (f, None)      => name(f.name)
+      case (f, Some(agg)) => windowed(agg, f.dataType)
     }
     s"SELECT ${select.mkString(", ")} FROM $table"
   }
@@ -147,13 +149,14 @@ object SqlEmitter {
   private def aggregateSql(agg: AggregateSpec, dialect: Dialect): String = {
     import Dialect._
     val col = quote(agg.field, dialect)
-    def arg0 = agg.args.head
+    // the parsed value (WindowFn.parseArg), never the user's spelling
+    def arg = (agg.arg: @unchecked) match { case Right(Some(a)) => a.sql }
     def ignoreNulls: Boolean = WindowEngine.firstLastIgnoreNulls(agg)
     agg.fn match {
       case WindowFn.Rank        => "RANK()"
       case WindowFn.DenseRank   => "DENSE_RANK()"
       case WindowFn.PercentRank => "PERCENT_RANK()" // FLOAT cast applied around the OVER
-      case WindowFn.NTile       => s"NTILE($arg0)"
+      case WindowFn.NTile       => s"NTILE($arg)"
       case WindowFn.RowNumber   => "ROW_NUMBER()"
       case WindowFn.Median => dialect match {
         case BigQuery => s"PERCENTILE_CONT($col, 0.5)"
@@ -161,20 +164,20 @@ object SqlEmitter {
         case DuckDb   => s"quantile_cont($col, 0.5)"
       }
       case WindowFn.ContinuousPercentile => dialect match {
-        case BigQuery => s"PERCENTILE_CONT($col, $arg0)"
-        case Spark    => s"percentile($col, $arg0)"
-        case DuckDb   => s"quantile_cont($col, $arg0)"
+        case BigQuery => s"PERCENTILE_CONT($col, $arg)"
+        case Spark    => s"percentile($col, $arg)"
+        case DuckDb   => s"quantile_cont($col, $arg)"
       }
       case WindowFn.DiscretePercentile => dialect match {
-        case BigQuery => s"PERCENTILE_DISC($col, $arg0)"
+        case BigQuery => s"PERCENTILE_DISC($col, $arg)"
         // DuckDB's quantile_disc picks the same cume_dist>=p element as the
         // engine's discrete ExactPercentileAgg, including over running frames
-        case DuckDb => s"quantile_disc($col, $arg0)"
+        case DuckDb => s"quantile_disc($col, $arg)"
         // the engine's kernel itself, registered by GraftExtensions
-        case Spark => s"graft_percentile_disc($col, $arg0)"
+        case Spark => s"graft_percentile_disc($col, $arg)"
       }
-      case WindowFn.Lead => s"LEAD($col, $arg0)"
-      case WindowFn.Lag  => s"LAG($col, $arg0)"
+      case WindowFn.Lead => s"LEAD($col, $arg)"
+      case WindowFn.Lag  => s"LAG($col, $arg)"
       case WindowFn.First => dialect match {
         case BigQuery | DuckDb => s"FIRST_VALUE($col ${if (ignoreNulls) "IGNORE" else "RESPECT"} NULLS)"
         case Spark    => s"FIRST_VALUE($col, $ignoreNulls)"

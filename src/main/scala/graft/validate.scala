@@ -5,8 +5,8 @@ import org.apache.spark.sql.types._
 /** Pre-flight validation rulebook over the input StructType. Reproduces the
   * reference's analyzer (WindowAggregation.java:135-211 `validate`,
   * :213-270 `validateClauseConstraints`, :272-289 `validateSpecialCase`,
-  * :295-358 argument checks) as an accumulate-all pass — every failure is
-  * collected, not fail-fast.
+  * :295-358 argument checks, through [[WindowFn.parseArg]]) as an
+  * accumulate-all pass — every failure is collected, not fail-fast.
   */
 object Validator {
 
@@ -58,14 +58,25 @@ object Validator {
               "Supported types are: numeric types and numeric strings.")
       }
       fs ++= validateClauseConstraints(agg, spec)
-      fs ++= validateArguments(agg)
+      fs ++= agg.arg.left.toSeq
     }
 
-    // The engine adds aggregates one withColumn at a time, so an alias that
-    // replaces an input column is what every LATER aggregate reads, as its
-    // field and through the shared partition and order clauses; the emitter
-    // and outputSchema read the original column. Only the last aggregate may
-    // replace a column the spec reads (the reference's e2e fixture does).
+    // Spark resolves names ignoring case, so an alias beside an input field or
+    // an earlier alias that differs from it only in case leaves a later
+    // reference to either ambiguous (the reference's withColumn replaces it).
+    val inputNames = schema.fieldNames.toSeq.map("input field" -> _)
+    for ((agg, i) <- spec.aggregates.zipWithIndex;
+         (what, other) <- (inputNames ++ spec.aggregates.take(i).map("alias" -> _.alias))
+           .find { case (_, n) => n != agg.alias && n.equalsIgnoreCase(agg.alias) })
+      fs += ValidationFailure(
+        s"Alias '${agg.alias}' differs only in case from $what '$other'.",
+        "Spark resolves names ignoring case; use a name that differs in more than case.")
+
+    // Both backends read fields and clauses from the input, but the
+    // reference's Spark path adds one withColumn per aggregate, so there a
+    // replaced input column is what every LATER aggregate reads, while its
+    // pushdown reads the original: it answers such a spec two ways. Only the
+    // last aggregate may replace a column the spec reads (its e2e fixture does).
     val clauseFields = spec.partitionFields ++ spec.order.map(_.field)
     for ((agg, i) <- spec.aggregates.zipWithIndex; later = spec.aggregates.drop(i + 1)
          if later.nonEmpty && fieldTypes.contains(agg.alias) &&
@@ -94,45 +105,6 @@ object Validator {
     check(agg.fn.partition, spec.partitionFields.nonEmpty, "partition")
     check(agg.fn.order, spec.order.nonEmpty, "order")
     check(agg.fn.frame, spec.frame.frameType != FrameType.NoFrame, "frame")
-    fs.result()
-  }
-
-  /** Argument validation: N_TILE integer > 0 (WindowAggregation.java:295-314);
-    * percentile in [0,1] (:316-336); LEAD/LAG non-negative int (:338-358).
-    * Every argument-taking function requires EXACTLY one argument — the
-    * reference rejects surplus arguments too (`arguments.length != 1`). */
-  private def validateArguments(agg: AggregateSpec): Seq[ValidationFailure] = {
-    val fs = Seq.newBuilder[ValidationFailure]
-    if (agg.fn.requiredArgs == 1 && agg.args.size != 1)
-      fs += ValidationFailure(
-        s"Function ${agg.fn.fnName} (alias '${agg.alias}') takes exactly 1 argument.",
-        "Make sure there is only one argument specified.")
-    else agg.fn match {
-      case WindowFn.NTile =>
-        agg.args.head.toIntOption match {
-          case Some(n) if n > 0 =>
-          case _ =>
-            fs += ValidationFailure(
-              s"N_TILE argument '${agg.args.head}' (alias '${agg.alias}') must be a positive integer.")
-        }
-      case WindowFn.ContinuousPercentile | WindowFn.DiscretePercentile =>
-        agg.args.head.toDoubleOption match {
-          case Some(p) if p >= 0.0 && p <= 1.0 =>
-          case _ =>
-            fs += ValidationFailure(
-              s"${agg.fn.fnName} argument '${agg.args.head}' (alias '${agg.alias}') " +
-                "must be a double in range 0.0-1.0.")
-        }
-      case WindowFn.Lead | WindowFn.Lag =>
-        agg.args.head.toIntOption match {
-          case Some(n) if n >= 0 =>
-          case _ =>
-            fs += ValidationFailure(
-              s"${agg.fn.fnName} argument '${agg.args.head}' (alias '${agg.alias}') " +
-                "must be a non-negative integer.")
-        }
-      case _ =>
-    }
     fs.result()
   }
 

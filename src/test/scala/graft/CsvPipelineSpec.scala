@@ -31,10 +31,11 @@ class CsvPipelineSpec extends AnyFunSuite {
         |""".stripMargin)
 
     val src = Csv.read(spark, in, schema)
-    val out = WindowEngine.runDsl(src,
+    val spec = DslParser.parseSpec(
       partitionFields = "profession",
       partitionOrder = "age:Descending",
-      aggregates = "age:first(age,1,true)")
+      aggregates = "age:first(age,1,true)").fold(fs => fail(fs.mkString("; ")), identity)
+    val out = WindowEngine.run(src, spec)
     Csv.write(out, s"$dir/out")
 
     val back = Csv.read(spark, s"$dir/out", schema).collect()

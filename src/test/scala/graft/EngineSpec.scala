@@ -25,6 +25,14 @@ class EngineSpec extends AnyFunSuite {
     ("b", 1, Option(5.0)), ("b", 2, Option(7.0))
   ).toDF("k", "ord", "v")
 
+  /** A valid argument list for each function. */
+  private def args(fn: WindowFn): Seq[String] = fn match {
+    case WindowFn.NTile => Seq("2")
+    case WindowFn.DiscretePercentile | WindowFn.ContinuousPercentile => Seq("0.5")
+    case WindowFn.Lead | WindowFn.Lag => Seq("1")
+    case _ => Seq.empty
+  }
+
   private def runOne(agg: AggregateSpec,
       frame: FrameSpec = FrameSpec(),
       order: Seq[OrderSpec] = Seq(OrderSpec("ord"))): Map[(String, Int), Any] = {
@@ -198,6 +206,22 @@ class EngineSpec extends AnyFunSuite {
     assert("(?m)^\\s*\\+?-? ?Window ".r.findAllIn(plan).size <= 2) // rank+row_number may fuse
   }
 
+  test("one select: the analyzed plan has one Window node and the same shape for 1 aggregate as for 13") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
+    // every function an ordered spec takes, two of them cast to their declared type
+    val aggs = WindowFn.all.filterNot(_ == WindowFn.ContinuousPercentile)
+      .map(fn => AggregateSpec(fn.fnName.toLowerCase, fn, "ord", args(fn)))
+    def shape(aggs: Seq[AggregateSpec]) = {
+      val plan = WindowEngine.run(df, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = aggs))
+        .queryExecution.analyzed
+      (plan.collect { case w: Window => w }.size, plan.collect { case p: Project => p }.size)
+    }
+    assert(aggs.size == 13)
+    val (windows, projects) = shape(aggs)
+    assert(windows == 1)
+    assert(shape(aggs.take(1)) == ((1, projects)))
+  }
+
   test("alias matching an input column replaces it in place (e2e pipeline behavior)") {
     val out = WindowEngine.run(df, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
       aggregates = Seq(AggregateSpec("v", WindowFn.First, "v"))))
@@ -219,12 +243,6 @@ class EngineSpec extends AnyFunSuite {
     val typed = Seq((1, 1, 1L, 1.5f, 1.5), (1, 2, 2L, 2.5f, 2.5), (2, 1, 3L, 3.5f, 3.5))
       .toDF("k", "ord", "iv", "lv", "fv").withColumn("dv", $"fv".cast(DoubleType))
     val values = Seq("iv", "lv", "fv", "dv")
-    def args(fn: WindowFn): Seq[String] = fn match {
-      case WindowFn.NTile => Seq("2")
-      case WindowFn.DiscretePercentile | WindowFn.ContinuousPercentile => Seq("0.5")
-      case WindowFn.Lead | WindowFn.Lag => Seq("1")
-      case _ => Seq.empty
-    }
     def aggs(fns: Seq[WindowFn]) = for (fn <- fns; v <- values)
       yield AggregateSpec(s"${fn.fnName}_$v", fn, v, args(fn))
     val (unordered, ordered) = WindowFn.all.partition(_ == WindowFn.ContinuousPercentile)

@@ -12,6 +12,9 @@ class GoldenFixturesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def dsl(partitionFields: String, partitionOrder: String, aggregates: String) =
+    DslParser.parseSpec(partitionFields, partitionOrder, aggregates).fold(fs => fail(fs.mkString("; ")), identity)
+
   test("e2e fixture: first(age) over profession desc overwrites age with the max") {
     val in = Seq(
       (1, "Schuster", "Chris", "accountant", 23),
@@ -21,10 +24,10 @@ class GoldenFixturesSpec extends AnyFunSuite {
       (5, "Shelton", "Alex", "professor", 50)
     ).toDF("id", "lastname", "firstname", "profession", "age")
 
-    val out = WindowEngine.runDsl(in,
+    val out = WindowEngine.run(in, dsl(
       partitionFields = "profession",
       partitionOrder = "age:Descending",
-      aggregates = "age:first(age,1,true)")
+      aggregates = "age:first(age,1,true)"))
 
     assert(out.columns.toSeq == Seq("id", "lastname", "firstname", "profession", "age"))
     val ages = out.collect().map(r => r.getInt(0) -> r.getInt(4)).toMap
@@ -40,10 +43,10 @@ class GoldenFixturesSpec extends AnyFunSuite {
 
     // the docs write `my_rank:rank(,,true)` with an empty field; the reference's
     // own validator rejects unknown fields, so we bind rank to the order key.
-    val out = WindowEngine.runDsl(in,
+    val out = WindowEngine.run(in, dsl(
       partitionFields = "location",
       partitionOrder = "age:Ascending",
-      aggregates = "my_rank:rank(age,,true)\nnext_value:lead(age,1,false)")
+      aggregates = "my_rank:rank(age,,true)\nnext_value:lead(age,1,false)"))
 
     val rows = out.collect().map(r =>
       r.getString(0) -> ((r.getInt(3), Option(r.get(4)).map(_.asInstanceOf[Int])))).toMap
@@ -64,10 +67,10 @@ class GoldenFixturesSpec extends AnyFunSuite {
       (2L, "Aj", "Rizi", 3925.2045f), (2L, "Aj", "Rizi", 7116.5088f)
     ).toDF("Identifier", "FirstName", "LastName", "value")
 
-    val out = WindowEngine.runDsl(in,
+    val out = WindowEngine.run(in, dsl(
       partitionFields = "Identifier",
       partitionOrder = "FirstName:Ascending",
-      aggregates = "aliasDiscPercent:discrete_percentile(value,0.1,false)")
+      aggregates = "aliasDiscPercent:discrete_percentile(value,0.1,false)"))
 
     assert(out.schema("aliasDiscPercent").dataType == org.apache.spark.sql.types.FloatType)
     val got = out.collect().map(r => r.getLong(0) -> r.getFloat(4)).toMap

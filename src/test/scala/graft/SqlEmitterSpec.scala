@@ -204,6 +204,28 @@ class SqlEmitterSpec extends AnyFunSuite {
       ("b", 1) -> 5.0, ("b", 2) -> 5.0))
   }
 
+  test("every dialect prints the parsed argument, not its spelling") {
+    // Java reads all of these as numbers; printed as spelled, 0x1p-1 and the
+    // Arabic-Indic digit break Spark's parser, 0.5d and 0x1p-1 DuckDB's
+    val unordered = WindowQuerySpec(Seq("k"), aggregates = Seq(
+      AggregateSpec("cp", WindowFn.ContinuousPercentile, "v", Seq("0.5d"))))
+    val ordered = WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = Seq(
+      AggregateSpec("t", WindowFn.NTile, "ord", Seq("\u0664")),
+      AggregateSpec("nxt", WindowFn.Lead, "v", Seq("+1")),
+      AggregateSpec("dp", WindowFn.DiscretePercentile, "v", Seq("0x1p-1"))))
+    import SqlEmitter.Dialect._
+    for ((dialect, cp, dp) <- Seq(
+        (Spark, "percentile(v, 0.5)", "graft_percentile_disc(v, 0.5)"),
+        (BigQuery, "PERCENTILE_CONT(v, 0.5)", "PERCENTILE_DISC(v, 0.5)"),
+        (DuckDb, "quantile_cont(v, 0.5)", "quantile_disc(v, 0.5)"))) {
+      assert(SqlEmitter.emit(unordered, "t", df.schema, dialect).contains(s"$cp OVER"), dialect)
+      val sql = SqlEmitter.emit(ordered, "t", df.schema, dialect)
+      for (want <- Seq("NTILE(4) OVER", "LEAD(v, 1) OVER", s"$dp OVER")) assert(sql.contains(want), s"$dialect: $sql")
+    }
+    assertParity(unordered)
+    assertParity(ordered)
+  }
+
   test("names that are not plain identifiers are quoted per dialect; plain names are not") {
     val odd = df.withColumnRenamed("v", "a.b").withColumnRenamed("ord", "o`rd")
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("o`rd")), aggregates = Seq(
@@ -253,14 +275,19 @@ class SqlEmitterSpec extends AnyFunSuite {
 
     val cols = schema.fieldNames.toSeq
     val numeric = Seq("g", "i", "l", "f", "d", "a.b")
+    // valid arguments in the canonical spelling, in spellings only Java's
+    // parser reads (a hex float, a type suffix, a sign, a leading zero, an
+    // Arabic-Indic digit), and invalid ones
     def args(fn: WindowFn): Gen[Seq[String]] = fn match {
       case WindowFn.NTile => Gen.frequency(
-        4 -> Gen.oneOf("1", "3", "5").map(Seq(_)), 1 -> Gen.oneOf(Seq("0"), Seq("-2"), Seq("x"), Nil))
+        4 -> Gen.oneOf("1", "3", "5").map(Seq(_)), 1 -> Gen.oneOf("04", "\u0664").map(Seq(_)),
+        1 -> Gen.oneOf(Seq("0"), Seq("-2"), Seq("x"), Nil))
       case WindowFn.ContinuousPercentile | WindowFn.DiscretePercentile => Gen.frequency(
-        4 -> Gen.oneOf("0", "0.25", "0.5", "1").map(Seq(_)),
+        4 -> Gen.oneOf("0", "0.25", "0.5", "1").map(Seq(_)), 1 -> Gen.oneOf("0x1p-1", "0.5d", "+0.25").map(Seq(_)),
         1 -> Gen.oneOf(Seq("1.5"), Seq("-0.1"), Seq("p"), Nil, Seq("0.5", "0.5")))
       case WindowFn.Lead | WindowFn.Lag => Gen.frequency(
-        4 -> Gen.oneOf("0", "1", "2").map(Seq(_)), 1 -> Gen.oneOf(Seq("-1"), Seq("x"), Nil))
+        4 -> Gen.oneOf("0", "1", "2").map(Seq(_)), 1 -> Gen.oneOf("04", "\u0664").map(Seq(_)),
+        1 -> Gen.oneOf(Seq("-1"), Seq("x"), Nil))
       case WindowFn.First | WindowFn.Last => Gen.oneOf(Nil, Seq("true"), Seq("false"), Seq("1"))
       case _ => Gen.const(Nil)
     }
@@ -269,7 +296,9 @@ class SqlEmitterSpec extends AnyFunSuite {
       field <- Gen.frequency(5 -> Gen.oneOf(numeric), 5 -> Gen.oneOf(cols), 1 -> Gen.const("nope"))
       a <- args(fn)
       ignoreNulls <- Gen.oneOf(true, false)
-      alias <- Gen.frequency(3 -> Gen.oneOf("x", "y", "z", "w", "my col"), 2 -> Gen.oneOf(cols))
+      // sometimes an input name or "x" in another case, which Spark reads as the same name
+      alias <- Gen.frequency(3 -> Gen.oneOf("x", "y", "z", "w", "my col"), 2 -> Gen.oneOf(cols),
+        1 -> Gen.oneOf("K", "D", "X"))
     } yield AggregateSpec(alias, fn, field, a, ignoreNulls)
     val bound = Gen.oneOf(None, Some(-3L), Some(-1L), Some(0L), Some(2L), Some(4L))
     val frameGen: Gen[FrameSpec] = Gen.frequency(

@@ -78,6 +78,44 @@ class ValidatorSpec extends AnyFunSuite {
     assert(one(AggregateSpec("p", WindowFn.DiscretePercentile, "i", Seq("0.5"))).isEmpty)
     assert(one(AggregateSpec("l", WindowFn.Lead, "i", Seq("-1"))).nonEmpty)
     assert(one(AggregateSpec("l", WindowFn.Lag, "i", Seq("2"))).isEmpty)
+    // the failure messages, word for word
+    assert(one(AggregateSpec("t", WindowFn.NTile, "i", Seq("0"))).map(_.toString) ==
+      Seq("N_TILE argument '0' (alias 't') must be a positive integer."))
+    assert(one(AggregateSpec("t", WindowFn.NTile, "i")).map(_.toString) ==
+      Seq("Function N_TILE (alias 't') takes exactly 1 argument. Make sure there is only one argument specified."))
+    assert(one(AggregateSpec("p", WindowFn.DiscretePercentile, "i", Seq("NaN"))).map(_.toString) ==
+      Seq("DISCRETE_PERCENTILE argument 'NaN' (alias 'p') must be a double in range 0.0-1.0."))
+    assert(one(AggregateSpec("l", WindowFn.Lag, "i", Seq("1.0"))).map(_.toString) ==
+      Seq("LAG argument '1.0' (alias 'l') must be a non-negative integer."))
+  }
+
+  test("arguments are read by Java's parseInt / parseDouble into the one value every backend reads") {
+    def parsed(fn: WindowFn, a: String) = AggregateSpec("a", fn, "i", Seq(a)).arg
+    assert(parsed(WindowFn.NTile, "04") == Right(Some(FnArg.Count(4))))
+    assert(parsed(WindowFn.NTile, "\u0664") == Right(Some(FnArg.Count(4)))) // Arabic-Indic four
+    assert(parsed(WindowFn.Lead, "+1") == Right(Some(FnArg.Count(1))))
+    for (p <- Seq("0x1p-1", "0.5d", "5e-1", ".5"))
+      assert(parsed(WindowFn.ContinuousPercentile, p) == Right(Some(FnArg.Fraction(0.5))), p)
+    assert(parsed(WindowFn.DiscretePercentile, "+0.25").map(_.map(_.sql)) == Right(Some("0.25")))
+    assert(parsed(WindowFn.Rank, "anything") == Right(None))
+    assert(parsed(WindowFn.NTile, " 4").isLeft) // parseInt does not trim
+  }
+
+  test("an alias that differs only in case from an input field or an earlier alias is rejected") {
+    def check(aggs: AggregateSpec*) = Validator.validate(spec(aggs = aggs), schema).map(_.message)
+    assert(check(AggregateSpec("V", WindowFn.Rank, "i")) ==
+      Seq("Alias 'V' differs only in case from input field 'v'."))
+    assert(check(AggregateSpec("a", WindowFn.Rank, "i"), AggregateSpec("A", WindowFn.DenseRank, "i")) ==
+      Seq("Alias 'A' differs only in case from alias 'a'."))
+    // one failure per alias, naming the first clash
+    assert(check(AggregateSpec("k2", WindowFn.Rank, "i"), AggregateSpec("K", WindowFn.Rank, "i"),
+      AggregateSpec("k", WindowFn.First, "s"), AggregateSpec("S", WindowFn.Rank, "i")) ==
+      Seq("Alias 'K' differs only in case from input field 'k'.",
+        "Alias 'k' differs only in case from alias 'K'.",
+        "Alias 'S' differs only in case from input field 's'.",
+        "Alias 'k' replaces an input field that a later aggregate or the partition or order clause reads."))
+    // an exact name still replaces the column
+    assert(check(AggregateSpec("v", WindowFn.Rank, "i")).isEmpty)
   }
 
   test("bounded RANGE frame needs exactly one numeric order key") {
