@@ -2,13 +2,14 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
+
+import graft.WindowFn
 
 /** Exact percentile as one typed imperative aggregate with two modes — the
   * engine's MEDIAN, CONTINUOUS_PERCENTILE (continuous) and
@@ -18,16 +19,16 @@ import org.apache.spark.sql.types._
   *    bit for bit: `position = (n-1)*p`, the keys at ranks `floor(position)`
   *    and `ceil(position)`, no interpolation when they are equal, else
   *    `(higher-position)*lo + (position-lower)*hi`. Output DOUBLE. Input is
-  *    any NumericType, implicitly cast like `percentile` (a string column
-  *    yields the percentile of its numeric cast); intervals and dates fail
-  *    analysis. Two edges differ: where -0.0 and 0.0 are both present Spark
-  *    orders them by hash, this kernel -0.0 first, so a zero result may
-  *    differ in sign; two DECIMALs that round to one double are one key here,
-  *    so they no longer interpolate to within an ulp of that double;
+  *    what MEDIAN reads, any NumericType, each value read as a double;
+  *    strings, intervals and dates fail analysis. Two edges differ: where
+  *    -0.0 and 0.0 are both present Spark orders them by hash, this kernel
+  *    -0.0 first, so a zero result may differ in sign; two DECIMALs that
+  *    round to one double are one key here, so they no longer interpolate to
+  *    within an ulp of that double;
   *  - discrete is the reference UDAF (DiscretePercentile.java:40-168): the
   *    smallest value whose cumulative distribution `running / total` reaches
-  *    p. Output type = input type, restricted to INT / LONG / FLOAT / DOUBLE
-  *    (DiscretePercentile.convertType:57-78).
+  *    p. Output type = input type, restricted to what DISCRETE_PERCENTILE
+  *    reads, INT / LONG / FLOAT / DOUBLE (DiscretePercentile.convertType:57-78).
   *
   * NULL inputs are skipped in both modes, so they never inflate the
   * denominator; an all-null group yields NULL.
@@ -56,7 +57,6 @@ case class ExactPercentileAgg(
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[ExactPercentileAgg.Counts]
-  with ImplicitCastInputTypes
   with UnaryLike[Expression] {
 
   import ExactPercentileAgg._
@@ -65,19 +65,18 @@ case class ExactPercentileAgg(
 
   override def nullable: Boolean = true
 
-  /** Continuous mode casts like `percentile` (NumericType only); discrete
-    * mode casts nothing — its type check below is the reference's. */
-  override def inputTypes = if (discrete) Nil else GraftColumnBridge.numericInput
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!discrete) {
-      if (percentile >= 0.0 && percentile <= 1.0) super.checkInputDataTypes()
-      else TypeCheckResult.TypeCheckFailure(s"percentile must be in [0, 1], got $percentile")
-    } else child.dataType match {
-      case IntegerType | LongType | FloatType | DoubleType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"discrete_percentile supports int/long/float/double input, got ${other.simpleString}")
-    }
+  /** The input-type rule of the function each mode serves, casting nothing:
+    * DISCRETE_PERCENTILE's, or MEDIAN's, the wider of the two continuous
+    * ones. p must lie in [0, 1] in both modes: SQL reaches the kernel as
+    * `graft_percentile_disc` without the validator. */
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val input = (if (discrete) WindowFn.DiscretePercentile else WindowFn.Median).input
+    if (!(percentile >= 0.0 && percentile <= 1.0))
+      TypeCheckResult.TypeCheckFailure(s"percentile must be in [0, 1], got $percentile")
+    else if (!input.accepts(child.dataType))
+      TypeCheckResult.TypeCheckFailure(s"$prettyName supports ${input.names} input, got ${child.dataType.simpleString}")
+    else TypeCheckResult.TypeCheckSuccess
+  }
 
   /** Floating keys are encoded bit patterns; integral keys are the value. */
   @transient private lazy val floating: Boolean = child.dataType match {

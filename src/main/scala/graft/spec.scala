@@ -67,16 +67,15 @@ case class FrameSpec(
   * clause table docs/WindowAggregation-sparkcompute.md:59-72).
   *
   * `declaredOutput`: Some(t) when the reference declares a fixed output type;
-  * None means "inherits the input field's type".
-  * `numericOnly`: input must be INT/LONG/FLOAT/DOUBLE
-  * (reference: WindowAggregationConfig.java:111-114).
+  * None means "inherits the input field's type". `input`: the types the
+  * function reads, the one rule the validator and the kernel check.
   */
 sealed abstract class WindowFn(
     val fnName: String,
     val partition: Constraint,
     val order: Constraint,
     val frame: Constraint,
-    val numericOnly: Boolean,
+    val input: InputTypes,
     val declaredOutput: Option[DataType]) {
 
   /** The one parse of an aggregate's argument, read by the validator, the engine and every SQL
@@ -102,24 +101,25 @@ sealed abstract class WindowFn(
 
 object WindowFn {
   import Constraint._
+  import InputTypes._
 
-  case object Rank          extends WindowFn("RANK", Required, Required, NotSupported, false, Some(IntegerType))
-  case object DenseRank     extends WindowFn("DENSE_RANK", Required, Required, NotSupported, false, Some(IntegerType))
-  case object PercentRank   extends WindowFn("PERCENT_RANK", Required, Required, NotSupported, false, Some(FloatType))
-  case object NTile         extends WindowFn("N_TILE", Required, Required, NotSupported, true, Some(IntegerType))
-  case object RowNumber     extends WindowFn("ROW_NUMBER", Required, Required, NotSupported, false, Some(IntegerType))
-  case object Median        extends WindowFn("MEDIAN", Required, Required, NotSupported, false, Some(DoubleType))
+  case object Rank          extends WindowFn("RANK", Required, Required, NotSupported, AnyType, Some(IntegerType))
+  case object DenseRank     extends WindowFn("DENSE_RANK", Required, Required, NotSupported, AnyType, Some(IntegerType))
+  case object PercentRank   extends WindowFn("PERCENT_RANK", Required, Required, NotSupported, AnyType, Some(FloatType))
+  case object NTile         extends WindowFn("N_TILE", Required, Required, NotSupported, Numeric, Some(IntegerType))
+  case object RowNumber     extends WindowFn("ROW_NUMBER", Required, Required, NotSupported, AnyType, Some(IntegerType))
+  case object Median        extends WindowFn("MEDIAN", Required, Required, NotSupported, AnyNumeric, Some(DoubleType))
   case object ContinuousPercentile
-      extends WindowFn("CONTINUOUS_PERCENTILE", Required, NotSupported, NotSupported, true, Some(DoubleType))
+      extends WindowFn("CONTINUOUS_PERCENTILE", Required, NotSupported, NotSupported, Numeric, Some(DoubleType))
   case object DiscretePercentile
-      extends WindowFn("DISCRETE_PERCENTILE", Required, Required, NotSupported, true, None)
-  case object Lead          extends WindowFn("LEAD", Required, Required, NotSupported, false, None)
-  case object Lag           extends WindowFn("LAG", Required, Required, NotSupported, false, None)
-  case object First         extends WindowFn("FIRST", Required, Required, Optional, false, None)
-  case object Last          extends WindowFn("LAST", Required, Required, Optional, false, None)
+      extends WindowFn("DISCRETE_PERCENTILE", Required, Required, NotSupported, Numeric, None)
+  case object Lead          extends WindowFn("LEAD", Required, Required, NotSupported, AnyType, None)
+  case object Lag           extends WindowFn("LAG", Required, Required, NotSupported, AnyType, None)
+  case object First         extends WindowFn("FIRST", Required, Required, Optional, AnyType, None)
+  case object Last          extends WindowFn("LAST", Required, Required, Optional, AnyType, None)
   case object CumulativeDistribution
-      extends WindowFn("CUMULATIVE_DISTRIBUTION", Required, Required, NotSupported, true, Some(DoubleType))
-  case object Accumulate    extends WindowFn("ACCUMULATE", Required, Optional, Optional, true, None)
+      extends WindowFn("CUMULATIVE_DISTRIBUTION", Required, Required, NotSupported, Numeric, Some(DoubleType))
+  case object Accumulate    extends WindowFn("ACCUMULATE", Required, Optional, Optional, Numeric, None)
 
   // lazy: a case object's <clinit> can trigger this companion's init before
   // that object finishes constructing — eager evaluation here would capture
@@ -135,13 +135,26 @@ object WindowFn {
   def parse(s: String): Either[String, WindowFn] =
     byName.get(s.trim.toUpperCase)
       .toRight(s"Invalid function '$s'. Must be one of ${all.map(_.fnName).mkString(",")}.")
+}
 
-  /** The reference's "numeric" union: INT, LONG, FLOAT, DOUBLE
-    * (WindowAggregationConfig.java:111-114). */
-  def isNumeric(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | FloatType | DoubleType => true
-    case _                                               => false
+/** The input types a window function reads, with the corrective text that
+  * names them (reference: the Function enum's per-function flag over the
+  * numeric union, WindowAggregationConfig.java:111-114). */
+sealed abstract class InputTypes(val names: String) {
+  def accepts(dt: DataType): Boolean = this match {
+    case InputTypes.Numeric    => Seq(IntegerType, LongType, FloatType, DoubleType).contains(dt)
+    case InputTypes.AnyNumeric => dt.isInstanceOf[NumericType]
+    case InputTypes.AnyType    => true
   }
+  def correctiveAction: String = s"Supported types are: $names."
+}
+object InputTypes {
+  /** The reference's numeric union: INT, LONG, FLOAT, DOUBLE. */
+  case object Numeric    extends InputTypes("int, long, float, double")
+  /** Any Spark NumericType (DECIMAL, SHORT and BYTE too), each value read as
+    * a DOUBLE: MEDIAN, which the reference hands to Spark's `percentile`. */
+  case object AnyNumeric extends InputTypes("numeric types")
+  case object AnyType    extends InputTypes("any type")
 }
 
 /** One parsed aggregate: `alias:function(field,args,ignoreNulls)`.

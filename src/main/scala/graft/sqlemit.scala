@@ -158,16 +158,15 @@ object SqlEmitter {
       case WindowFn.PercentRank => "PERCENT_RANK()" // FLOAT cast applied around the OVER
       case WindowFn.NTile       => s"NTILE($arg)"
       case WindowFn.RowNumber   => "ROW_NUMBER()"
-      case WindowFn.Median => dialect match {
-        case BigQuery => s"PERCENTILE_CONT($col, 0.5)"
-        case Spark    => s"percentile($col, 0.5)"
-        case DuckDb   => s"quantile_cont($col, 0.5)"
-      }
-      case WindowFn.ContinuousPercentile => dialect match {
-        case BigQuery => s"PERCENTILE_CONT($col, $arg)"
-        case Spark    => s"percentile($col, $arg)"
-        case DuckDb   => s"quantile_cont($col, $arg)"
-      }
+      case WindowFn.Median | WindowFn.ContinuousPercentile =>
+        val p = if (agg.fn == WindowFn.Median) "0.5" else arg
+        dialect match {
+          case BigQuery => s"PERCENTILE_CONT($col, $p)"
+          case Spark    => s"percentile($col, $p)"
+          // the kernel reads every value as a DOUBLE; DuckDB would keep a
+          // FLOAT or DECIMAL input's type
+          case DuckDb   => s"quantile_cont(CAST($col AS DOUBLE), $p)"
+        }
       case WindowFn.DiscretePercentile => dialect match {
         case BigQuery => s"PERCENTILE_DISC($col, $arg)"
         // DuckDB's quantile_disc picks the same cume_dist>=p element as the

@@ -42,20 +42,13 @@ object Validator {
           fs += ValidationFailure(
             s"Aggregate field '${agg.field}' (alias '${agg.alias}') must exist in input schema.",
             "Provide a field that exists in the input schema.")
-        case Some(dt) =>
-          // Input type within the function's allowed union (WindowAggregation.java:173-189).
-          if (agg.fn.numericOnly && !WindowFn.isNumeric(dt))
-            fs += ValidationFailure(
-              s"Field '${agg.field}' has type ${dt.simpleString} which is not supported by " +
-                s"function ${agg.fn.fnName} (alias '${agg.alias}').",
-              "Supported types are: int, long, float, double.")
-          // MEDIAN casts its input to DOUBLE the way Spark's `percentile`
-          // does: numeric types and strings analyse, nothing else does.
-          if (agg.fn == WindowFn.Median && !(dt.isInstanceOf[NumericType] || dt.isInstanceOf[StringType]))
-            fs += ValidationFailure(
-              s"Field '${agg.field}' has type ${dt.simpleString} which is not supported by " +
-                s"function MEDIAN (alias '${agg.alias}').",
-              "Supported types are: numeric types and numeric strings.")
+        // A type the function reads (WindowAggregation.java:173-189).
+        case Some(dt) if !agg.fn.input.accepts(dt) =>
+          fs += ValidationFailure(
+            s"Field '${agg.field}' has type ${dt.simpleString} which is not supported by " +
+              s"function ${agg.fn.fnName} (alias '${agg.alias}').",
+            agg.fn.input.correctiveAction)
+        case _ =>
       }
       fs ++= validateClauseConstraints(agg, spec)
       fs ++= agg.arg.left.toSeq
@@ -146,7 +139,7 @@ object Validator {
         fs += ValidationFailure(
           "A bounded RANGE frame requires exactly one order clause.",
           "Provide a single numeric order field.")
-      else if (!fieldTypes.get(spec.order.head.field).exists(WindowFn.isNumeric))
+      else if (!fieldTypes.get(spec.order.head.field).exists(InputTypes.Numeric.accepts))
         fs += ValidationFailure(
           s"RANGE frame order field '${spec.order.head.field}' must be numeric (int, long, float, double).")
     }

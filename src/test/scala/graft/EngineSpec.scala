@@ -172,12 +172,13 @@ class EngineSpec extends AnyFunSuite {
   test("MEDIAN rejects DATE and ANSI interval inputs at analysis") {
     // the declared output type is DOUBLE; an interval median would return an
     // interval, so the kernel accepts numeric input only, and the validator
-    // rejects such a spec before Spark analyses it
+    // rejects such a spec before Spark analyses it. A string is not cast:
+    // one non-numeric value would fail the whole job at run time
     val odd = spark.sql(
-      """SELECT 'a' AS k, 1 AS ord, DATE'2024-01-01' AS d,
+      """SELECT 'a' AS k, 1 AS ord, DATE'2024-01-01' AS d, '1.5' AS s,
         |       make_dt_interval(0, 0, 0, 1.5) AS dt, make_ym_interval(1, 2) AS ym""".stripMargin)
     val running = org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("ord")
-    for (field <- Seq("d", "dt", "ym")) {
+    for (field <- Seq("d", "s", "dt", "ym")) {
       val e = intercept[GraftValidationException] {
         WindowEngine.run(odd, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
           aggregates = Seq(AggregateSpec("med", WindowFn.Median, field))))

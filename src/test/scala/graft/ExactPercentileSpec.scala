@@ -14,7 +14,9 @@ import graft.functions.ExactPercentileAgg
 class ExactPercentileSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val valueFields = Seq("i", "l", "f", "d", "dec", "s")
+  // every type MEDIAN reads; the kernel reads no strings, and the rows keep
+  // `s` only so that the other columns' random draws stay as they were
+  private val valueFields = Seq("i", "l", "f", "d", "dec")
   private val ps = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
 
   /** Partition r: random values with tied order keys and nulls; z: every
@@ -168,6 +170,27 @@ class ExactPercentileSpec extends AnyFunSuite {
     for ((k, rs) <- byKey) {
       val vs = rs.map(_.getLong(1)).sorted
       assert(got(k) == vs((0 until vs.length).find(i => (i + 1) / vs.length.toDouble >= 0.37).get), k)
+    }
+  }
+
+  test("both kernel modes fail analysis for a percentile outside [0, 1]") {
+    // SQL reaches the discrete kernel as graft_percentile_disc without the
+    // validator; out of range it would answer the partition's last or first key
+    GraftExtensions.register(spark)
+    df.createOrReplaceTempView("pct_range")
+    val running = Window.partitionBy("k").orderBy("ord")
+    for (p <- Seq(1.5, -0.1, Double.NaN); discrete <- Seq(false, true)) {
+      val agg = GraftColumnBridge.column(
+        ExactPercentileAgg(GraftColumnBridge.expression(col("d")), p, discrete).toAggregateExpression())
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(agg.over(running)).queryExecution.assertAnalyzed())
+      assert(e.getMessage.contains(s"percentile must be in [0, 1], got $p"), s"discrete=$discrete: ${e.getMessage}")
+    }
+    for (p <- Seq("1.5", "-0.1")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+        s"SELECT graft_percentile_disc(d, $p) OVER (PARTITION BY k ORDER BY ord) FROM pct_range")
+        .queryExecution.assertAnalyzed())
+      assert(e.getMessage.contains(s"percentile must be in [0, 1], got $p"), e.getMessage)
     }
   }
 }

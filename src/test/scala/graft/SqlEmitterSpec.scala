@@ -1,5 +1,14 @@
 package graft
 
+import java.io.File
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.sys.process.{Process, ProcessLogger}
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The emitted SQL must be a drop-in for the engine: running the Spark
@@ -15,6 +24,96 @@ class SqlEmitterSpec extends AnyFunSuite {
     ("a", 1, Option(10.0)), ("a", 2, Option.empty[Double]), ("a", 3, Option(30.0)),
     ("a", 4, Option(20.0)), ("b", 1, Option(5.0)), ("b", 2, Option(7.0))
   ).toDF("k", "ord", "v")
+
+  /** Runs `sqls` over a parquet copy of `df`, viewed as `table`, in one
+    * `python3` call to duckdb, as winbench's oracle and tools/check.py do:
+    * per query its column names, DuckDB type names and rows, or the error
+    * DuckDB raised. Decimals come back as text, timestamps as epoch
+    * microseconds (Spark writes the instant; DuckDB may read it as UTC).
+    * One thread and one file: rows tied on the order keys meet the window in
+    * the file's order, as they do on Spark over one input partition. */
+  private def viaDuckDb(df: DataFrame, table: String, sqls: Seq[String]): Seq[JsonNode] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-duckdb").toFile
+    try {
+      df.coalesce(1).write.parquet(s"$dir/$table")
+      val mapper = new ObjectMapper()
+      mapper.writeValue(new File(dir, "request.json"),
+        Map[String, AnyRef]("table" -> table, "parquet" -> s"$dir/$table", "queries" -> sqls.asJava).asJava)
+      val err = new StringBuilder
+      val code = Process(Seq("python3", "-c", duckScript, s"$dir/request.json", s"$dir/response.json"))
+        .!(ProcessLogger(_ => (), line => err ++= line + "\n"))
+      assert(code == 0, s"python3 with duckdb failed:\n$err")
+      mapper.readTree(new File(dir, "response.json")).elements().asScala.toSeq
+    } finally new scala.reflect.io.Directory(dir).deleteRecursively()
+  }
+
+  private val duckScript =
+    """import datetime, decimal, json, math, sys
+      |import duckdb
+      |req = json.load(open(sys.argv[1]))
+      |con = duckdb.connect()
+      |con.execute("SET threads = 1")
+      |con.execute(f"CREATE VIEW {req['table']} AS SELECT * FROM read_parquet('{req['parquet']}/*.parquet')")
+      |utc = datetime.timezone.utc
+      |epoch = datetime.datetime(1970, 1, 1, tzinfo=utc)
+      |def cell(v):
+      |    if isinstance(v, float) and not math.isfinite(v):
+      |        return {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}[str(v)]
+      |    if isinstance(v, decimal.Decimal):
+      |        return str(v)
+      |    if isinstance(v, datetime.datetime):
+      |        return ((v if v.tzinfo else v.replace(tzinfo=utc)) - epoch) // datetime.timedelta(microseconds=1)
+      |    if isinstance(v, datetime.date):
+      |        return v.isoformat()
+      |    return v
+      |out = []
+      |for sql in req["queries"]:
+      |    try:
+      |        rel = con.sql(sql)
+      |        out.append({"columns": rel.columns, "types": [str(t) for t in rel.types],
+      |                    "rows": [[cell(v) for v in r] for r in rel.fetchall()]})
+      |    except duckdb.Error as e:
+      |        out.append({"error": str(e).splitlines()[0]})
+      |json.dump(out, open(sys.argv[2], "w"))
+      |""".stripMargin
+
+  /** How DuckDB's answer differs from the engine's `rows` under `schema`:
+    * names, DuckDB type names, then the rows as a multiset, floating values
+    * within winbench's relative tolerance (DuckDB sums frames in another
+    * order). None when it does not. */
+  private def duckMismatch(schema: StructType, rows: Seq[Row], duck: JsonNode): Option[String] = {
+    def duckType(dt: DataType) = dt match {
+      case IntegerType => "INTEGER"
+      case StringType  => "VARCHAR"
+      case other       => other.sql
+    }
+    def same(v: Any, j: JsonNode): Boolean = v match {
+      case null                    => j.isNull
+      case x: Float                => same(x.toDouble, j)
+      case x: Double               =>
+        if (j.isNumber) x == j.asDouble || math.abs(x - j.asDouble) <= 1e-9 * math.abs(x) else j.asText == x.toString
+      case x: java.math.BigDecimal => j.isTextual && new java.math.BigDecimal(j.asText).compareTo(x) == 0
+      case x: java.sql.Timestamp   =>
+        j.isIntegralNumber && j.asLong == x.toInstant.getEpochSecond * 1000000L + x.toInstant.getNano / 1000
+      case x: java.sql.Date        => j.isTextual && j.asText == x.toString
+      case x: Boolean              => j.isBoolean && j.asBoolean == x
+      case x: String               => j.isTextual && j.asText == x
+      case x: Number               => j.isIntegralNumber && j.asLong == x.longValue
+    }
+    def texts(field: String) = duck.get(field).elements().asScala.map(_.asText).toSeq
+    val want = schema.fields.map(f => f.name -> duckType(f.dataType)).toSeq
+    if (duck.has("error")) Some(s"DuckDB raised ${duck.get("error").asText}")
+    else if (texts("columns").zip(texts("types")) != want) Some(s"DuckDB columns ${texts("columns").zip(texts("types"))} != $want")
+    else {
+      val left = ArrayBuffer(duck.get("rows").elements().asScala.toSeq: _*)
+      val unmatched = rows.filterNot { r =>
+        val at = left.indexWhere(j => (0 until r.length).forall(c => same(r.get(c), j.get(c))))
+        at >= 0 && { left.remove(at); true }
+      }
+      if (unmatched.isEmpty && left.isEmpty) None
+      else Some(s"DuckDB rows != engine rows, e.g. engine ${unmatched.headOption.getOrElse("-")} / DuckDB ${left.headOption.getOrElse("-")}")
+    }
+  }
 
   private def assertParity(spec: WindowQuerySpec): Unit = {
     df.createOrReplaceTempView("t")
@@ -165,7 +264,6 @@ class SqlEmitterSpec extends AnyFunSuite {
   }
 
   test("DuckDb dialect pins declared-type casts, null ordering, and quantile names") {
-    import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("k", StringType), StructField("ord", DoubleType),
       StructField("v", IntegerType)))
@@ -217,7 +315,7 @@ class SqlEmitterSpec extends AnyFunSuite {
     for ((dialect, cp, dp) <- Seq(
         (Spark, "percentile(v, 0.5)", "graft_percentile_disc(v, 0.5)"),
         (BigQuery, "PERCENTILE_CONT(v, 0.5)", "PERCENTILE_DISC(v, 0.5)"),
-        (DuckDb, "quantile_cont(v, 0.5)", "quantile_disc(v, 0.5)"))) {
+        (DuckDb, "quantile_cont(CAST(v AS DOUBLE), 0.5)", "quantile_disc(v, 0.5)"))) {
       assert(SqlEmitter.emit(unordered, "t", df.schema, dialect).contains(s"$cp OVER"), dialect)
       val sql = SqlEmitter.emit(ordered, "t", df.schema, dialect)
       for (want <- Seq("NTILE(4) OVER", "LEAD(v, 1) OVER", s"$dp OVER")) assert(sql.contains(want), s"$dialect: $sql")
@@ -249,8 +347,6 @@ class SqlEmitterSpec extends AnyFunSuite {
   }
 
   test("validator => analysis: every accepted spec runs on both backends with one schema and one result") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     import org.scalacheck.Gen
     val schema = StructType(Seq(
       StructField("k", StringType), StructField("g", IntegerType), StructField("i", IntegerType),
@@ -327,13 +423,11 @@ class SqlEmitterSpec extends AnyFunSuite {
     } yield WindowQuerySpec(parts, order, frame, aggs)
 
     def types(st: StructType) = st.fields.map(f => f.name -> f.dataType).toSeq
-    // the rows, or the error a run raises: MEDIAN over a STRING analyses,
-    // and a non-numeric value then fails the cast at run time (ANSI mode),
-    // which both backends must do alike
-    def outcome(df: org.apache.spark.sql.DataFrame): Either[String, Seq[String]] =
-      try Right(df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
-      catch { case e: org.apache.spark.SparkThrowable => Left(e.getCondition) }
+    // an accepted spec runs: an error at run time is a problem, too
+    def text(rows: Seq[Row]) = rows.map(_.toSeq.map(String.valueOf).mkString("|")).sorted
     val problems = Seq.newBuilder[String]
+    // (spec, engine schema, engine rows, DuckDb text) of every spec that passed on Spark
+    val toDuckDb = Seq.newBuilder[(WindowQuerySpec, StructType, Seq[Row], String)]
     var accepted, rejected = 0
     var drawn = Set.empty[WindowFn]
     for (seed <- 0L until 500L; spec <- specGen.apply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))) {
@@ -345,23 +439,48 @@ class SqlEmitterSpec extends AnyFunSuite {
           val engine = WindowEngine.run(in, spec)
           val declared = WindowEngine.outputSchema(schema, spec)
           val viaSql = spark.sql(SqlEmitter.emit(spec, "prop_t", schema))
+          val rows = engine.collect().toSeq
           if (types(engine.schema) != types(declared))
             problems += s"outputSchema ${types(declared)} != engine ${types(engine.schema)}: $spec"
           else if (viaSql.schema != engine.schema)
             problems += s"emitted schema ${viaSql.schema} != engine ${engine.schema}: $spec"
-          else if (outcome(viaSql) != outcome(engine))
+          else if (text(viaSql.collect().toSeq) != text(rows))
             problems += s"emitted rows != engine rows: $spec"
+          else toDuckDb += ((spec, engine.schema, rows, SqlEmitter.emit(spec, "prop_t", schema, SqlEmitter.Dialect.DuckDb)))
         } catch {
           case e: Exception => problems += s"${e.getClass.getSimpleName} ${e.getMessage.linesIterator.next()}: $spec"
         }
       }
     }
+    // the oracle: DuckDB runs the DuckDb text of every spec above
+    val duckStart = System.nanoTime()
+    val onSpark = toDuckDb.result()
+    for (((spec, st, rows, _), duck) <- onSpark.zip(viaDuckDb(in, "prop_t", onSpark.map(_._4)));
+         why <- duckMismatch(st, rows, duck))
+      problems += s"$why: $spec"
+    info(f"DuckDB leg: ${onSpark.size} specs in ${(System.nanoTime() - duckStart) / 1e9}%.1f s")
     val found = problems.result()
     info(s"$accepted accepted, $rejected rejected")
     assert(found.isEmpty, s"${found.size} of $accepted accepted specs broke the property:\n" +
       found.take(10).mkString("\n"))
     assert(accepted >= 100 && rejected >= 100, s"generator too narrow: $accepted accepted, $rejected rejected")
     assert(drawn == WindowFn.all.toSet, s"accepted specs never drew ${WindowFn.all.toSet -- drawn}")
+  }
+
+  test("DuckDb reads a running MEDIAN's FLOAT input as a DOUBLE, as the engine does") {
+    // non-dyadic floats: the mean of two FLOATs read as DOUBLEs is not the
+    // mean DuckDB computes in FLOAT
+    val floats = Seq(("a", 1, 1.1f), ("a", 2, 2.2f), ("a", 3, 4.7f)).toDF("k", "ord", "f")
+    val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
+      aggregates = Seq(AggregateSpec("m", WindowFn.Median, "f")))
+    val engine = WindowEngine.run(floats, spec).orderBy("ord").collect().toSeq
+    val (a, b) = (1.1f.toDouble, 2.2f.toDouble)
+    val medians = Seq(a, (a + b) / 2, b) // (a + b) / 2 = 1.6500000357627869
+    assert(engine.map(_.getDouble(3)) == medians)
+    val Seq(duck) = viaDuckDb(floats, "t", Seq(SqlEmitter.emit(spec, "t", floats.schema, SqlEmitter.Dialect.DuckDb)))
+    assert(duckMismatch(WindowEngine.outputSchema(floats.schema, spec), engine, duck).isEmpty, duck)
+    val duckMedians = duck.get("rows").elements().asScala.toSeq.sortBy(_.get(1).asInt).map(_.get(3).asDouble)
+    assert(duckMedians == medians, "same DOUBLE bits")
   }
 
   test("static liSchema matches li()'s live projection (oracle-cast drift guard)") {
