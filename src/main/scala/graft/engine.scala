@@ -15,19 +15,25 @@ import graft.functions.ExactPercentileAgg
   * instead of one `withColumn` per aggregate: both backends share one layout
   * rule, Spark analyses the plan once, and the aggregates share one Window
   * node (one `Exchange hashpartitioning(partitionFields)` + one sort), so N
-  * aggregates over the same clause cost one shuffle, not N.
+  * aggregates over the same clause cost one shuffle, not N. An input Catalyst
+  * estimates at or below [[OneTaskBytes]] is read as one partition instead,
+  * and then there is no shuffle at all (see there).
   *
   * Scale notes (100 TB design):
-  *  - The only shuffle is the hash partition on `partitionFields`; AQE
-  *    (`spark.sql.adaptive.enabled`, default on in Spark 4) re-splits skewed
-  *    partitions at runtime. For pathologically hot keys: order-free
-  *    whole-partition aggregates → [[graft.operators.SkewSafe.partitionAgg]]
-  *    (groupBy + join-back, no window sort); running ACCUMULATE →
+  *  - One shuffle per window clause: the hash partition on `partitionFields`.
+  *    AQE coalesces small shuffle partitions but does not split a skewed
+  *    window sort (it splits skewed joins only): one key's rows are one task.
+  *    For pathologically hot keys: order-free whole-partition aggregates →
+  *    [[graft.operators.SkewSafe.partitionAgg]] (groupBy + join-back, no
+  *    window sort); running ACCUMULATE →
   *    [[graft.operators.SkewSafe.saltedAccumulate]] (two-phase over
   *    order-aligned chunks). Rank-family functions are salt-incompatible —
   *    they need the whole partition.
   *  - Spark's WindowExec sorts within partitions via UnsafeExternalSorter and
-  *    spills; frames are evaluated incrementally (no per-row re-scan).
+  *    spills. Running and whole-partition frames are evaluated incrementally,
+  *    but a bounded ROW or RANGE frame re-aggregates its buffer every time it
+  *    moves: O(width) per row (ACCUMULATE over 100k rows: 0.53 s at ±3 rows,
+  *    4.1 s at ±1000).
   *  - MEDIAN, CONTINUOUS_PERCENTILE and DISCRETE_PERCENTILE are one
   *    TypedImperativeAggregate over the shared spec
   *    ([[graft.functions.ExactPercentileAgg]]): Spark `percentile`'s exact
@@ -103,9 +109,43 @@ object WindowEngine {
   private[graft] def castsToDeclared(fn: WindowFn): Boolean =
     fn == WindowFn.PercentRank || fn == WindowFn.Accumulate
 
+  /** Catalyst's size estimate of the input (`analyzed.stats.sizeInBytes`) at
+    * or below which the engine applies `coalesce(1)` before its `select`.
+    * `Coalesce 1` reports `SinglePartition`, which satisfies the Window's
+    * clustered distribution, so Spark plans no Exchange: one stage and one
+    * task instead of a map stage, a shuffle write and a shuffle read that AQE
+    * folds back into one task anyway. Results do not change: the Window still
+    * sorts its partition, and every row is in it. An input with no size
+    * estimate (Spark's default is huge) keeps the shuffle. The analyzed
+    * plan's estimate equals the optimized plan's for a scan or a projection
+    * of one, and costs nothing: optimizing a fresh parquet read only to size
+    * it took 2.7 ms, the analyzed estimate 0.3 ms. Like
+    * `autoBroadcastJoinThreshold`, this trusts the estimate: without CBO an
+    * operator that multiplies rows (`explode`) is estimated at its child's
+    * size.
+    *
+    * Measured, not an option: median of 11 interleaved runs of [[run]] plus
+    * `collect`, on winbench's lineitem rows as one parquet file, local[4] on
+    * 4 vCPU with 4 shuffle partitions, shuffled → one task. "3 functions" is
+    * RANK, ACCUMULATE and LAG by supplier (40 keys); "6 holistic" is MEDIAN
+    * and five DISCRETE_PERCENTILEs of a 50-value column by flag (3 keys):
+    * {{{
+    *   rows  estimate  3 functions, 40 keys  6 holistic, 3 keys
+    *   12k   0.16 MB   209 → 159 ms          189 → 156 ms
+    *   25k   0.31 MB   206 → 187 ms          197 → 204 ms
+    *   50k   0.61 MB   250 → 272 ms          252 → 336 ms
+    *   100k  1.20 MB   383 → 483 ms          436 → 614 ms
+    * }}}
+    * One task wins clearly below about 0.3 MB and loses from about 0.6 MB,
+    * where the sort and the holistic kernels want the cores. 256 KiB sits
+    * below the crossover; AQE's 1 MB `coalescePartitions.minPartitionSize`
+    * is past it. */
+  private val OneTaskBytes = BigInt(256 * 1024)
+
   private def applyUnchecked(df: DataFrame, spec: WindowQuerySpec): DataFrame = {
     val shared = buildWindowSpec(spec)
-    val out = df.select(layout(df.schema, spec).map {
+    val input = if (df.queryExecution.analyzed.stats.sizeInBytes <= OneTaskBytes) df.coalesce(1) else df
+    val out = input.select(layout(df.schema, spec).map {
       case (f, None) => field(f.name)
       case (f, Some(agg)) =>
         // Cast AFTER .over(): wrapping the aggregate in a Cast before .over()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -196,15 +196,59 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("multiple aggregates share one window (single shuffle) and append in order") {
+  test("multiple aggregates share one window and append in order; a small input plans no shuffle") {
     val out = WindowEngine.run(df, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
       aggregates = Seq(
         AggregateSpec("r", WindowFn.Rank, "ord"),
         AggregateSpec("rn", WindowFn.RowNumber, "ord"))))
     assert(out.columns.toSeq == Seq("k", "ord", "v", "r", "rn"))
     val plan = out.queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1)
+    assert(!plan.contains("Exchange"), plan)
+    assert("Coalesce 1\\b".r.findAllIn(plan).size == 1, plan)
     assert("(?m)^\\s*\\+?-? ?Window ".r.findAllIn(plan).size <= 2) // rank+row_number may fuse
+  }
+
+  /** Every function once over v: the 13 an ordered spec takes over (k, ord),
+    * and CONTINUOUS_PERCENTILE over k alone. */
+  private def everyFunction: Seq[WindowQuerySpec] = {
+    val (unordered, ordered) = WindowFn.all.map(fn => AggregateSpec(fn.fnName.toLowerCase, fn, "v", args(fn)))
+      .partition(_.fn == WindowFn.ContinuousPercentile)
+    Seq(WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = ordered),
+      WindowQuerySpec(Seq("k"), aggregates = unordered))
+  }
+
+  private def sortedRows(out: DataFrame): Seq[Row] =
+    out.orderBy("k", "ord").collect().toSeq
+
+  test("an input above the one-task size keeps its one shuffle and gives the one-task plan's rows") {
+    // 40k rows over 3 keys, ord unique (tie-free), every 7th v null
+    val big = (0 until 40000).map(i => (s"k${i % 3}", i, if (i % 7 == 0) None else Some((i * 37 % 1009) / 8.0)))
+      .toDF("k", "ord", "v")
+    assert(big.queryExecution.analyzed.stats.sizeInBytes > 256 * 1024)
+    for (spec <- everyFunction) {
+      val shuffled = WindowEngine.run(big, spec)
+      val plan = shuffled.queryExecution.executedPlan.toString
+      assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+      assert(!plan.contains("Coalesce"), plan)
+      val oneTask = WindowEngine.run(big.coalesce(1), spec)
+      assert(!oneTask.queryExecution.executedPlan.toString.contains("Exchange"))
+      assert(sortedRows(shuffled) == sortedRows(oneTask), spec)
+    }
+  }
+
+  test("a small input in 3 partitions runs as one task and gives the emitted Spark SQL's rows") {
+    GraftExtensions.register(spark) // the Spark dialect's DISCRETE_PERCENTILE
+    val split = df.repartition(3)
+    split.createOrReplaceTempView("engine_split")
+    for (spec <- everyFunction) {
+      val out = WindowEngine.run(split, spec)
+      val plan = out.queryExecution.executedPlan.toString
+      // the round-robin exchange is the input's own; the window adds none
+      assert(!plan.contains("Exchange hashpartitioning") && plan.contains("Coalesce 1"), plan)
+      assert(out.rdd.getNumPartitions == 1)
+      val viaSql = spark.sql(SqlEmitter.emit(spec, "engine_split", split.schema))
+      assert(sortedRows(out) == sortedRows(viaSql), spec)
+    }
   }
 
   test("one select: the analyzed plan has one Window node and the same shape for 1 aggregate as for 13") {
