@@ -196,7 +196,7 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("multiple aggregates share one window and append in order; a small input plans no shuffle") {
+  test("multiple aggregates share one window and append in order; small: no shuffle") {
     val out = WindowEngine.run(df, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
       aggregates = Seq(
         AggregateSpec("r", WindowFn.Rank, "ord"),
