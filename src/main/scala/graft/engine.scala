@@ -41,19 +41,19 @@ import graft.functions.ExactPercentileAgg
   *    null inputs skipped. Its buffer is a sorted value → count table held in
   *    memory at O(distinct values) per partition (none of it spills); rows
   *    are appended unsorted and sorted in with one primitive `Arrays.sort`
-  *    plus a linear merge before each eval. Unordered (whole-partition) use
-  *    therefore costs O(n log n) per partition. Under a running frame each
-  *    peer group costs O(distinct) to merge and read, so a high-cardinality
-  *    value column over a huge ordered partition is quadratic in its distinct
-  *    values.
+  *    plus an in-place merge before each eval, which then turns p into ranks
+  *    and reads them in one walk of the counts (discrete mode: O(log n)
+  *    divisions plus the walk). Unordered (whole-partition) use therefore
+  *    costs O(n log n) per partition. Under a running frame each peer group
+  *    costs O(distinct) to merge and read, so a high-cardinality value column
+  *    over a huge ordered partition is quadratic in its distinct values.
   */
 object WindowEngine {
 
   /** Validate then apply `spec` to `df`. Throws GraftValidationException with
-    * ALL accumulated failures (reference: WindowAggregation.java:130-131). */
+    * ALL accumulated failures ([[Validator.requireValid]]). */
   def run(df: DataFrame, spec: WindowQuerySpec): DataFrame = {
-    val failures = Validator.validate(spec, df.schema)
-    if (failures.nonEmpty) throw new GraftValidationException(failures)
+    Validator.requireValid(spec, df.schema)
     applyUnchecked(df, spec)
   }
 

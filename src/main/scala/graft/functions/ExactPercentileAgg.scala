@@ -36,12 +36,14 @@ import graft.WindowFn
   * The buffer is a value → count table held as sorted primitive arrays
   * ([[ExactPercentileAgg.Counts]]). Update appends the key to an unsorted
   * pending array; eval, merge and serialize first settle it (one
-  * `Arrays.sort` on the primitive keys, then one linear merge into the sorted
-  * table), and eval is then one pass over the counts — no boxing, no
-  * comparator sort. Whole-partition (unordered) windows and groupBy settle
-  * once: O(n log n) per partition. Under a running window frame Spark updates
-  * the buffer incrementally and evals once per peer group, so each peer group
-  * costs O(distinct) to settle and read. Memory stays O(distinct values) per
+  * `Arrays.sort` on the primitive keys, then the in-place merge into the
+  * sorted table that `merge` also uses). Eval turns p into 0-based ranks and
+  * reads their keys in one walk of the counts (`indexOfRanks`) — no boxing,
+  * no comparator sort; discrete mode finds its rank with O(log n) divisions.
+  * Whole-partition (unordered) windows and groupBy settle once: O(n log n)
+  * per partition. Under a running window frame Spark updates the buffer
+  * incrementally and evals once per peer group, so each peer group costs
+  * O(distinct) to settle and read. Memory stays O(distinct values) per
   * partition.
   *
   * Keys are primitive longs: integral values as they are, floating values
@@ -111,46 +113,40 @@ case class ExactPercentileAgg(
   override def eval(buffer: Counts): Any = {
     buffer.settle()
     if (buffer.size == 0) null
-    else if (discrete) discreteOutput(buffer.keys(discreteIndex(buffer)))
-    else continuous(buffer)
+    else if (discrete) {
+      val r = discreteRank(buffer.total)
+      discreteOutput(buffer.keys(buffer.indexOfRanks(r, r)._1))
+    } else continuous(buffer)
   }
 
-  /** Spark's `Percentile.getPercentile` arithmetic over one pass of the
-    * counts: the first keys whose cumulative count exceeds the 0-based ranks
-    * `lower` and `higher`. */
+  /** Spark's `Percentile.getPercentile` arithmetic: the keys at the 0-based
+    * ranks `floor` and `ceil` of `(n-1)*p`. */
   private def continuous(b: Counts): Double = {
     val position = (b.total - 1) * percentile
     val lower = position.floor.toLong
     val higher = position.ceil.toLong
-    val keys = b.keys
-    val counts = b.counts
-    var i = 0
-    var running = counts(0)
-    while (running <= lower) { i += 1; running += counts(i) }
-    val loKey = keys(i)
-    val lo = toDouble(loKey)
-    if (higher == lower) return lo
-    while (running <= higher) { i += 1; running += counts(i) }
-    val hi = toDouble(keys(i))
+    val (i, j) = b.indexOfRanks(lower, higher)
+    val lo = toDouble(b.keys(i))
+    val hi = toDouble(b.keys(j))
     // Spark compares the boxed keys: equal integral values (two longs above
     // 2^53 that round to one double still interpolate), or `==` on floating
     // values (so -0.0 equals 0.0)
-    if (keys(i) == loKey || (floating && hi == lo)) lo
+    if (i == j || (floating && hi == lo)) lo
     else (higher - position) * lo + (position - lower) * hi
   }
 
-  /** The reference's predicate `running / total >= p`, first hit wins. */
-  private def discreteIndex(b: Counts): Int = {
-    val total = b.total.toDouble
-    val counts = b.counts
-    var running = 0L
-    var i = 0
-    while (i < b.size) {
-      running += counts(i)
-      if (running / total >= percentile) return i
-      i += 1
+  /** The reference's predicate `running / total >= p`, first hit wins, as a
+    * rank: the smallest count `c` in `[1, n]` with `c / n >= p` (IEEE
+    * division by a positive constant is monotone, so a binary search with
+    * the same arithmetic finds it), minus one. */
+  private def discreteRank(n: Long): Long = {
+    var lo = 1L
+    var hi = n
+    while (lo < hi) {
+      val c = (lo + hi) >>> 1
+      if (c / n.toDouble >= percentile) hi = c else lo = c + 1
     }
-    b.size - 1 // p <= 1.0 always resolves inside the loop; guard anyway
+    lo - 1
   }
 
   private def discreteOutput(key: Long): Any = child.dataType match {
@@ -201,6 +197,7 @@ object ExactPercentileAgg {
 
     private var pending = new Array[Long](16)
     private var pendingSize = 0
+    private[graft] def pendingCapacity: Int = pending.length
 
     /** One occurrence of `key`, appended unsorted. A full pending array is
       * settled, then grown to at least the table's size, so each settle sorts
@@ -216,22 +213,54 @@ object ExactPercentileAgg {
       total += 1
     }
 
-    /** Sort the pending keys into the table: `Arrays.sort` on the primitive
-      * array, count bumps for keys already present, then one merge of the new
-      * keys from the back that stops once the last new key is placed. */
+    /** The indexes of the keys at the 0-based ranks `lo <= hi < total`,
+      * in one walk of the settled counts: the first index whose cumulative
+      * count exceeds each rank. */
+    def indexOfRanks(lo: Long, hi: Long): (Int, Int) = {
+      var i = 0
+      var running = counts(0)
+      while (running <= lo) { i += 1; running += counts(i) }
+      var j = i
+      while (running <= hi) { j += 1; running += counts(j) }
+      (i, j)
+    }
+
+    /** Sort the pending keys (`Arrays.sort` on the primitive array) and
+      * merge them into the table. */
     def settle(): Unit = if (pendingSize > 0) {
-      val p = pending
       val np = pendingSize
       pendingSize = 0
-      java.util.Arrays.sort(p, 0, np)
+      java.util.Arrays.sort(pending, 0, np)
+      mergeSorted(pending, null, np)
+    }
+
+    /** Merge `other` into this table, in place. */
+    def merge(other: Counts): Counts = {
+      settle()
+      other.settle()
+      mergeSorted(other.keys, other.counts, other.size)
+      total += other.total
+      this
+    }
+
+    /** Merge the sorted keys `ks[0, n)` into the table: each counting 1 when
+      * `cs` is null (runs of duplicates allowed), else distinct keys with
+      * weights `cs(i)`. Count bumps for keys already present, then one merge
+      * of the new keys from the back, in place, that stops once the last
+      * new key is placed. Does not touch `total`. */
+    private def mergeSorted(ks: Array[Long], cs: Array[Long], n: Int): Unit = {
       var fresh = 0
+      var from = 0 // the last key's place: the next key's is not before it
       var j = 0
-      while (j < np) {
-        val k = p(j)
+      while (j < n) {
+        val k = ks(j)
         var r = j + 1
-        while (r < np && p(r) == k) r += 1
-        val at = java.util.Arrays.binarySearch(keys, 0, size, k)
-        if (at >= 0) counts(at) += r - j else fresh += 1
+        while (r < n && ks(r) == k) r += 1
+        var step = 1 // gallop, then binary search: O(n log(size / n)) in all
+        while (from + step < size && keys(from + step - 1) < k) step *= 2
+        val at = java.util.Arrays.binarySearch(keys, from, math.min(from + step, size), k)
+        if (at >= 0) counts(at) += (if (cs == null) r - j else cs(j)) else fresh += 1
+        from = if (at >= 0) at + 1 else -at - 1
         j = r
       }
       if (fresh > 0) {
@@ -243,46 +272,19 @@ object ExactPercentileAgg {
         // w - i = new keys still to place
         var i = size - 1
         var w = size + fresh - 1
-        j = np - 1
+        j = n - 1
         while (w > i) {
-          val k = p(j)
+          val k = ks(j)
           var r = j - 1
-          while (r >= 0 && p(r) == k) r -= 1
+          while (r >= 0 && ks(r) == k) r -= 1
           while (i >= 0 && keys(i) > k) {
             keys(w) = keys(i); counts(w) = counts(i); i -= 1; w -= 1
           }
-          if (i < 0 || keys(i) != k) { keys(w) = k; counts(w) = j - r; w -= 1 }
+          if (i < 0 || keys(i) != k) { keys(w) = k; counts(w) = if (cs == null) j - r else cs(j); w -= 1 }
           j = r
         }
         size += fresh
       }
-    }
-
-    /** Merge `other` into this table in one linear pass over both. */
-    def merge(other: Counts): Counts = {
-      settle()
-      other.settle()
-      if (other.size == 0) return this
-      val ks = new Array[Long](size + other.size)
-      val cs = new Array[Long](size + other.size)
-      var i = 0
-      var j = 0
-      var n = 0
-      while (i < size || j < other.size) {
-        if (j == other.size || (i < size && keys(i) < other.keys(j))) {
-          ks(n) = keys(i); cs(n) = counts(i); i += 1
-        } else if (i == size || other.keys(j) < keys(i)) {
-          ks(n) = other.keys(j); cs(n) = other.counts(j); j += 1
-        } else {
-          ks(n) = keys(i); cs(n) = counts(i) + other.counts(j); i += 1; j += 1
-        }
-        n += 1
-      }
-      keys = ks
-      counts = cs
-      size = n
-      total += other.total
-      this
     }
 
     /** `size` then `size` (key, count) pairs, big-endian. */

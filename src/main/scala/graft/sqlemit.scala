@@ -43,9 +43,12 @@ object SqlEmitter {
     case object DuckDb   extends Dialect
   }
 
-  /** Emit `SELECT ... FROM table` for a validated spec over `schema`. */
+  /** Emit `SELECT ... FROM table` for `spec` over `schema`. Throws
+    * GraftValidationException, as [[WindowEngine.run]] does, for a spec the
+    * validator rejects: nothing is emitted for it. */
   def emit(spec: WindowQuerySpec, table: String, schema: StructType,
       dialect: Dialect = Dialect.Spark): String = {
+    Validator.requireValid(spec, schema)
     def name(n: String) = quote(n, dialect)
     // the cast wraps the whole windowed expression — CAST(fn() AS t) OVER
     // (...) is a syntax error in every dialect

@@ -10,6 +10,13 @@ import org.apache.spark.sql.types._
   */
 object Validator {
 
+  /** Throws GraftValidationException with ALL of [[validate]]'s failures
+    * (reference: WindowAggregation.java:130-131); both backends call it. */
+  def requireValid(spec: WindowQuerySpec, schema: StructType): Unit = {
+    val failures = validate(spec, schema)
+    if (failures.nonEmpty) throw new GraftValidationException(failures)
+  }
+
   def validate(spec: WindowQuerySpec, schema: StructType): Seq[ValidationFailure] = {
     val fs = Seq.newBuilder[ValidationFailure]
     val fieldTypes: Map[String, DataType] = schema.fields.map(f => f.name -> f.dataType).toMap

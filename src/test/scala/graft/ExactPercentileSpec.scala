@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, percentile, rand, xxhash64}
 import org.apache.spark.sql.types._
@@ -141,6 +142,97 @@ class ExactPercentileSpec extends AnyFunSuite {
     val b = new ExactPercentileAgg.Counts()
     (1 to 3000).foreach { i => val k = (i % 700).toLong * 31 - 9000; b.add(k); ref(k) = ref.getOrElse(k, 0L) + 1 }
     check(ExactPercentileAgg.Counts.fromBytes(a.merge(b).toBytes), ref)
+  }
+
+  test("eval at every rank boundary: p = c/t and one ulp either side, 1 to 300 rows with ties") {
+    import ExactPercentileAgg.{Counts, encodeDouble}
+    val rnd = new scala.util.Random(17)
+    val big = 1L << 53
+    val bits = java.lang.Double.doubleToLongBits _
+    var evals = 0
+    for (t <- 1 to 300) {
+      // t rows over at most 40 keys; the longs lie around 2^53, where
+      // neighbours round to one double, and the doubles keep their order
+      val pool = Seq.fill(1 + rnd.nextInt(40))(big - 20 + rnd.nextInt(40))
+      val longs = Seq.fill(t)(pool(rnd.nextInt(pool.size)))
+      val doubles = longs.map(v => (v - big) * 0.37)
+      val sortedL = longs.sorted.toIndexedSeq
+      val sortedD = doubles.sorted.toIndexedSeq
+      val ps = ((0 to t).flatMap { c =>
+        val p = c.toDouble / t
+        Seq(Math.nextDown(p), p, Math.nextUp(p))
+      } ++ Seq(0.0, 1.0)).filter(p => p >= 0.0 && p <= 1.0).distinct
+      val lc = new Counts(); longs.foreach(v => lc.add(v))
+      val dc = new Counts(); doubles.foreach(v => dc.add(encodeDouble(v)))
+      for (p <- ps) {
+        // the reference UDAF: the first distinct value whose running count
+        // over the total reaches p
+        val last = sortedL.indices.find(i =>
+          (i == t - 1 || sortedL(i + 1) != sortedL(i)) && (i + 1) / t.toDouble >= p).get
+        // Spark's Percentile.getPercentile over the sorted values
+        val position = (t.toLong - 1) * p
+        val (lower, higher) = (position.floor.toLong, position.ceil.toLong)
+        def spark(sorted: IndexedSeq[Double], keys: IndexedSeq[Any]): Double = {
+          val (lo, hi) = (sorted(lower.toInt), sorted(higher.toInt))
+          if (higher == lower || keys(lower.toInt) == keys(higher.toInt)) lo
+          else (higher - position) * lo + (position - lower) * hi
+        }
+        def eval(dt: DataType, discrete: Boolean, c: Counts): Any =
+          ExactPercentileAgg(BoundReference(0, dt, nullable = true), p, discrete).eval(c)
+        assert(eval(LongType, discrete = true, lc) == sortedL(last), s"t=$t p=$p")
+        assert(eval(DoubleType, discrete = true, dc) == sortedD(last), s"t=$t p=$p")
+        assert(bits(eval(LongType, discrete = false, lc).asInstanceOf[Double]) ==
+          bits(spark(sortedL.map(_.toDouble), sortedL)), s"t=$t p=$p")
+        assert(bits(eval(DoubleType, discrete = false, dc).asInstanceOf[Double]) ==
+          bits(spark(sortedD, sortedD)), s"t=$t p=$p")
+        evals += 4
+      }
+    }
+    assert(evals > 400000)
+  }
+
+  test("Counts memory stays within 2 x distinct + 16 longs per array, and merge reuses the table") {
+    import ExactPercentileAgg.Counts
+    val rnd = new scala.util.Random(5)
+    def assertBounded(c: Counts, what: String): Unit = {
+      c.settle()
+      val cap = 2 * c.size + 16
+      assert(c.keys.length <= cap && c.counts.length <= cap && c.pendingCapacity <= cap,
+        s"$what: ${c.keys.length} / ${c.counts.length} / ${c.pendingCapacity} slots for ${c.size} keys")
+    }
+    // a running frame: one add and one settle per row
+    val running = new Counts()
+    for (i <- 1 to 20000) {
+      running.add(rnd.nextInt(5000).toLong)
+      running.settle()
+      if (i % 500 == 0) assertBounded(running, s"running, row $i")
+    }
+    // pending growth without settles: 10 distinct keys keep 16 slots, 30k
+    // distinct keys grow the pending array with the table
+    for (distinct <- Seq(10, 30000)) {
+      val c = new Counts()
+      for (_ <- 1 to 100000) c.add(rnd.nextInt(distinct).toLong)
+      assertBounded(c, s"$distinct distinct keys")
+      assert(c.total == 100000)
+    }
+    // repeated merges grow the table only when it is full
+    val acc = new Counts()
+    var reused = 0
+    for (m <- 1 to 200) {
+      val part = new Counts()
+      for (_ <- 1 to 500) part.add(rnd.nextInt(3000).toLong)
+      acc.settle()
+      val (keys, counts) = (acc.keys, acc.counts)
+      acc.merge(part)
+      if (acc.keys.length == keys.length) {
+        val inPlace = (acc.keys eq keys) && (acc.counts eq counts)
+        assert(inPlace, s"merge $m allocated a table of the same size")
+        reused += 1
+      }
+      assertBounded(acc, s"merge $m")
+      assert(acc.total == 500L * m)
+    }
+    assert(reused > 150)
   }
 
   test("high-cardinality unordered CONTINUOUS_PERCENTILE and groupBy discrete mode") {

@@ -164,13 +164,16 @@ class SqlEmitterSpec extends AnyFunSuite {
   test("BigQuery dialect reproduces the reference pushdown templates") {
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = Seq(
       AggregateSpec("dp", WindowFn.DiscretePercentile, "v", Seq("0.25")),
-      AggregateSpec("cp", WindowFn.ContinuousPercentile, "v", Seq("0.75")),
       AggregateSpec("f", WindowFn.First, "v"),
       AggregateSpec("l", WindowFn.Last, "v", ignoreNulls = false)))
     val sql = SqlEmitter.emit(spec, "t", df.schema, SqlEmitter.Dialect.BigQuery)
+    // CONTINUOUS_PERCENTILE takes no order clause
+    val cpSql = SqlEmitter.emit(WindowQuerySpec(Seq("k"), aggregates = Seq(
+      AggregateSpec("cp", WindowFn.ContinuousPercentile, "v", Seq("0.75")))),
+      "t", df.schema, SqlEmitter.Dialect.BigQuery)
     // BigQuery navigation functions: window spec is PARTITION BY only
     assert(sql.contains("PERCENTILE_DISC(v, 0.25) OVER (PARTITION BY k) AS dp"))
-    assert(sql.contains("PERCENTILE_CONT(v, 0.75) OVER (PARTITION BY k) AS cp"))
+    assert(cpSql.contains("PERCENTILE_CONT(v, 0.75) OVER (PARTITION BY k) AS cp"))
     assert(sql.contains("FIRST_VALUE(v IGNORE NULLS) OVER (PARTITION BY k ORDER BY ord ASC)"))
     assert(sql.contains("LAST_VALUE(v RESPECT NULLS)"))
     // args[0]="true" ORs into ignoreNulls even when the flag is false —
@@ -182,6 +185,22 @@ class SqlEmitterSpec extends AnyFunSuite {
     assert(orSql.contains("LAST_VALUE(v IGNORE NULLS)"))
     // select list = input columns then appended aliases
     assert(sql.startsWith("SELECT k, ord, v, "))
+  }
+
+  test("every dialect rejects what the validator rejects, with its failures, and emits nothing") {
+    val specs = Seq(
+      WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = Seq(
+        AggregateSpec("r", WindowFn.Rank, "ord"), AggregateSpec("x", WindowFn.Lag, "missing", Seq("1")))),
+      WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = Seq(
+        AggregateSpec("t", WindowFn.NTile, "ord", Seq("0")))),
+      WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = Seq(
+        AggregateSpec("cp", WindowFn.ContinuousPercentile, "v", Seq("0.5")))))
+    for (spec <- specs; dialect <- Seq(SqlEmitter.Dialect.Spark, SqlEmitter.Dialect.BigQuery, SqlEmitter.Dialect.DuckDb)) {
+      val want = Validator.validate(spec, df.schema)
+      assert(want.nonEmpty)
+      val e = intercept[GraftValidationException](SqlEmitter.emit(spec, "t", df.schema, dialect))
+      assert(e.failures == want, s"$dialect: ${e.getMessage}")
+    }
   }
 
   test("BigQuery dialect maps cast types to FLOAT64/INT64") {
