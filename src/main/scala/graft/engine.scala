@@ -162,7 +162,7 @@ object WindowEngine {
   /** partition + order + frame → WindowSpec. Unbounded sentinels
     * (Long.MinValue/MaxValue) pass through verbatim — they ARE Spark's
     * Window.unboundedPreceding/unboundedFollowing. */
-  private[graft] def buildWindowSpec(spec: WindowQuerySpec): WindowSpec = {
+  private def buildWindowSpec(spec: WindowQuerySpec): WindowSpec = {
     val partitioned = Window.partitionBy(spec.partitionFields.map(field): _*)
     val ordered =
       if (spec.order.isEmpty) partitioned

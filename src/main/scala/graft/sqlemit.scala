@@ -16,10 +16,10 @@ import org.apache.spark.sql.types._
   * argument is the value [[WindowFn.parseArg]] read, and a declared type is
   * CAST where [[WindowEngine.castsToDeclared]] says Spark's result differs
   * from it.
-  * Names that are not plain identifiers are quoted. The one divergence left
-  * is BigQuery's navigation functions (see `partitionOnly`). The Spark
-  * dialect's DISCRETE_PERCENTILE is the engine's kernel,
-  * `graft_percentile_disc`: it needs a session with [[GraftExtensions]]
+  * Names are quoted where the dialect needs it (see `quote`). The one
+  * divergence left is BigQuery's navigation functions (see `partitionOnly`).
+  * The Spark dialect's DISCRETE_PERCENTILE is the engine's kernel,
+  * `graft_percentile_disc`: it needs a session with graft.GraftExtensions
   * registered, and fails with UNRESOLVED_ROUTINE, never a wrong result,
   * on one without.
   */
@@ -75,15 +75,16 @@ object SqlEmitter {
 
   private val Plain = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  /** A name as an identifier: as it is when plain, else quoted —
-    * backticks for Spark and BigQuery, double quotes for DuckDb. */
-  private def quote(n: String, dialect: Dialect): String =
-    if (Plain.matches(n)) n
-    else dialect match {
-      case Dialect.Spark    => s"`${n.replace("`", "``")}`"
-      case Dialect.BigQuery => s"`${n.replace("\\", "\\\\").replace("`", "\\`")}`"
-      case Dialect.DuckDb   => "\"" + n.replace("\"", "\"\"") + "\""
-    }
+  /** A name as an identifier. DuckDb double-quotes every name: it reserves
+    * words that Spark takes as names (`order`, `from`, `left`, `select`, ...),
+    * and matches a quoted name regardless of case. Spark and BigQuery print a
+    * plain name as it is and backtick-quote any other. */
+  private def quote(n: String, dialect: Dialect): String = dialect match {
+    case Dialect.DuckDb        => "\"" + n.replace("\"", "\"\"") + "\""
+    case _ if Plain.matches(n) => n
+    case Dialect.Spark         => s"`${n.replace("`", "``")}`"
+    case Dialect.BigQuery      => s"`${n.replace("\\", "\\\\").replace("`", "\\`")}`"
+  }
 
   /** The cast to the declared output type, dialect-mapped (BigQuery has
     * only FLOAT64/INT64 — FLOAT, DOUBLE, INT, BIGINT are not accepted type

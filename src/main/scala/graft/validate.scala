@@ -42,6 +42,12 @@ object Validator {
         s"Cannot create multiple aggregate functions with the same alias '$a'.",
         "Provided aliases must be unique.")
 
+    // Spark's repartition takes a positive count (WindowsAggregationUtil.java:84-90).
+    for (n <- spec.numberOfPartitions if n < 1)
+      fs += ValidationFailure(
+        s"Number of partitions $n must be positive.",
+        "Provide a number of partitions of at least 1, or leave it unset.")
+
     for (agg <- spec.aggregates) {
       // Aggregate input field must exist (WindowAggregation.java:161-171).
       fieldTypes.get(agg.field) match {

@@ -324,5 +324,11 @@ class EngineSpec extends AnyFunSuite {
       aggregates = Seq(AggregateSpec("r", WindowFn.Rank, "ord")),
       numberOfPartitions = Some(3)))
     assert(out.rdd.getNumPartitions == 3)
+    // a count below 1 fails validation, not Spark's repartition
+    val e = intercept[GraftValidationException] {
+      WindowEngine.run(df, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
+        aggregates = Seq(AggregateSpec("r", WindowFn.Rank, "ord")), numberOfPartitions = Some(0)))
+    }
+    assert(e.failures.map(_.message) == Seq("Number of partitions 0 must be positive."))
   }
 }

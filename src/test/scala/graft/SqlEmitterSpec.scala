@@ -298,11 +298,11 @@ class SqlEmitterSpec extends AnyFunSuite {
     // engine-declared output types surface as casts (rank INT, pct REAL,
     // accumulate = input type), Spark's null-order defaults are pinned, and
     // the percentile family maps to DuckDB's quantile functions
-    assert(sql.contains("CAST(RANK() OVER (PARTITION BY k ORDER BY ord DESC NULLS LAST, v ASC NULLS FIRST) AS INTEGER) AS rnk"))
-    assert(sql.contains("AS REAL) AS pr"))
-    assert(sql.contains("quantile_disc(v, 0.5) OVER"))
-    assert(sql.contains("CAST(SUM(v) OVER") && sql.contains("AS INTEGER) AS acc"))
-    assert(sql.contains("FIRST_VALUE(v IGNORE NULLS)"))
+    assert(sql.contains("CAST(RANK() OVER (PARTITION BY \"k\" ORDER BY \"ord\" DESC NULLS LAST, \"v\" ASC NULLS FIRST) AS INTEGER) AS \"rnk\""))
+    assert(sql.contains("AS REAL) AS \"pr\""))
+    assert(sql.contains("quantile_disc(\"v\", 0.5) OVER"))
+    assert(sql.contains("CAST(SUM(\"v\") OVER") && sql.contains("AS INTEGER) AS \"acc\""))
+    assert(sql.contains("FIRST_VALUE(\"v\" IGNORE NULLS)"))
   }
 
   test("Spark dialect emits ordered DISCRETE_PERCENTILE as the engine's kernel") {
@@ -331,19 +331,19 @@ class SqlEmitterSpec extends AnyFunSuite {
       AggregateSpec("nxt", WindowFn.Lead, "v", Seq("+1")),
       AggregateSpec("dp", WindowFn.DiscretePercentile, "v", Seq("0x1p-1"))))
     import SqlEmitter.Dialect._
-    for ((dialect, cp, dp) <- Seq(
-        (Spark, "percentile(v, 0.5)", "graft_percentile_disc(v, 0.5)"),
-        (BigQuery, "PERCENTILE_CONT(v, 0.5)", "PERCENTILE_DISC(v, 0.5)"),
-        (DuckDb, "quantile_cont(CAST(v AS DOUBLE), 0.5)", "quantile_disc(v, 0.5)"))) {
+    for ((dialect, v, cp, dp) <- Seq(
+        (Spark, "v", "percentile(v, 0.5)", "graft_percentile_disc(v, 0.5)"),
+        (BigQuery, "v", "PERCENTILE_CONT(v, 0.5)", "PERCENTILE_DISC(v, 0.5)"),
+        (DuckDb, "\"v\"", "quantile_cont(CAST(\"v\" AS DOUBLE), 0.5)", "quantile_disc(\"v\", 0.5)"))) {
       assert(SqlEmitter.emit(unordered, "t", df.schema, dialect).contains(s"$cp OVER"), dialect)
       val sql = SqlEmitter.emit(ordered, "t", df.schema, dialect)
-      for (want <- Seq("NTILE(4) OVER", "LEAD(v, 1) OVER", s"$dp OVER")) assert(sql.contains(want), s"$dialect: $sql")
+      for (want <- Seq("NTILE(4) OVER", s"LEAD($v, 1) OVER", s"$dp OVER")) assert(sql.contains(want), s"$dialect: $sql")
     }
     assertParity(unordered)
     assertParity(ordered)
   }
 
-  test("names that are not plain identifiers are quoted per dialect; plain names are not") {
+  test("DuckDb quotes every name; Spark and BigQuery quote only non-plain names") {
     val odd = df.withColumnRenamed("v", "a.b").withColumnRenamed("ord", "o`rd")
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("o`rd")), aggregates = Seq(
       AggregateSpec("my sum", WindowFn.Accumulate, "a.b"),
@@ -352,9 +352,9 @@ class SqlEmitterSpec extends AnyFunSuite {
     assert(emit(SqlEmitter.Dialect.Spark) == "SELECT k, `o``rd`, " +
       "LAG(`a.b`, 1) OVER (PARTITION BY k ORDER BY `o``rd` ASC) AS `a.b`, " +
       "CAST(SUM(`a.b`) OVER (PARTITION BY k ORDER BY `o``rd` ASC) AS DOUBLE) AS `my sum` FROM t")
-    assert(emit(SqlEmitter.Dialect.DuckDb) == "SELECT k, \"o`rd\", " +
-      "LAG(\"a.b\", 1) OVER (PARTITION BY k ORDER BY \"o`rd\" ASC NULLS FIRST) AS \"a.b\", " +
-      "CAST(SUM(\"a.b\") OVER (PARTITION BY k ORDER BY \"o`rd\" ASC NULLS FIRST) AS DOUBLE) AS \"my sum\" FROM t")
+    assert(emit(SqlEmitter.Dialect.DuckDb) == "SELECT \"k\", \"o`rd\", " +
+      "LAG(\"a.b\", 1) OVER (PARTITION BY \"k\" ORDER BY \"o`rd\" ASC NULLS FIRST) AS \"a.b\", " +
+      "CAST(SUM(\"a.b\") OVER (PARTITION BY \"k\" ORDER BY \"o`rd\" ASC NULLS FIRST) AS DOUBLE) AS \"my sum\" FROM t")
     assert(emit(SqlEmitter.Dialect.BigQuery).startsWith("SELECT k, `o\\`rd`, LAG(`a.b`, 1)"))
     // the engine resolves the same names, and spark.sql agrees with it
     odd.createOrReplaceTempView("t")
@@ -363,6 +363,25 @@ class SqlEmitterSpec extends AnyFunSuite {
     assert(viaSql.schema == viaEngine.schema)
     assert(viaSql.collect().toSet == viaEngine.collect().toSet)
     assert(viaEngine.columns.toSeq == Seq("k", "o`rd", "a.b", "my sum"))
+  }
+
+  test("SQL keywords as names: one result from the engine, spark.sql and DuckDB") {
+    // DuckDB reserves these words and Spark does not: bare, the DuckDb text
+    // is a syntax error there
+    val words = Seq(("x", 1L, 3.0), ("x", 2L, 1.0), ("x", 2L, 4.0), ("y", 5L, 2.0), ("y", 7L, 6.0))
+      .toDF("order", "from", "v")
+    val spec = WindowQuerySpec(Seq("order"), Seq(OrderSpec("from")), aggregates = Seq(
+      AggregateSpec("rnk", WindowFn.Rank, "v"),
+      AggregateSpec("select", WindowFn.Accumulate, "v")))
+    words.createOrReplaceTempView("t")
+    val engine = WindowEngine.run(words, spec)
+    val rows = engine.collect().toSeq
+    assert(rows.size == 5)
+    val viaSql = spark.sql(SqlEmitter.emit(spec, "t", words.schema))
+    assert(viaSql.schema == engine.schema)
+    assert(viaSql.collect().toSet == rows.toSet)
+    val Seq(duck) = viaDuckDb(words, "t", Seq(SqlEmitter.emit(spec, "t", words.schema, SqlEmitter.Dialect.DuckDb)))
+    assert(duckMismatch(engine.schema, rows, duck).isEmpty, duck)
   }
 
   test("validator => analysis: every accepted spec runs on both backends with one schema and one result") {
@@ -411,8 +430,9 @@ class SqlEmitterSpec extends AnyFunSuite {
       field <- Gen.frequency(5 -> Gen.oneOf(numeric), 5 -> Gen.oneOf(cols), 1 -> Gen.const("nope"))
       a <- args(fn)
       ignoreNulls <- Gen.oneOf(true, false)
-      // sometimes an input name or "x" in another case, which Spark reads as the same name
-      alias <- Gen.frequency(3 -> Gen.oneOf("x", "y", "z", "w", "my col"), 2 -> Gen.oneOf(cols),
+      // "select" is a SQL keyword; sometimes an input name or "x" in another
+      // case, which Spark reads as the same name
+      alias <- Gen.frequency(3 -> Gen.oneOf("x", "y", "z", "w", "my col", "select"), 2 -> Gen.oneOf(cols),
         1 -> Gen.oneOf("K", "D", "X"))
     } yield AggregateSpec(alias, fn, field, a, ignoreNulls)
     val bound = Gen.oneOf(None, Some(-3L), Some(-1L), Some(0L), Some(2L), Some(4L))

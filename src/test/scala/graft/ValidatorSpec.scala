@@ -213,6 +213,18 @@ class ValidatorSpec extends AnyFunSuite {
       AggregateSpec("v", WindowFn.Rank, "i")).isEmpty)
   }
 
+  test("numberOfPartitions below 1 is rejected beside the spec's other failures") {
+    for (n <- Seq(0, -1)) {
+      val fs = Validator.validate(
+        spec(aggs = Seq(AggregateSpec("r", WindowFn.Rank, "gone"))).copy(numberOfPartitions = Some(n)), schema)
+      assert(fs.map(_.message) == Seq(s"Number of partitions $n must be positive.",
+        "Aggregate field 'gone' (alias 'r') must exist in input schema."))
+      assert(fs.head.correctiveAction.nonEmpty)
+    }
+    assert(Validator.validate(
+      spec(aggs = Seq(AggregateSpec("r", WindowFn.Rank, "v"))).copy(numberOfPartitions = Some(1)), schema).isEmpty)
+  }
+
   test("duplicate aliases on hand-built specs rejected") {
     val fs = Validator.validate(spec(aggs = Seq(
       AggregateSpec("x", WindowFn.Rank, "v"), AggregateSpec("x", WindowFn.DenseRank, "v"))), schema)
