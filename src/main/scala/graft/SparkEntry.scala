@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.sources.Tables
-import graft.operators.{Dedup, Multimodal, Similarity, SkewSafe, TextAnalysis}
+import graft.operators.{Dedup, Multimodal, Similarity, SkewJoin, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -6645,7 +6645,7 @@ object SparkEntry {
     // skew-safe whole-partition aggregate: groupBy+join instead of WindowExec
     "q43_skewsafe_partition_sum" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      SkewSafe.partitionAgg(
+      SkewJoin.partitionAgg(
         Tables.lineitem(s, dir).select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"),
         Seq("l_returnflag"),
         Seq("total_qty" -> sum(col("l_quantity")), "part_rows" -> count(lit(1))))
@@ -7407,7 +7407,7 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"), col("o_totalprice"))
-      SkewSafe.saltedJoin(li, o, "l_orderkey", saltBuckets = 8,
+      SkewJoin.saltedJoin(li, o, "l_orderkey", saltBuckets = 8,
         saltSource = "l_linenumber")
     }),
 
@@ -7420,7 +7420,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"), col("l_quantity"))
-      SkewSafe.partitionAgg(li, Seq("l_returnflag"), Seq(
+      SkewJoin.partitionAgg(li, Seq("l_returnflag"), Seq(
           "q_lo" -> expr("percentile(l_quantity, 0.05)"),
           "q_hi" -> expr("percentile(l_quantity, 0.95)")))
         .withColumn("q_clipped", least(greatest(col("l_quantity"), col("q_lo")), col("q_hi")))

@@ -23,12 +23,17 @@ import graft.functions.ExactPercentileAgg
   *  - One shuffle per window clause: the hash partition on `partitionFields`.
   *    AQE coalesces small shuffle partitions but does not split a skewed
   *    window sort (it splits skewed joins only): one key's rows are one task.
-  *    For pathologically hot keys: order-free whole-partition aggregates →
-  *    [[graft.operators.SkewSafe.partitionAgg]] (groupBy + join-back, no
-  *    window sort); running ACCUMULATE →
-  *    [[graft.operators.SkewSafe.saltedAccumulate]] (two-phase over
-  *    order-aligned chunks). Rank-family functions are salt-incompatible —
-  *    they need the whole partition.
+  *    For pathologically hot keys, running ACCUMULATE →
+  *    [[graft.operators.SkewSafe.saltedAccumulate]]: this engine's one
+  *    window up to an input estimate of 4 MiB (`SaltBytes`, measured; the
+  *    table is there), a two-phase plan over order-aligned chunks above it.
+  *    winbench's `hot_partitions` and the corpus' q48_salted_accumulate at
+  *    sf0.01 both fall below it, and no winbench workload sits above it, so
+  *    the two-phase side's speed rests on that table. Order-free
+  *    whole-partition aggregates can skip the window sort as a groupBy and
+  *    join-back (`graft.operators.SkewJoin.partitionAgg`, outside the core).
+  *    Rank-family functions are salt-incompatible — they need the whole
+  *    partition.
   *  - Spark's WindowExec sorts within partitions via UnsafeExternalSorter and
   *    spills. Running and whole-partition frames are evaluated incrementally,
   *    but a bounded ROW or RANGE frame re-aggregates its buffer every time it
@@ -142,9 +147,14 @@ object WindowEngine {
     * is past it. */
   private val OneTaskBytes = BigInt(256 * 1024)
 
+  /** Catalyst's size estimate of `df`: the one reading behind [[OneTaskBytes]]
+    * and SkewSafe's `SaltBytes` (see [[OneTaskBytes]] for why the analyzed
+    * plan's). */
+  private[graft] def sizeEstimate(df: DataFrame): BigInt = df.queryExecution.analyzed.stats.sizeInBytes
+
   private def applyUnchecked(df: DataFrame, spec: WindowQuerySpec): DataFrame = {
     val shared = buildWindowSpec(spec)
-    val input = if (df.queryExecution.analyzed.stats.sizeInBytes <= OneTaskBytes) df.coalesce(1) else df
+    val input = if (sizeEstimate(df) <= OneTaskBytes) df.coalesce(1) else df
     val out = input.select(layout(df.schema, spec).map {
       case (f, None) => field(f.name)
       case (f, Some(agg)) =>

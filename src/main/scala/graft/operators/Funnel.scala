@@ -70,7 +70,7 @@ object Funnel {
     * in any engine.
     *
     * Scale: one (user, bucket) count aggregate, then the per-user totals
-    * ride [[SkewSafe.partitionAgg]] (aggregate + broadcast-back join, no
+    * ride [[SkewJoin.partitionAgg]] (aggregate + broadcast-back join, no
     * window) — both partial-aggregated; a hot user collapses map-side. */
   def eventBursts(events: DataFrame, bucketNs: Long = 86400000000000L,
       minEvents: Long = 5L): DataFrame = {
@@ -79,7 +79,7 @@ object Funnel {
     val perBucket = events
       .select(col("user_id"), expr(s"ts div $bucketNs").as("bucket"))
       .groupBy("user_id", "bucket").agg(count(lit(1)).as("n_events"))
-    SkewSafe.partitionAgg(perBucket, Seq("user_id"), Seq(
+    SkewJoin.partitionAgg(perBucket, Seq("user_id"), Seq(
         "n_active_buckets" -> count(lit(1)),
         "n_total" -> sum(col("n_events"))))
       .withColumn("is_burst",

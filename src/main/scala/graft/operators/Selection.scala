@@ -155,7 +155,7 @@ object Selection {
     * in an IEEE double, so both engines compute bit-identical values with
     * zero transcendental or decimal-rounding concerns.
     *
-    * Scale: two [[SkewSafe.partitionAgg]] passes (exact percentile as a
+    * Scale: two [[SkewJoin.partitionAgg]] passes (exact percentile as a
     * partial-merge aggregate + broadcast-back join) — window-free, no
     * per-group sort on a single reducer. Output: input columns +
     * (score_e6, med_e6, mad_e6, is_outlier). */
@@ -163,10 +163,10 @@ object Selection {
       k: Int = 3): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val base = df.withColumn("score_e6", scoreE6)
-    val withMed = SkewSafe.partitionAgg(base, Seq(groupCol),
+    val withMed = SkewJoin.partitionAgg(base, Seq(groupCol),
       Seq("med_e6" -> percentile(col("score_e6"), lit(0.5))))
       .withColumn("__dev", abs(col("score_e6").cast("double") - col("med_e6")))
-    SkewSafe.partitionAgg(withMed, Seq(groupCol),
+    SkewJoin.partitionAgg(withMed, Seq(groupCol),
       Seq("mad_e6" -> percentile(col("__dev"), lit(0.5))))
       .withColumn("is_outlier", col("__dev") > lit(k.toDouble) * col("mad_e6"))
       .drop("__dev")

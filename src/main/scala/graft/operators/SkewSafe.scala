@@ -1,49 +1,78 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-safe alternative to whole-partition window aggregates.
-  *
-  * `sum(x) OVER (PARTITION BY k)` plans as WindowExec: every row of a
-  * partition lands in ONE task and gets sorted there. A hot key (think 40%
-  * of 100 TB sharing one `k`) makes that task the job — and AQE cannot split
-  * a window sort. For frame-less, order-free aggregates the same result is
-  * a groupBy + join-back:
-  *
-  *  - the groupBy side condenses map-side (partial aggregation), so the hot
-  *    key arrives at its reducer as one row per upstream task, not raw rows;
-  *  - the join back is a plain equi-join, which AQE's skew-join handling CAN
-  *    split into multiple tasks;
-  *  - no sort anywhere.
-  *
-  * Only valid for aggregates that ignore order and frame (the engine's
-  * ACCUMULATE with no order clause, counts, min/max, avg). Running
-  * (ordered) aggregates are inherently sequential per partition and must
-  * keep the window form — salt upstream if they skew.
+import graft.{AggregateSpec, OrderSpec, Validator, WindowEngine, WindowFn, WindowQuerySpec}
+
+/** Running ACCUMULATE over a hot key: the escape the engine scaladoc names
+  * for ordered aggregates. A running aggregate is sequential per partition,
+  * so a hot key serializes into one sorted task; splitting the partition into
+  * order-aligned chunks restores parallelism, but costs two more shuffles and
+  * a join, which pay only on a big input. [[saltedAccumulate]] picks between
+  * the engine's one window and the two-phase plan by the input's size
+  * estimate ([[SaltBytes]]). Rank-family functions need the whole partition
+  * and cannot be salted.
   */
 object SkewSafe {
 
-  /** Attach whole-partition aggregate values to every row, window-free.
-    * `aggs` are (alias, aggregate-expression) pairs evaluated per key group,
-    * e.g. `Seq("total_qty" -> sum(col("l_quantity")))`.
-    * Joins back with null-safe equality, so NULL-keyed rows form their own
-    * group and survive — matching `agg OVER (PARTITION BY k)` semantics. */
-  def partitionAgg(df: DataFrame, keys: Seq[String], aggs: Seq[(String, Column)]): DataFrame = {
-    require(aggs.nonEmpty, "at least one aggregate required")
-    val totals = df.groupBy(keys.map(col): _*)
-      .agg(aggs.head._2.as(aggs.head._1), aggs.tail.map { case (n, c) => c.as(n) }: _*)
-      // rename keys so the join condition can reference both sides
-      .select(keys.map(k => col(k).as(s"__$k")) ++ aggs.map(a => col(a._1)): _*)
-    val cond = keys.map(k => df(k) <=> col(s"__$k")).reduce(_ && _)
-    df.join(totals, cond).drop(keys.map(k => s"__$k"): _*)
+  /** Catalyst's size estimate of the input ([[WindowEngine.sizeEstimate]],
+    * the reading behind the engine's `OneTaskBytes`) at or below which
+    * [[saltedAccumulate]] runs the engine's own running ACCUMULATE: one
+    * window, one `Exchange hashpartitioning(keys)`. Above it, the two-phase
+    * plan ([[twoPhaseAccumulate]]: three exchanges and a join).
+    *
+    * Measured, not an option: median of interleaved runs of each plan plus a
+    * `collect` of winbench's fingerprint of the result, on winbench's
+    * `hot_partitions` rows (4 `l_returnflag` keys, one with half the rows;
+    * running ACCUMULATE of `l_quantity` ordered by ship date, chunked by ship
+    * month) as one parquet file, local[4] on 4 vCPU with 4 shuffle
+    * partitions; both plans gave the same fingerprint at every size:
+    * {{{
+    *   rows  estimate  two-phase  one window  runs one window won
+    *   100k   1.38 MB    594 ms     441 ms      15 of 15
+    *   150k   2.04 MB    614        510         11 of 11
+    *   200k   2.69 MB    589        552          8 of 11
+    *   250k   3.33 MB    658        655          8 of 11
+    *   300k   3.99 MB    737        713          7 of 11
+    *   325k   4.33 MB    870        934          5 of 11
+    *   350k   4.66 MB    858        919          1 of 11
+    *   400k   5.32 MB    811        975          4 of 11
+    *   600k   7.86 MB   1299       1369          2 of 9
+    *   800k   10.3 MB   1383       1675          1 of 9
+    *   1M     12.8 MB   1620       2156          0 of 9
+    *   4M     50.5 MB   4942       6048          0 of 7
+    * }}}
+    * Below about 4 MB the per-stage cost of the two extra shuffles and the
+    * join outweighs the hot key's parallelism; above it the hot key's one
+    * sorted task is the job. 4 MiB (4.19 MB) sits between the last size
+    * where one window won (3.99 MB) and the first where salting did
+    * (4.33 MB). winbench's `hot_partitions` (1.38 MB) and the corpus'
+    * q48_salted_accumulate at sf0.01 (0.43 MB) fall below it, q48 at sf0.1
+    * (4.48 MB) above; no winbench workload sits above it, so the two-phase
+    * side's speed rests on this table.
+    */
+  private[graft] val SaltBytes = BigInt(4L * 1024 * 1024)
+
+  /** Running sum (ACCUMULATE) of `valueCol` per `keys`, ordered ascending by
+    * `orderCols`, appended as `alias` (or replacing the column of that name),
+    * cast to the value column's type: the engine's ACCUMULATE. At or below
+    * [[SaltBytes]] it is `WindowEngine.run` of that spec; above, the
+    * two-phase plan over `chunkCol`, which only that side reads. Both sides
+    * reject what `WindowEngine.run` rejects. */
+  def saltedAccumulate(
+      df: DataFrame, keys: Seq[String], orderCols: Seq[String],
+      chunkCol: String, valueCol: String, alias: String): DataFrame = {
+    val spec = WindowQuerySpec(keys, orderCols.map(OrderSpec(_)),
+      aggregates = Seq(AggregateSpec(alias, WindowFn.Accumulate, valueCol)))
+    if (WindowEngine.sizeEstimate(df) <= SaltBytes) WindowEngine.run(df, spec)
+    else {
+      Validator.requireValid(spec, df.schema)
+      twoPhaseAccumulate(df, keys, orderCols, chunkCol, valueCol, alias)
+    }
   }
 
-  /** Two-phase RUNNING sum (ACCUMULATE) for skewed ordered windows — the
-    * utility behind the engine scaladoc's "pre-salt upstream" guidance
-    * (engine.scala): a running aggregate is inherently sequential per
-    * partition, so a hot key serializes into one sorted task. Splitting the
-    * partition into order-aligned CHUNKS restores parallelism:
+  /** Two-phase running sum over order-aligned CHUNKS:
     *
     *  1. local running sum within (keys, chunk) — the shuffle+sort is keyed
     *     by (keys, chunk), so the hot key spreads over its chunks;
@@ -57,8 +86,8 @@ object SkewSafe {
     * by time) — equal order keys must share a chunk, or cross-chunk peers
     * would break the default RANGE frame's tie semantics. Result is cast to
     * the value column's type, matching ACCUMULATE's declared output.
-    * Property-tested equal to the unsalted engine ACCUMULATE. */
-  def saltedAccumulate(
+    * Tested equal to the unsalted engine ACCUMULATE. */
+  private[graft] def twoPhaseAccumulate(
       df: DataFrame, keys: Seq[String], orderCols: Seq[String],
       chunkCol: String, valueCol: String, alias: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -85,33 +114,5 @@ object SkewSafe {
           .otherwise(coalesce(col(alias), lit(0)) + coalesce(col("__offset"), lit(0)))
           .cast(valueType))
       .drop((keys :+ chunkCol).map(k => s"__$k") :+ "__offset": _*)
-  }
-
-  /** Salted equi-join for a skewed FACT key against a dim table too large
-    * to broadcast: the fact side salts each row into one of `saltBuckets`
-    * sub-keys (deterministic hash of `saltSource`, so reruns place rows
-    * identically), the dim side replicates each row across ALL buckets,
-    * and the join runs on (key, salt) — a hot fact key spreads over
-    * `saltBuckets` reducers instead of serializing into one.
-    *
-    * Semantically identical to `fact.join(dim, key)` (inner); the salt
-    * never survives into the output. Cost: dim shuffles ×`saltBuckets` —
-    * worth it exactly when the hot key's single-task time exceeds the
-    * replicated dim shuffle. AQE's skew-join split handles MODERATE skew
-    * without any of this; explicit salting is for the pathological key
-    * (think 40% of 100 TB on one key) where even a split task inherits the
-    * whole build side, and for engines/joins AQE won't split (e.g. the
-    * build side of a shuffled hash join, or pre-AQE checkpoints).
-    *
-    * `dim` must carry the join key under the SAME name as `fact`. */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String,
-      saltBuckets: Int = 8, saltSource: String = null): DataFrame = {
-    require(saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets")
-    val src = if (saltSource == null) key else saltSource
-    val fs = fact.withColumn("__salt",
-      pmod(xxhash64(col(src)), lit(saltBuckets)).cast("int"))
-    val ds = dim.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))))
-    fs.join(ds, Seq(key, "__salt")).drop("__salt")
   }
 }

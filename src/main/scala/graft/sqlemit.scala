@@ -25,10 +25,11 @@ import org.apache.spark.sql.types._
   */
 object SqlEmitter {
 
-  /** Target dialect. BigQuery reproduces the reference's templates verbatim
+  /** Target dialect. BigQuery reproduces the reference's templates
     * (PERCENTILE_CONT/DISC as window functions, `IGNORE NULLS` inside the
-    * FIRST_VALUE arg list); Spark emits what spark.sql accepts (Hive
-    * `percentile`, boolean ignore-nulls argument); DuckDb emits the ORACLE
+    * FIRST_VALUE arg list) with every name backtick-quoted; Spark emits
+    * what spark.sql accepts (Hive `percentile`, boolean ignore-nulls
+    * argument); DuckDb emits the ORACLE
     * form — DuckDB-native result types surface as explicit casts and Spark's
     * null-ordering defaults as NULLS FIRST/LAST, so a result computed by
     * DuckDB from the emitted text is value- and dtype-identical to the
@@ -75,15 +76,15 @@ object SqlEmitter {
 
   private val Plain = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  /** A name as an identifier. DuckDb double-quotes every name: it reserves
-    * words that Spark takes as names (`order`, `from`, `left`, `select`, ...),
-    * and matches a quoted name regardless of case. Spark and BigQuery print a
-    * plain name as it is and backtick-quote any other. */
+  /** A name as an identifier. DuckDb and BigQuery quote every name (double
+    * quotes and backticks): both reserve words that Spark takes as names
+    * (`order`, `from`, `select`, ...), and DuckDB matches a quoted name
+    * regardless of case. Spark prints a plain name as it is and
+    * backtick-quotes any other. */
   private def quote(n: String, dialect: Dialect): String = dialect match {
-    case Dialect.DuckDb        => "\"" + n.replace("\"", "\"\"") + "\""
-    case _ if Plain.matches(n) => n
-    case Dialect.Spark         => s"`${n.replace("`", "``")}`"
-    case Dialect.BigQuery      => s"`${n.replace("\\", "\\\\").replace("`", "\\`")}`"
+    case Dialect.DuckDb   => "\"" + n.replace("\"", "\"\"") + "\""
+    case Dialect.BigQuery => s"`${n.replace("\\", "\\\\").replace("`", "\\`")}`"
+    case Dialect.Spark    => if (Plain.matches(n)) n else s"`${n.replace("`", "``")}`"
   }
 
   /** The cast to the declared output type, dialect-mapped (BigQuery has

@@ -126,19 +126,47 @@ class OperatorsSpec extends AnyFunSuite {
       ("hot", i / 3, if (i < 80 || i % 11 == 0) Option.empty[Double] else Some((i % 7).toDouble))) ++
       (0 until 10).map(i => ("cold", i, Some(i.toDouble)))
     val df = rows.toDF("k", "ts", "v").withColumn("chunk", expr("ts div 25"))
-    val salted = graft.operators.SkewSafe
-      .saltedAccumulate(df, Seq("k"), Seq("ts"), "chunk", "v", "run")
-      .select("k", "ts", "v", "run")
     val unsalted = WindowEngine.run(df,
       WindowQuerySpec(Seq("k"), Seq(OrderSpec("ts")),
         aggregates = Seq(AggregateSpec("run", WindowFn.Accumulate, "v"))))
-      .select("k", "ts", "v", "run")
     def canon(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => (r.getString(0), r.getInt(1), Option(r.get(2)), Option(r.get(3))))
-        .sortBy(_.toString).toSeq
-    val (s, u) = (canon(salted), canon(unsalted))
-    assert(s == u)
+      d.select("k", "ts", "v", "run").collect()
+        .map(r => (r.getString(0), r.getInt(1), Option(r.get(2)), Option(r.get(3)))).sortBy(_.toString).toSeq
+    val u = canon(unsalted)
     assert(u.exists(_._4.isEmpty) && u.exists(_._4.nonEmpty)) // fixture really exercises both regimes
+    // this input is far below SaltBytes, so saltedAccumulate runs the engine's
+    // window; the two-phase plan is checked on the same rows directly
+    for (out <- Seq(SkewSafe.saltedAccumulate(df, Seq("k"), Seq("ts"), "chunk", "v", "run"),
+                    SkewSafe.twoPhaseAccumulate(df, Seq("k"), Seq("ts"), "chunk", "v", "run"))) {
+      assert(out.schema == unsalted.schema)
+      assert(canon(out) == u)
+    }
+  }
+
+  test("saltedAccumulate picks one window or the two-phase join by SaltBytes") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
+    // Range estimates 8 bytes a row and a projection scales that by its row
+    // width, so these inputs cross the constant without a row being made
+    def input(n: Long) = spark.range(n).select(
+      (col("id") % 4).cast("string").as("k"), col("id").as("ts"),
+      col("id").cast("double").as("v"), expr("id div 1000").as("chunk"))
+    val perRow = WindowEngine.sizeEstimate(input(1000)) / 1000
+    val (small, big) = (input((SkewSafe.SaltBytes / perRow / 2).toLong), input((SkewSafe.SaltBytes / perRow * 2).toLong))
+    assert(WindowEngine.sizeEstimate(small) <= SkewSafe.SaltBytes && WindowEngine.sizeEstimate(big) > SkewSafe.SaltBytes)
+    def plan(df: org.apache.spark.sql.DataFrame) = {
+      val out = SkewSafe.saltedAccumulate(df, Seq("k"), Seq("ts"), "chunk", "v", "run")
+      val p = out.queryExecution.optimizedPlan
+      (p.collect { case w: Window => w }.size, p.collect { case j: Join => j }.size,
+        "Exchange hashpartitioning".r.findAllIn(out.queryExecution.executedPlan.toString).size)
+    }
+    assert(plan(small) == ((1, 0, 1)))
+    val (windows, joins, _) = plan(big)
+    assert(windows == 2 && joins == 1)
+    // both sides reject what WindowEngine.run rejects: ACCUMULATE reads numbers
+    for (df <- Seq(small, big)) {
+      val e = intercept[GraftValidationException](SkewSafe.saltedAccumulate(df, Seq("k"), Seq("ts"), "chunk", "k", "run"))
+      assert(e.failures.exists(_.message.contains("not supported by function ACCUMULATE")), e.getMessage)
+    }
   }
 
   test("connected components converge in O(log diameter) rounds (pointer doubling)") {
@@ -1107,7 +1135,7 @@ class OperatorsSpec extends AnyFunSuite {
     val fact = Seq.tabulate(40)(i => (if (i < 30) 1L else i.toLong, i.toLong))
       .toDF("k", "payload") // 75% of rows on key 1
     val dim = Seq((1L, "hot"), (31L, "cold"), (99L, "unmatched")).toDF("k", "name")
-    val salted = SkewSafe.saltedJoin(fact, dim, "k", saltBuckets = 4, saltSource = "payload")
+    val salted = SkewJoin.saltedJoin(fact, dim, "k", saltBuckets = 4, saltSource = "payload")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
     val plain = fact.join(dim, "k")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted

@@ -281,7 +281,7 @@ class PropertySpec extends AnyFunSuite {
       val f = fact.toDF("k", "payload")
       // dedup dim keys: saltedJoin's contract mirrors a dimension table
       val d = dimRows.toMap.toSeq.toDF("k", "name")
-      val salted = operators.SkewSafe.saltedJoin(f, d, "k", buckets, "payload")
+      val salted = operators.SkewJoin.saltedJoin(f, d, "k", buckets, "payload")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
       val plain = f.join(d, "k")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq

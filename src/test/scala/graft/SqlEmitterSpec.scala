@@ -172,19 +172,19 @@ class SqlEmitterSpec extends AnyFunSuite {
       AggregateSpec("cp", WindowFn.ContinuousPercentile, "v", Seq("0.75")))),
       "t", df.schema, SqlEmitter.Dialect.BigQuery)
     // BigQuery navigation functions: window spec is PARTITION BY only
-    assert(sql.contains("PERCENTILE_DISC(v, 0.25) OVER (PARTITION BY k) AS dp"))
-    assert(cpSql.contains("PERCENTILE_CONT(v, 0.75) OVER (PARTITION BY k) AS cp"))
-    assert(sql.contains("FIRST_VALUE(v IGNORE NULLS) OVER (PARTITION BY k ORDER BY ord ASC)"))
-    assert(sql.contains("LAST_VALUE(v RESPECT NULLS)"))
+    assert(sql.contains("PERCENTILE_DISC(`v`, 0.25) OVER (PARTITION BY `k`) AS `dp`"))
+    assert(cpSql.contains("PERCENTILE_CONT(`v`, 0.75) OVER (PARTITION BY `k`) AS `cp`"))
+    assert(sql.contains("FIRST_VALUE(`v` IGNORE NULLS) OVER (PARTITION BY `k` ORDER BY `ord` ASC)"))
+    assert(sql.contains("LAST_VALUE(`v` RESPECT NULLS)"))
     // args[0]="true" ORs into ignoreNulls even when the flag is false —
     // reference template test (WindowAggregationTest.getBQColumnSelectionSQL_last)
     val orSql = SqlEmitter.emit(
       WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), aggregates = Seq(
         AggregateSpec("l", WindowFn.Last, "v", Seq("true"), ignoreNulls = false))),
       "t", df.schema, SqlEmitter.Dialect.BigQuery)
-    assert(orSql.contains("LAST_VALUE(v IGNORE NULLS)"))
+    assert(orSql.contains("LAST_VALUE(`v` IGNORE NULLS)"))
     // select list = input columns then appended aliases
-    assert(sql.startsWith("SELECT k, ord, v, "))
+    assert(sql.startsWith("SELECT `k`, `ord`, `v`, "))
   }
 
   test("every dialect rejects what the validator rejects, with its failures, and emits nothing") {
@@ -209,8 +209,8 @@ class SqlEmitterSpec extends AnyFunSuite {
       AggregateSpec("runi", WindowFn.Accumulate, "ord"),   // int input
       AggregateSpec("rund", WindowFn.Accumulate, "v")))    // double input
     val bq = SqlEmitter.emit(spec, "t", df.schema, SqlEmitter.Dialect.BigQuery)
-    assert(bq.contains("AS FLOAT64) AS pr") && bq.contains("AS INT64) AS runi") &&
-      bq.contains("AS FLOAT64) AS rund"))
+    assert(bq.contains("AS FLOAT64) AS `pr`") && bq.contains("AS INT64) AS `runi`") &&
+      bq.contains("AS FLOAT64) AS `rund`"))
     assert(!bq.contains("AS FLOAT)") && !bq.contains("AS DOUBLE)") && !bq.contains("AS INT)"))
     val sp = SqlEmitter.emit(spec, "t", df.schema, SqlEmitter.Dialect.Spark)
     assert(sp.contains("AS FLOAT) AS pr") && sp.contains("AS INT) AS runi"))
@@ -333,7 +333,7 @@ class SqlEmitterSpec extends AnyFunSuite {
     import SqlEmitter.Dialect._
     for ((dialect, v, cp, dp) <- Seq(
         (Spark, "v", "percentile(v, 0.5)", "graft_percentile_disc(v, 0.5)"),
-        (BigQuery, "v", "PERCENTILE_CONT(v, 0.5)", "PERCENTILE_DISC(v, 0.5)"),
+        (BigQuery, "`v`", "PERCENTILE_CONT(`v`, 0.5)", "PERCENTILE_DISC(`v`, 0.5)"),
         (DuckDb, "\"v\"", "quantile_cont(CAST(\"v\" AS DOUBLE), 0.5)", "quantile_disc(\"v\", 0.5)"))) {
       assert(SqlEmitter.emit(unordered, "t", df.schema, dialect).contains(s"$cp OVER"), dialect)
       val sql = SqlEmitter.emit(ordered, "t", df.schema, dialect)
@@ -343,7 +343,7 @@ class SqlEmitterSpec extends AnyFunSuite {
     assertParity(ordered)
   }
 
-  test("DuckDb quotes every name; Spark and BigQuery quote only non-plain names") {
+  test("DuckDb and BigQuery quote every name; Spark quotes only non-plain names") {
     val odd = df.withColumnRenamed("v", "a.b").withColumnRenamed("ord", "o`rd")
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("o`rd")), aggregates = Seq(
       AggregateSpec("my sum", WindowFn.Accumulate, "a.b"),
@@ -355,7 +355,7 @@ class SqlEmitterSpec extends AnyFunSuite {
     assert(emit(SqlEmitter.Dialect.DuckDb) == "SELECT \"k\", \"o`rd\", " +
       "LAG(\"a.b\", 1) OVER (PARTITION BY \"k\" ORDER BY \"o`rd\" ASC NULLS FIRST) AS \"a.b\", " +
       "CAST(SUM(\"a.b\") OVER (PARTITION BY \"k\" ORDER BY \"o`rd\" ASC NULLS FIRST) AS DOUBLE) AS \"my sum\" FROM t")
-    assert(emit(SqlEmitter.Dialect.BigQuery).startsWith("SELECT k, `o\\`rd`, LAG(`a.b`, 1)"))
+    assert(emit(SqlEmitter.Dialect.BigQuery).startsWith("SELECT `k`, `o\\`rd`, LAG(`a.b`, 1)"))
     // the engine resolves the same names, and spark.sql agrees with it
     odd.createOrReplaceTempView("t")
     val viaEngine = WindowEngine.run(odd, spec)
@@ -382,12 +382,18 @@ class SqlEmitterSpec extends AnyFunSuite {
     assert(viaSql.collect().toSet == rows.toSet)
     val Seq(duck) = viaDuckDb(words, "t", Seq(SqlEmitter.emit(spec, "t", words.schema, SqlEmitter.Dialect.DuckDb)))
     assert(duckMismatch(engine.schema, rows, duck).isEmpty, duck)
+    // BigQuery reserves them too; nothing here runs BigQuery, so the text is pinned
+    assert(SqlEmitter.emit(spec, "t", words.schema, SqlEmitter.Dialect.BigQuery) ==
+      "SELECT `order`, `from`, `v`, RANK() OVER (PARTITION BY `order` ORDER BY `from` ASC) AS `rnk`, " +
+      "CAST(SUM(`v`) OVER (PARTITION BY `order` ORDER BY `from` ASC) AS FLOAT64) AS `select` FROM t")
   }
 
   test("validator => analysis: every accepted spec runs on both backends with one schema and one result") {
     import org.scalacheck.Gen
+    // `order` is a word DuckDB and BigQuery reserve: a dialect that prints it
+    // bare fails here
     val schema = StructType(Seq(
-      StructField("k", StringType), StructField("g", IntegerType), StructField("i", IntegerType),
+      StructField("k", StringType), StructField("order", IntegerType), StructField("i", IntegerType),
       StructField("l", LongType), StructField("f", FloatType), StructField("d", DoubleType),
       StructField("dec", DecimalType(10, 2)), StructField("s", StringType),
       StructField("b", BooleanType), StructField("dt", DateType), StructField("ts", TimestampType),
@@ -408,7 +414,7 @@ class SqlEmitterSpec extends AnyFunSuite {
     in.createOrReplaceTempView("prop_t")
 
     val cols = schema.fieldNames.toSeq
-    val numeric = Seq("g", "i", "l", "f", "d", "a.b")
+    val numeric = Seq("order", "i", "l", "f", "d", "a.b")
     // valid arguments in the canonical spelling, in spellings only Java's
     // parser reads (a hex float, a type suffix, a sign, a leading zero, an
     // Arabic-Indic digit), and invalid ones
@@ -449,7 +455,7 @@ class SqlEmitterSpec extends AnyFunSuite {
     val unordered = Seq(WindowFn.ContinuousPercentile, WindowFn.Accumulate)
     val specGen: Gen[WindowQuerySpec] = for {
       fns <- Gen.frequency(5 -> WindowFn.all, 1 -> unordered)
-      parts <- Gen.frequency(8 -> Gen.oneOf(Seq("k"), Seq("g"), Seq("k", "g"), Seq("a.b"), Seq("b")),
+      parts <- Gen.frequency(8 -> Gen.oneOf(Seq("k"), Seq("order"), Seq("k", "order"), Seq("a.b"), Seq("b")),
         1 -> Gen.oneOf(Seq("nope"), Nil))
       nOrder <- if (fns == unordered) Gen.frequency(3 -> 0, 1 -> 1) else Gen.frequency(1 -> 0, 5 -> 1, 2 -> 2)
       order <- Gen.listOfN(nOrder, for {
@@ -467,12 +473,13 @@ class SqlEmitterSpec extends AnyFunSuite {
     val problems = Seq.newBuilder[String]
     // (spec, engine schema, engine rows, DuckDb text) of every spec that passed on Spark
     val toDuckDb = Seq.newBuilder[(WindowQuerySpec, StructType, Seq[Row], String)]
-    var accepted, rejected = 0
+    var accepted, rejected, readOrder = 0
     var drawn = Set.empty[WindowFn]
     for (seed <- 0L until 500L; spec <- specGen.apply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))) {
       if (Validator.validate(spec, schema).nonEmpty) rejected += 1
       else {
         accepted += 1
+        if ((spec.partitionFields ++ spec.order.map(_.field) ++ spec.aggregates.map(_.field)).contains("order")) readOrder += 1
         drawn ++= spec.aggregates.map(_.fn)
         try {
           val engine = WindowEngine.run(in, spec)
@@ -499,11 +506,12 @@ class SqlEmitterSpec extends AnyFunSuite {
       problems += s"$why: $spec"
     info(f"DuckDB leg: ${onSpark.size} specs in ${(System.nanoTime() - duckStart) / 1e9}%.1f s")
     val found = problems.result()
-    info(s"$accepted accepted, $rejected rejected")
+    info(s"$accepted accepted, $rejected rejected; $readOrder read the column `order`")
     assert(found.isEmpty, s"${found.size} of $accepted accepted specs broke the property:\n" +
       found.take(10).mkString("\n"))
     assert(accepted >= 100 && rejected >= 100, s"generator too narrow: $accepted accepted, $rejected rejected")
     assert(drawn == WindowFn.all.toSet, s"accepted specs never drew ${WindowFn.all.toSet -- drawn}")
+    assert(readOrder >= 50, s"only $readOrder accepted specs read the column `order`")
   }
 
   test("DuckDb reads a running MEDIAN's FLOAT input as a DOUBLE, as the engine does") {
