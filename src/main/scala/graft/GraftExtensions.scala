@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{GraftFunctionBridge, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.functions._
 
@@ -29,11 +27,10 @@ import graft.functions._
   *  - `graft_nfc(text)`                    → Unicode NFC normalization
   *  - `graft_char_gram_rank(text, k)`      → rank-ordered top-k char grams
   *  - `graft_heavy_hitters(item, cap)`     → Misra-Gries frequent-items agg
-  *  - `graft_percentile_disc(x, p)`        → reference-fidelity running
-  *    DISCRETE_PERCENTILE aggregate (usable with OVER, like the reference's
-  *    registered UDAF — WindowsAggregationUtil.java:114). [[SqlEmitter]]'s
-  *    Spark dialect emits it for DISCRETE_PERCENTILE, so that SQL needs a
-  *    session with these extensions registered.
+  *  - `graft_percentile(x, p)`, `graft_percentile_disc(x, p)` → the window
+  *    engine's percentile kernel ([[WindowExtensions]]). [[SqlEmitter]]'s
+  *    Spark dialect emits `graft_percentile_disc` for DISCRETE_PERCENTILE,
+  *    so that SQL needs a session with these functions registered.
   *
   * For a session that already exists (REPL, notebook, shared test session)
   * use [[GraftExtensions.register]], the post-construction equivalent.
@@ -48,7 +45,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  type Description = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+  import WindowExtensions.Description
 
   /** Register every graft function on an already-built session. */
   def register(spark: SparkSession): Unit =
@@ -58,12 +55,7 @@ object GraftExtensions {
 
   private def describe(name: String, usage: String, arity: Int)(
       builder: Seq[Expression] => Expression): Description =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
-      (args: Seq[Expression]) => {
-        require(args.length == arity, s"$name expects $arity arguments, got ${args.length}")
-        builder(args)
-      })
+    WindowExtensions.describe(classOf[GraftExtensions], name, usage, arity)(builder)
 
   /** A static parameter: foldable integral expression → Int. */
   private def intArg(fn: String, what: String, e: Expression): Int = {
@@ -83,22 +75,7 @@ object GraftExtensions {
     }
   }
 
-  /** A static parameter: foldable numeric expression → Double (SQL `0.5`
-    * parses as DECIMAL(1,1), so Decimal unwraps here too). */
-  private def doubleArg(fn: String, what: String, e: Expression): Double = {
-    require(e.foldable, s"$fn: $what must be a literal, got ${e.sql}")
-    (e.eval(), e.dataType) match {
-      case (d: java.lang.Double, DoubleType) => d.doubleValue()
-      case (f: java.lang.Float, FloatType) => f.doubleValue()
-      case (d: org.apache.spark.sql.types.Decimal, _: DecimalType) => d.toDouble
-      case (i: Integer, IntegerType) => i.doubleValue()
-      case (l: java.lang.Long, LongType) => l.doubleValue()
-      case (v, t) => throw new IllegalArgumentException(
-        s"$fn: $what must be a non-null numeric literal, got $v: ${t.simpleString}")
-    }
-  }
-
-  val descriptions: Seq[Description] = Seq(
+  val descriptions: Seq[Description] = WindowExtensions.descriptions ++ Seq(
     describe("graft_word_grams",
       "graft_word_grams(words array<string>, n int) - 64-bit hashes of the word n-grams",
       arity = 2) { args => WordGramHashes(args.head, intArg("graft_word_grams", "n", args(1))) },
@@ -120,11 +97,6 @@ object GraftExtensions {
       HyperplaneSignature(args.head,
         intArg("graft_hyperplane_sig", "planes", args(1)),
         intArg("graft_hyperplane_sig", "seed", args(2)))
-    },
-    describe("graft_percentile_disc",
-      "graft_percentile_disc(x, p) - running discrete percentile (reference UDAF semantics)",
-      arity = 2) { args =>
-      ExactPercentileAgg(args.head, doubleArg("graft_percentile_disc", "p", args(1)), discrete = true)
     },
     describe("graft_nfc",
       "graft_nfc(text string) - Unicode NFC normalization (ASCII/already-NFC pass through)",

@@ -1,23 +1,22 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
-
-import graft.functions.ExactPercentileAgg
 
 /** The window-aggregation engine: WindowQuerySpec → DataFrame transform.
   *
   * Spark-first re-expression of the reference's execution path
-  * (WindowsAggregationUtil.java:49-91): one WindowSpec shared by every
-  * aggregate, and one `select` laid out like [[SqlEmitter]]'s (`layout`)
-  * instead of one `withColumn` per aggregate: both backends share one layout
-  * rule, Spark analyses the plan once, and the aggregates share one Window
-  * node (one `Exchange hashpartitioning(partitionFields)` + one sort), so N
-  * aggregates over the same clause cost one shuffle, not N. An input Catalyst
-  * estimates at or below [[OneTaskBytes]] is read as one partition instead,
-  * and then there is no shuffle at all (see there).
+  * (WindowsAggregationUtil.java:49-91). The engine runs the Spark dialect's
+  * select items ([[SqlEmitter]]'s `items`, the one map from the 14 functions
+  * to Spark) as one `selectExpr`, instead of one `withColumn` per aggregate:
+  * every aggregate has the same OVER clause, Spark analyses the plan once,
+  * and the aggregates share one Window node (one
+  * `Exchange hashpartitioning(partitionFields)` + one sort), so N aggregates
+  * over the same clause cost one shuffle, not N. The items call the
+  * percentile kernel by its SQL names, which [[run]] installs on the input's
+  * session ([[WindowExtensions.install]]), so `run` works on any session. An
+  * input Catalyst estimates at or below [[OneTaskBytes]] is read as one
+  * partition instead, and then there is no shuffle at all (see there).
   *
   * Scale notes (100 TB design):
   *  - One shuffle per window clause: the hash partition on `partitionFields`.
@@ -40,7 +39,7 @@ import graft.functions.ExactPercentileAgg
   *    moves: O(width) per row (ACCUMULATE over 100k rows: 0.53 s at ±3 rows,
   *    4.1 s at ±1000).
   *  - MEDIAN, CONTINUOUS_PERCENTILE and DISCRETE_PERCENTILE are one
-  *    TypedImperativeAggregate over the shared spec
+  *    TypedImperativeAggregate over the shared OVER clause
   *    ([[graft.functions.ExactPercentileAgg]]): Spark `percentile`'s exact
   *    interpolation (continuous) or the reference UDAF's semantics (discrete),
   *    null inputs skipped. Its buffer is a sorted value → count table held in
@@ -59,7 +58,13 @@ object WindowEngine {
     * ALL accumulated failures ([[Validator.requireValid]]). */
   def run(df: DataFrame, spec: WindowQuerySpec): DataFrame = {
     Validator.requireValid(spec, df.schema)
-    applyUnchecked(df, spec)
+    WindowExtensions.install(df.sparkSession)
+    val input = if (sizeEstimate(df) <= OneTaskBytes) df.coalesce(1) else df
+    val out = input.selectExpr(SqlEmitter.items(spec, df.schema): _*)
+    spec.numberOfPartitions match {
+      case Some(n) => out.repartition(n) // reference knob: WindowsAggregationUtil.java:84-90
+      case None    => out
+    }
   }
 
   /** Field-level lineage for a spec: one record per aggregate describing the
@@ -105,17 +110,8 @@ object WindowEngine {
     agg.fn.declaredOutput.getOrElse(
       input.fields.find(_.name == agg.field).map(_.dataType).getOrElse(NullType))
 
-  /** Whether Spark's result type differs from [[aggregateOutputType]], so
-    * both backends cast: PERCENT_RANK (declared FLOAT,
-    * WindowAggregationConfig.java:333; Spark computes DOUBLE) and ACCUMULATE
-    * (declared = input type, :398; sum widens int→long). EngineSpec checks
-    * that the other 12 match; a no-op cast is not free (Catalyst drops it
-    * but keeps the renaming Project it split off above the Window). */
-  private[graft] def castsToDeclared(fn: WindowFn): Boolean =
-    fn == WindowFn.PercentRank || fn == WindowFn.Accumulate
-
   /** Catalyst's size estimate of the input (`analyzed.stats.sizeInBytes`) at
-    * or below which the engine applies `coalesce(1)` before its `select`.
+    * or below which the engine applies `coalesce(1)` before its `selectExpr`.
     * `Coalesce 1` reports `SinglePartition`, which satisfies the Window's
     * clustered distribution, so Spark plans no Exchange: one stage and one
     * task instead of a map stage, a shuffle write and a shuffle read that AQE
@@ -151,88 +147,4 @@ object WindowEngine {
     * and SkewSafe's `SaltBytes` (see [[OneTaskBytes]] for why the analyzed
     * plan's). */
   private[graft] def sizeEstimate(df: DataFrame): BigInt = df.queryExecution.analyzed.stats.sizeInBytes
-
-  private def applyUnchecked(df: DataFrame, spec: WindowQuerySpec): DataFrame = {
-    val shared = buildWindowSpec(spec)
-    val input = if (sizeEstimate(df) <= OneTaskBytes) df.coalesce(1) else df
-    val out = input.select(layout(df.schema, spec).map {
-      case (f, None) => field(f.name)
-      case (f, Some(agg)) =>
-        // Cast AFTER .over(): wrapping the aggregate in a Cast before .over()
-        // would hide it from Spark's window-expression extraction.
-        val overCol = column(agg).over(shared)
-        (if (castsToDeclared(agg.fn)) overCol.cast(f.dataType) else overCol).as(agg.alias)
-    }: _*)
-    spec.numberOfPartitions match {
-      case Some(n) => out.repartition(n) // reference knob: WindowsAggregationUtil.java:84-90
-      case None    => out
-    }
-  }
-
-  /** partition + order + frame → WindowSpec. Unbounded sentinels
-    * (Long.MinValue/MaxValue) pass through verbatim — they ARE Spark's
-    * Window.unboundedPreceding/unboundedFollowing. */
-  private def buildWindowSpec(spec: WindowQuerySpec): WindowSpec = {
-    val partitioned = Window.partitionBy(spec.partitionFields.map(field): _*)
-    val ordered =
-      if (spec.order.isEmpty) partitioned
-      else partitioned.orderBy(spec.order.map(orderColumn): _*)
-    spec.frame.frameType match {
-      case FrameType.NoFrame => ordered
-      case FrameType.Row     => ordered.rowsBetween(spec.frame.startBound, spec.frame.endBound)
-      case FrameType.Range   => ordered.rangeBetween(spec.frame.startBound, spec.frame.endBound)
-    }
-  }
-
-  private def orderColumn(o: OrderSpec): Column = o.direction match {
-    case SortDirection.Ascending  => field(o.field).asc
-    case SortDirection.Descending => field(o.field).desc
-  }
-
-  /** A top-level field by its exact name: backtick-quoted (inner backticks
-    * doubled), so a name like `a.b` is one column, not a struct path. */
-  private def field(name: String): Column = col(s"`${name.replace("`", "``")}`")
-
-  /** Function → Column (reference dispatch: WindowsAggregationUtil.java:126-179). */
-  private def column(agg: AggregateSpec): Column = agg.fn match {
-    case WindowFn.Rank        => rank()
-    case WindowFn.DenseRank   => dense_rank()
-    case WindowFn.PercentRank => percent_rank()
-    case WindowFn.NTile       => ntile(count(agg))
-    case WindowFn.RowNumber   => row_number()
-    // Exact percentile (Hive-style interpolation), NOT approx_percentile —
-    // reference uses callUDF("percentile", ...) (WindowsAggregationUtil.java:140-147);
-    // the kernel reproduces Spark's `percentile` arithmetic bit for bit.
-    case WindowFn.Median                => exactPercentile(agg, 0.5, discrete = false)
-    case WindowFn.ContinuousPercentile  => exactPercentile(agg, fraction(agg), discrete = false)
-    case WindowFn.Lead        => lead(field(agg.field), count(agg))
-    case WindowFn.Lag         => lag(field(agg.field), count(agg))
-    case WindowFn.First       => first(field(agg.field), firstLastIgnoreNulls(agg))
-    case WindowFn.Last        => last(field(agg.field), firstLastIgnoreNulls(agg))
-    case WindowFn.CumulativeDistribution => cume_dist()
-    case WindowFn.Accumulate  => sum(field(agg.field))
-    // The reference UDAF's semantics (DiscretePercentile.java) — over the
-    // SAME shared spec, so with an order clause it evaluates per row on the
-    // default running RANGE frame, exactly like the reference's .over(spec)
-    // application (WindowsAggregationUtil.java:119-124).
-    case WindowFn.DiscretePercentile    => exactPercentile(agg, fraction(agg), discrete = true)
-  }
-
-  // a validated aggregate's argument, as WindowFn.parseArg read it
-  private def count(agg: AggregateSpec) = (agg.arg: @unchecked) match { case Right(Some(FnArg.Count(n))) => n }
-  private def fraction(agg: AggregateSpec) = (agg.arg: @unchecked) match { case Right(Some(FnArg.Fraction(p))) => p }
-
-  private def exactPercentile(agg: AggregateSpec, p: Double, discrete: Boolean): Column =
-    GraftColumnBridge.column(
-      ExactPercentileAgg(GraftColumnBridge.expression(field(agg.field)), p, discrete)
-        .toAggregateExpression())
-
-  /** FIRST/LAST ignoreNulls: config flag OR'd with an optional boolean arg
-    * (reference: WindowsAggregationUtil.java:158-171, and the pushdown's
-    * WindowAggregation.java:640-645). Parsed like Java's
-    * Boolean.parseBoolean — true iff the literal "true", never throws (the
-    * e2e fixture passes "1" here). Shared with [[SqlEmitter]]. */
-  private[graft] def firstLastIgnoreNulls(agg: AggregateSpec): Boolean =
-    agg.ignoreNulls || agg.args.headOption.exists(_.equalsIgnoreCase("true"))
-
 }

@@ -70,7 +70,7 @@ case class ExactPercentileAgg(
   /** The input-type rule of the function each mode serves, casting nothing:
     * DISCRETE_PERCENTILE's, or MEDIAN's, the wider of the two continuous
     * ones. p must lie in [0, 1] in both modes: SQL reaches the kernel as
-    * `graft_percentile_disc` without the validator. */
+    * `graft_percentile` and `graft_percentile_disc` without the validator. */
   override def checkInputDataTypes(): TypeCheckResult = {
     val input = (if (discrete) WindowFn.DiscretePercentile else WindowFn.Median).input
     if (!(percentile >= 0.0 && percentile <= 1.0))

@@ -122,7 +122,11 @@ object Validator {
     * such a frame at analysis), and ANY bounded RANGE frame (true value
     * offsets) needs a single NUMERIC order key — matches Spark's own
     * rangeBetween restriction (reference states it in prose,
-    * WindowAggregationConfig.java:53-56).
+    * WindowAggregationConfig.java:53-56). Bounds Spark would reject later
+    * are rejected here: a ROW bound must lie within ±2147483647 (Spark's
+    * INVALID_BOUNDARY; its SQL text fails analysis from 2147483648
+    * PRECEDING), and a RANGE offset over an INT order key must fit in an INT
+    * (Spark's CAST_OVERFLOW at run time).
     */
   private def validateSpecialCase(
       spec: WindowQuerySpec, fieldTypes: Map[String, DataType]): Seq[ValidationFailure] = {
@@ -133,6 +137,17 @@ object Validator {
         s"Window frame start ${spec.frame.startBound} must not be after frame end ${spec.frame.endBound}.",
         "Use negative values for preceding bounds, e.g. -2 for 2 preceding.")
     val range = spec.frame.frameType == FrameType.Range
+    // Generalized guard: only true VALUE offsets constrain all other
+    // functions; unbounded sentinels and current-row (0) endpoints are legal
+    // with any order keys (RANGE UNBOUNDED PRECEDING AND CURRENT ROW is
+    // Spark's own default).
+    def isValueOffset(b: Long) = b != Long.MinValue && b != Long.MaxValue && b != 0L
+    val offsets = Seq(spec.frame.startBound, spec.frame.endBound).filter(isValueOffset)
+    if (!range)
+      for (b <- offsets if b < -Int.MaxValue || b > Int.MaxValue)
+        fs += ValidationFailure(
+          s"ROW frame bound $b must lie within -2147483647 and 2147483647.",
+          "Use an unbounded frame side for a larger bound.")
     // Reference rule: ACCUMULATE with a RANGE frame of ANY bounds (including
     // unbounded sentinels) demands exactly one ordering clause.
     if (range && spec.aggregates.exists(_.fn == WindowFn.Accumulate) && spec.order.size != 1)
@@ -140,21 +155,24 @@ object Validator {
         "partitionOrder needs to have exactly one clause when using RANGE frametype " +
           "for function ACCUMULATE.",
         "Make sure there is only 1 ordering field.")
-    // Generalized guard: only true VALUE offsets constrain all other
-    // functions; unbounded sentinels and current-row (0) endpoints are legal
-    // with any order keys (RANGE UNBOUNDED PRECEDING AND CURRENT ROW is
-    // Spark's own default).
-    def isValueOffset(b: Long) = b != Long.MinValue && b != Long.MaxValue && b != 0L
-    val bounded = range &&
-      (isValueOffset(spec.frame.startBound) || isValueOffset(spec.frame.endBound))
-    if (bounded) {
+    if (range && offsets.nonEmpty) {
       if (spec.order.size != 1)
         fs += ValidationFailure(
           "A bounded RANGE frame requires exactly one order clause.",
           "Provide a single numeric order field.")
-      else if (!fieldTypes.get(spec.order.head.field).exists(InputTypes.Numeric.accepts))
-        fs += ValidationFailure(
-          s"RANGE frame order field '${spec.order.head.field}' must be numeric (int, long, float, double).")
+      else {
+        val key = spec.order.head.field
+        fieldTypes.get(key) match {
+          case Some(IntegerType) =>
+            for (b <- offsets if !b.isValidInt)
+              fs += ValidationFailure(
+                s"RANGE frame offset $b does not fit the int order field '$key'.",
+                "Use an offset within -2147483648 and 2147483647, or a long order field.")
+          case Some(t) if InputTypes.Numeric.accepts(t) =>
+          case _ =>
+            fs += ValidationFailure(s"RANGE frame order field '$key' must be numeric (int, long, float, double).")
+        }
+      }
     }
     fs.result()
   }

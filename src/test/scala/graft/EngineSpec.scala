@@ -251,6 +251,52 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("run installs its window functions on a session without them, once, and plans the kernel") {
+    import org.apache.spark.sql.GraftFunctionBridge
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Percentile}
+    // a new session shares the context but not the function registry
+    val fresh = spark.newSession()
+    val names = WindowExtensions.descriptions.map(_._1)
+    assert(names.map(_.funcName) == Seq("graft_percentile", "graft_percentile_disc"))
+    assert(names.forall(GraftFunctionBridge.lookup(fresh, _).isEmpty))
+    val in = fresh.createDataFrame(df.rdd, df.schema)
+    val want = everyFunction.map(spec => sortedRows(WindowEngine.run(df, spec)))
+    val outs = everyFunction.map(WindowEngine.run(in, _))
+    assert(outs.map(sortedRows) == want)
+    val aggs = outs.flatMap(_.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case a: AggregateExpression => a.aggregateFunction
+    })))
+    assert(aggs.collect { case k: ExactPercentileAgg => (k.discrete, k.percentile) }.sorted ==
+      Seq((false, 0.5), (false, 0.5), (true, 0.5)), aggs) // MEDIAN, CONTINUOUS_PERCENTILE, DISCRETE_PERCENTILE
+    assert(!aggs.exists(_.isInstanceOf[Percentile]), aggs)
+    // a second run registers nothing: a function already there under the
+    // same class stays the one registered
+    val ident = names.head
+    val (_, info, builder) = WindowExtensions.descriptions.head
+    val copy = new ExpressionInfo(info.getClassName, null, ident.funcName, info.getUsage, "")
+    GraftFunctionBridge.register(fresh, ident, copy, builder)
+    WindowEngine.run(in, everyFunction.last)
+    assert(GraftFunctionBridge.lookup(fresh, ident).exists(_ eq copy))
+    assert(fresh.catalog.listFunctions().collect().count(f => names.exists(_.funcName == f.name)) == 2)
+    // a foreign function of the same name is replaced by the kernel
+    GraftFunctionBridge.register(fresh, ident, new ExpressionInfo("other.Fn", ident.funcName), builder)
+    assert(sortedRows(WindowEngine.run(in, everyFunction.last)) == want.last)
+    assert(GraftFunctionBridge.lookup(fresh, ident).map(_.getClassName) == Some(info.getClassName))
+  }
+
+  test("run rejects a ROW bound past ±2147483647 and a RANGE offset past its INT order key") {
+    def acc(frame: FrameSpec) = WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), frame,
+      Seq(AggregateSpec("s", WindowFn.Accumulate, "ord")))
+    for (frame <- Seq(FrameSpec(FrameType.Row, Some(-(1L << 31)), Some(0L)),
+        FrameSpec(FrameType.Row, Some(0L), Some(3000000000L)),
+        FrameSpec(FrameType.Range, Some(-3000000000L), Some(0L)),
+        FrameSpec(FrameType.Range, Some(0L), Some(1L << 31)))) {
+      val e = intercept[GraftValidationException](WindowEngine.run(df, acc(frame)))
+      assert(e.failures.size == 1, e.getMessage)
+    }
+  }
+
   test("one select: the analyzed plan has one Window node and the same shape for 1 aggregate as for 13") {
     import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
     // every function an ordered spec takes, two of them cast to their declared type

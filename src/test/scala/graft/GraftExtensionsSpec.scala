@@ -113,6 +113,28 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("graft_percentile resolves from SQL, matches Spark's percentile, and rejects p outside [0, 1]") {
+    withRegistered {
+      import spark.implicits._
+      Seq(("a", 1, 10.0), ("a", 2, 25.0), ("a", 3, 30.0), ("b", 1, 5.0))
+        .toDF("k", "ord", "v").createOrReplaceTempView("ext_pc")
+      val rows = spark.sql(
+        """SELECT k, ord,
+          |       graft_percentile(v, 0.25) OVER (PARTITION BY k ORDER BY ord) AS gp,
+          |       percentile(v, 0.25) OVER (PARTITION BY k ORDER BY ord) AS sp
+          |FROM ext_pc""".stripMargin).collect()
+      assert(rows.length == 4)
+      for (r <- rows) assert(r.getDouble(2) == r.getDouble(3), r)
+      // running: a → [10]=10, [10,25]=13.75, [10,25,30]=17.5
+      assert(rows.map(r => (r.getString(0), r.getInt(1)) -> r.getDouble(2)).toMap ==
+        Map(("a", 1) -> 10.0, ("a", 2) -> 13.75, ("a", 3) -> 17.5, ("b", 1) -> 5.0))
+      for (p <- Seq("1.5", "-0.1")) {
+        val e = intercept[Exception](spark.sql(s"SELECT graft_percentile(v, $p) FROM ext_pc").collect())
+        assert(e.getMessage.contains("percentile must be in [0, 1]"), e.getMessage)
+      }
+    }
+  }
+
   test("graft_heavy_hitters aggregates in SQL and matches the operator") {
     withRegistered {
       import spark.implicits._

@@ -213,7 +213,7 @@ class SqlEmitterSpec extends AnyFunSuite {
       bq.contains("AS FLOAT64) AS `rund`"))
     assert(!bq.contains("AS FLOAT)") && !bq.contains("AS DOUBLE)") && !bq.contains("AS INT)"))
     val sp = SqlEmitter.emit(spec, "t", df.schema, SqlEmitter.Dialect.Spark)
-    assert(sp.contains("AS FLOAT) AS pr") && sp.contains("AS INT) AS runi"))
+    assert(sp.contains("AS FLOAT) AS `pr`") && sp.contains("AS INT) AS `runi`"))
   }
 
   test("frame bounds render the reference sign convention") {
@@ -223,7 +223,7 @@ class SqlEmitterSpec extends AnyFunSuite {
     val sql = SqlEmitter.emit(spec, "t", df.schema)
     assert(sql.contains("RANGE BETWEEN 5 PRECEDING AND 3 FOLLOWING"))
     // ACCUMULATE casts the whole windowed expression back to the input type
-    assert(sql.contains("CAST(SUM(ord) OVER") && sql.contains("AS INT) AS s"))
+    assert(sql.contains("CAST(SUM(`ord`) OVER") && sql.contains("AS INT) AS `s`"))
   }
 
   test("emitted Spark SQL is engine-parity across randomized specs") {
@@ -311,8 +311,8 @@ class SqlEmitterSpec extends AnyFunSuite {
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("v")),
       aggregates = Seq(AggregateSpec("dp", WindowFn.DiscretePercentile, "v", Seq("0.5"))))
     val sql = SqlEmitter.emit(spec, "t", df.schema)
-    assert(sql == "SELECT k, ord, v, graft_percentile_disc(v, 0.5) " +
-      "OVER (PARTITION BY k ORDER BY v ASC) AS dp FROM t")
+    assert(sql == "SELECT `k`, `ord`, `v`, graft_percentile_disc(`v`, 0.5) " +
+      "OVER (PARTITION BY `k` ORDER BY `v` ASC) AS `dp` FROM t")
     assertParity(spec)
     // running, nulls skipped: a → [null]=null, [10]=10, [10,20]=10, [10,20,30]=20; b → 5, 5
     df.createOrReplaceTempView("t")
@@ -332,7 +332,7 @@ class SqlEmitterSpec extends AnyFunSuite {
       AggregateSpec("dp", WindowFn.DiscretePercentile, "v", Seq("0x1p-1"))))
     import SqlEmitter.Dialect._
     for ((dialect, v, cp, dp) <- Seq(
-        (Spark, "v", "percentile(v, 0.5)", "graft_percentile_disc(v, 0.5)"),
+        (Spark, "`v`", "percentile(`v`, 0.5)", "graft_percentile_disc(`v`, 0.5)"),
         (BigQuery, "`v`", "PERCENTILE_CONT(`v`, 0.5)", "PERCENTILE_DISC(`v`, 0.5)"),
         (DuckDb, "\"v\"", "quantile_cont(CAST(\"v\" AS DOUBLE), 0.5)", "quantile_disc(\"v\", 0.5)"))) {
       assert(SqlEmitter.emit(unordered, "t", df.schema, dialect).contains(s"$cp OVER"), dialect)
@@ -343,15 +343,15 @@ class SqlEmitterSpec extends AnyFunSuite {
     assertParity(ordered)
   }
 
-  test("DuckDb and BigQuery quote every name; Spark quotes only non-plain names") {
+  test("every dialect quotes every name") {
     val odd = df.withColumnRenamed("v", "a.b").withColumnRenamed("ord", "o`rd")
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("o`rd")), aggregates = Seq(
       AggregateSpec("my sum", WindowFn.Accumulate, "a.b"),
       AggregateSpec("a.b", WindowFn.Lag, "a.b", Seq("1"))))
     def emit(d: SqlEmitter.Dialect) = SqlEmitter.emit(spec, "t", odd.schema, d)
-    assert(emit(SqlEmitter.Dialect.Spark) == "SELECT k, `o``rd`, " +
-      "LAG(`a.b`, 1) OVER (PARTITION BY k ORDER BY `o``rd` ASC) AS `a.b`, " +
-      "CAST(SUM(`a.b`) OVER (PARTITION BY k ORDER BY `o``rd` ASC) AS DOUBLE) AS `my sum` FROM t")
+    assert(emit(SqlEmitter.Dialect.Spark) == "SELECT `k`, `o``rd`, " +
+      "LAG(`a.b`, 1) OVER (PARTITION BY `k` ORDER BY `o``rd` ASC) AS `a.b`, " +
+      "CAST(SUM(`a.b`) OVER (PARTITION BY `k` ORDER BY `o``rd` ASC) AS DOUBLE) AS `my sum` FROM t")
     assert(emit(SqlEmitter.Dialect.DuckDb) == "SELECT \"k\", \"o`rd\", " +
       "LAG(\"a.b\", 1) OVER (PARTITION BY \"k\" ORDER BY \"o`rd\" ASC NULLS FIRST) AS \"a.b\", " +
       "CAST(SUM(\"a.b\") OVER (PARTITION BY \"k\" ORDER BY \"o`rd\" ASC NULLS FIRST) AS DOUBLE) AS \"my sum\" FROM t")
@@ -366,8 +366,8 @@ class SqlEmitterSpec extends AnyFunSuite {
   }
 
   test("SQL keywords as names: one result from the engine, spark.sql and DuckDB") {
-    // DuckDB reserves these words and Spark does not: bare, the DuckDb text
-    // is a syntax error there
+    // DuckDB reserves these words and Spark does not by default: bare, the
+    // DuckDb text is a syntax error there
     val words = Seq(("x", 1L, 3.0), ("x", 2L, 1.0), ("x", 2L, 4.0), ("y", 5L, 2.0), ("y", 7L, 6.0))
       .toDF("order", "from", "v")
     val spec = WindowQuerySpec(Seq("order"), Seq(OrderSpec("from")), aggregates = Seq(
@@ -382,6 +382,15 @@ class SqlEmitterSpec extends AnyFunSuite {
     assert(viaSql.collect().toSet == rows.toSet)
     val Seq(duck) = viaDuckDb(words, "t", Seq(SqlEmitter.emit(spec, "t", words.schema, SqlEmitter.Dialect.DuckDb)))
     assert(duckMismatch(engine.schema, rows, duck).isEmpty, duck)
+    // Spark reserves them too under enforceReservedKeywords: the engine and
+    // the Spark text still run, and give the same rows
+    val conf = "spark.sql.ansi.enforceReservedKeywords"
+    val prior = spark.conf.getOption(conf)
+    spark.conf.set(conf, "true")
+    try {
+      assert(WindowEngine.run(words, spec).collect().toSet == rows.toSet)
+      assert(spark.sql(SqlEmitter.emit(spec, "t", words.schema)).collect().toSet == rows.toSet)
+    } finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
     // BigQuery reserves them too; nothing here runs BigQuery, so the text is pinned
     assert(SqlEmitter.emit(spec, "t", words.schema, SqlEmitter.Dialect.BigQuery) ==
       "SELECT `order`, `from`, `v`, RANK() OVER (PARTITION BY `order` ORDER BY `from` ASC) AS `rnk`, " +
@@ -441,7 +450,10 @@ class SqlEmitterSpec extends AnyFunSuite {
       alias <- Gen.frequency(3 -> Gen.oneOf("x", "y", "z", "w", "my col", "select"), 2 -> Gen.oneOf(cols),
         1 -> Gen.oneOf("K", "D", "X"))
     } yield AggregateSpec(alias, fn, field, a, ignoreNulls)
-    val bound = Gen.oneOf(None, Some(-3L), Some(-1L), Some(0L), Some(2L), Some(4L))
+    // and bounds past an INT, which Spark rejects for a ROW frame and for a
+    // RANGE frame over an INT order key
+    val bound = Gen.oneOf(None, Some(-3L), Some(-1L), Some(0L), Some(2L), Some(4L),
+      Some(-(1L << 31)), Some(1L << 31), Some(-3000000000L), Some(3000000000L))
     val frameGen: Gen[FrameSpec] = Gen.frequency(
       4 -> Gen.const(FrameSpec()),
       2 -> (for {

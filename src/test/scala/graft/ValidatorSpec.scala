@@ -176,6 +176,35 @@ class ValidatorSpec extends AnyFunSuite {
     }
   }
 
+  test("a ROW bound past ±2147483647 is rejected; the unbounded sentinels are not") {
+    def acc = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))
+    def check(frame: FrameSpec) = Validator.validate(spec(frame = frame, aggs = acc), schema).map(_.message)
+    val limit = Int.MaxValue.toLong
+    assert(check(FrameSpec(FrameType.Row, Some(-limit), Some(limit))).isEmpty)
+    assert(check(FrameSpec(FrameType.Row, unboundedPreceding = true, unboundedFollowing = true)).isEmpty)
+    // -2147483648 is a bound Spark's Column API takes, but its SQL text
+    // `2147483648 PRECEDING` fails analysis
+    for (b <- Seq(-limit - 1, -3000000000L, limit + 1, 3000000000L)) {
+      val frame = if (b < 0) FrameSpec(FrameType.Row, Some(b), Some(0L)) else FrameSpec(FrameType.Row, Some(0L), Some(b))
+      assert(check(frame) == Seq(s"ROW frame bound $b must lie within -2147483647 and 2147483647."))
+    }
+    assert(check(FrameSpec(FrameType.Row, Some(-3000000000L), Some(3000000000L))).size == 2)
+  }
+
+  test("a RANGE offset over an INT order key must fit in an INT") {
+    def acc = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))
+    def check(key: String, frame: FrameSpec) =
+      Validator.validate(spec(order = Seq(OrderSpec(key)), frame = frame, aggs = acc), schema).map(_.message)
+    assert(check("i", FrameSpec(FrameType.Range, Some(Int.MinValue.toLong), Some(Int.MaxValue.toLong))).isEmpty)
+    for (b <- Seq(Int.MinValue - 1L, -3000000000L, Int.MaxValue + 1L, 3000000000L)) {
+      val frame = if (b < 0) FrameSpec(FrameType.Range, Some(b), Some(0L)) else FrameSpec(FrameType.Range, Some(0L), Some(b))
+      assert(check("i", frame) == Seq(s"RANGE frame offset $b does not fit the int order field 'i'."))
+      // a DOUBLE order key takes it, and so does an unbounded frame over the INT key
+      assert(check("v", frame).isEmpty)
+    }
+    assert(check("i", FrameSpec(FrameType.Range, unboundedPreceding = true, unboundedFollowing = true)).isEmpty)
+  }
+
   test("MEDIAN takes any numeric input, and no string") {
     // DuckDB's quantile_cont has no VARCHAR overload, and on Spark one
     // non-numeric string fails the whole job at run time
