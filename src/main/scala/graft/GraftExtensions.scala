@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{GraftFunctionBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.functions._
@@ -47,11 +47,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   import WindowExtensions.Description
 
-  /** Register every graft function on an already-built session. */
-  def register(spark: SparkSession): Unit =
-    descriptions.foreach { case (ident, info, builder) =>
-      GraftFunctionBridge.register(spark, ident, info, builder)
-    }
+  /** Register every graft function on an already-built session: one already
+    * there under the same class stays, any other of the same name is replaced
+    * ([[WindowExtensions.install]]). */
+  def register(spark: SparkSession): Unit = WindowExtensions.install(spark, descriptions)
 
   private def describe(name: String, usage: String, arity: Int)(
       builder: Seq[Expression] => Expression): Description =

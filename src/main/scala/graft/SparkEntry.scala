@@ -4748,7 +4748,7 @@ object SparkEntry {
       "run_qty:accumulate(l_quantity,,)"
 
   private lazy val winDefs: Map[String, WinDef] = {
-    def flagDef(aggs: Seq[AggregateSpec], frame: FrameSpec = FrameSpec(),
+    def flagDef(aggs: Seq[AggregateSpec], frame: Option[FrameSpec] = None,
         order: Seq[OrderSpec] = tieFreeOrder, extraCols: Seq[String] = Seq.empty) =
       WinDef(WindowQuerySpec(Seq("l_returnflag"), order, frame, aggs),
         liOutCols ++ extraCols ++ aggs.map(_.alias))
@@ -4781,7 +4781,7 @@ object SparkEntry {
         suppOut :+ "frst"),
       "q12_last" -> WinDef(
         WindowQuerySpec(Seq("l_suppkey"), tieFreeOrder,
-          frame = FrameSpec(FrameType.Row, unboundedPreceding = true, unboundedFollowing = true),
+          frame = Some(FrameSpec(FrameType.Row, FrameSpec.UnboundedPreceding, FrameSpec.UnboundedFollowing)),
           aggregates = Seq(AggregateSpec("lst", WindowFn.Last, "l_extendedprice"))),
         suppOut :+ "lst"),
       "q13_cume_dist" -> flagDef(
@@ -4795,11 +4795,11 @@ object SparkEntry {
         Seq("l_orderkey", "l_linenumber", "l_suppkey", "l_quantity", "run_qty")),
       "q15_frame_rows" -> flagDef(
         Seq(AggregateSpec("qty_3row", WindowFn.Accumulate, "l_quantity")),
-        frame = FrameSpec(FrameType.Row, preceding = Some(-2L), following = Some(0L)),
+        frame = Some(FrameSpec(FrameType.Row, -2L, 0L)),
         extraCols = Seq("l_quantity")),
       "q16_frame_range" -> flagDef(
         Seq(AggregateSpec("qty_range", WindowFn.Accumulate, "l_quantity")),
-        frame = FrameSpec(FrameType.Range, preceding = Some(-5L), following = Some(0L)),
+        frame = Some(FrameSpec(FrameType.Range, -5L, 0L)),
         order = Seq(OrderSpec("l_quantity")),
         extraCols = Seq("l_quantity")),
       "q17_dsl" -> WinDef(q17Spec,

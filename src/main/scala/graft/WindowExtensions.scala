@@ -58,11 +58,12 @@ object WindowExtensions {
     percentile("graft_percentile_disc", discrete = true,
       "running discrete percentile (reference UDAF semantics)"))
 
-  /** Registers [[descriptions]] on `spark` unless they are there already, as
-    * a planner rule is added once to a session that already exists. Any
-    * other function of the same name is replaced. */
-  def install(spark: SparkSession): Unit =
-    for ((ident, info, builder) <- descriptions
+  /** Registers each of `ds` on `spark` unless a function of its name is there
+    * under its class already, as a planner rule is added once to a session
+    * that already exists. Any other function of the same name is replaced.
+    * [[GraftExtensions.register]] installs all of its functions this way. */
+  def install(spark: SparkSession, ds: Seq[Description] = descriptions): Unit =
+    for ((ident, info, builder) <- ds
          if !GraftFunctionBridge.lookup(spark, ident).exists(_.getClassName == info.getClassName))
       GraftFunctionBridge.register(spark, ident, info, builder)
 }

@@ -167,10 +167,6 @@ object VectorFunctions {
   def dot_product(a: Column, b: Column): Column =
     GraftColumnBridge.column(DotProduct(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 
-  /** L2 norm via the same codegen'd loop. */
-  def l2_norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dot_product(a, a))
-
   /** Column API for [[HyperplaneSignature]]. */
   def hyperplane_signature(v: Column, numPlanes: Int, seedOffset: Int = 0): Column =
     GraftColumnBridge.column(

@@ -128,7 +128,11 @@ object DslParser {
   }
 
   /** Parse a complete spec from config-style strings — the closest analogue of
-    * the reference's full config surface. */
+    * the reference's full config surface, and the one reader of its five frame
+    * settings (WindowAggregationConfig.java:142-175). They make one frame:
+    *  - `windowFrameType` NONE (or empty) is no frame, whatever bounds are set;
+    *  - an unbounded flag overrides its bound's value;
+    *  - a missing bound is the current row. */
   def parseSpec(
       partitionFields: String,
       partitionOrder: String = "",
@@ -143,15 +147,22 @@ object DslParser {
     val parts = partitionFields.split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val orderE = parseOrder(partitionOrder)
     val aggsE = parseAggregates(aggregates)
-    val frameE = FrameType.parse(windowFrameType)
-      .left.map(e => Seq(ValidationFailure(e)))
+    def frame(ft: FrameType) = Some(FrameSpec(ft,
+      if (unboundedPreceding) FrameSpec.UnboundedPreceding else preceding.getOrElse(0L),
+      if (unboundedFollowing) FrameSpec.UnboundedFollowing else following.getOrElse(0L)))
+    val frameE = windowFrameType.trim.toUpperCase match {
+      case "" | "NONE" => Right(None)
+      case "ROW"       => Right(frame(FrameType.Row))
+      case "RANGE"     => Right(frame(FrameType.Range))
+      case other       => Left(Seq(ValidationFailure(s"Invalid frame type '$other'. Must be NONE, ROW or RANGE.")))
+    }
 
     val failures = orderE.left.toSeq.flatten ++ aggsE.left.toSeq.flatten ++ frameE.left.toSeq.flatten
     if (failures.nonEmpty) Left(failures)
     else Right(WindowQuerySpec(
       partitionFields = parts,
       order = orderE.toOption.get,
-      frame = FrameSpec(frameE.toOption.get, preceding, following, unboundedPreceding, unboundedFollowing),
+      frame = frameE.toOption.get,
       aggregates = aggsE.toOption.get,
       numberOfPartitions = numberOfPartitions))
   }

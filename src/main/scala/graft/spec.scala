@@ -4,9 +4,10 @@ import scala.util.Try
 
 import org.apache.spark.sql.types._
 
-/** Clause constraint for a window function clause (partition / order / frame).
+/** Clause constraint for a window function's order or frame clause.
   * Mirrors the reference rulebook's REQUIRED | OPTIONAL | NOT_SUPPORTED
-  * (reference: WindowAggregationConfig.java:312-316).
+  * (reference: WindowAggregationConfig.java:312-316); its partition clause is
+  * REQUIRED for every function, so it is not a per-function value here.
   */
 sealed trait Constraint
 object Constraint {
@@ -29,42 +30,35 @@ object SortDirection {
   }
 }
 
-/** Window frame type (reference: WindowAggregationConfig.java:142-147, default NONE). */
+/** Window frame type (reference: WindowAggregationConfig.java:142-147); the
+  * reference's NONE is a spec without a frame (`frame = None`). */
 sealed trait FrameType
 object FrameType {
-  case object NoFrame extends FrameType
-  case object Row     extends FrameType
-  case object Range   extends FrameType
-
-  def parse(s: String): Either[String, FrameType] = s.trim.toUpperCase match {
-    case "" | "NONE" => Right(NoFrame)
-    case "ROW"       => Right(Row)
-    case "RANGE"     => Right(Range)
-    case other       => Left(s"Invalid frame type '$other'. Must be NONE, ROW or RANGE.")
-  }
+  case object Row   extends FrameType
+  case object Range extends FrameType
 }
 
-/** Frame bounds. Bounds are *signed* pass-throughs exactly like the reference
-  * (users supply -2 for "2 preceding"); unbounded flags override to
-  * Long.MinValue / Long.MaxValue, which equal Spark's
-  * Window.unboundedPreceding / unboundedFollowing sentinels
-  * (reference: WindowAggregationConfig.java:157-175).
+/** A window frame as SQL writes it: one kind and two signed bounds. A bound is
+  * [[FrameSpec.UnboundedPreceding]], [[FrameSpec.UnboundedFollowing]], 0 (the
+  * current row), or an offset in the reference's sign convention: -2 is
+  * "2 preceding", 3 is "3 following". [[DslParser.parseSpec]] maps the
+  * reference's five frame settings to it (WindowAggregationConfig.java:142-175).
   */
-case class FrameSpec(
-    frameType: FrameType = FrameType.NoFrame,
-    preceding: Option[Long] = None,
-    following: Option[Long] = None,
-    unboundedPreceding: Boolean = false,
-    unboundedFollowing: Boolean = false) {
-  /** Frame start: unbounded sentinel, else the signed bound, else current row (0). */
-  def startBound: Long = if (unboundedPreceding) Long.MinValue else preceding.getOrElse(0L)
-  /** Frame end: unbounded sentinel, else the signed bound, else current row (0). */
-  def endBound: Long = if (unboundedFollowing) Long.MaxValue else following.getOrElse(0L)
+case class FrameSpec(frameType: FrameType, start: Long, end: Long) {
+  /** The bounds that are value offsets: neither unbounded nor the current row. */
+  def offsets: Seq[Long] =
+    Seq(start, end).filter(b => b != FrameSpec.UnboundedPreceding && b != FrameSpec.UnboundedFollowing && b != 0L)
+}
+object FrameSpec {
+  /** The unbounded sentinels; they equal Spark's `Window.unboundedPreceding`
+    * and `Window.unboundedFollowing`. */
+  val UnboundedPreceding: Long = Long.MinValue
+  val UnboundedFollowing: Long = Long.MaxValue
 }
 
-/** The 14 window functions of the reference, with their clause-constraint and
-  * type metadata (reference: WindowAggregationConfig.java:318-402 Function enum;
-  * clause table docs/WindowAggregation-sparkcompute.md:59-72).
+/** The 14 window functions of the reference, with their order and frame
+  * constraints and type metadata (reference: WindowAggregationConfig.java:318-402
+  * Function enum; clause table docs/WindowAggregation-sparkcompute.md:59-72).
   *
   * `declaredOutput`: Some(t) when the reference declares a fixed output type;
   * None means "inherits the input field's type". `input`: the types the
@@ -72,7 +66,6 @@ case class FrameSpec(
   */
 sealed abstract class WindowFn(
     val fnName: String,
-    val partition: Constraint,
     val order: Constraint,
     val frame: Constraint,
     val input: InputTypes,
@@ -103,23 +96,23 @@ object WindowFn {
   import Constraint._
   import InputTypes._
 
-  case object Rank          extends WindowFn("RANK", Required, Required, NotSupported, AnyType, Some(IntegerType))
-  case object DenseRank     extends WindowFn("DENSE_RANK", Required, Required, NotSupported, AnyType, Some(IntegerType))
-  case object PercentRank   extends WindowFn("PERCENT_RANK", Required, Required, NotSupported, AnyType, Some(FloatType))
-  case object NTile         extends WindowFn("N_TILE", Required, Required, NotSupported, Numeric, Some(IntegerType))
-  case object RowNumber     extends WindowFn("ROW_NUMBER", Required, Required, NotSupported, AnyType, Some(IntegerType))
-  case object Median        extends WindowFn("MEDIAN", Required, Required, NotSupported, AnyNumeric, Some(DoubleType))
+  case object Rank          extends WindowFn("RANK", Required, NotSupported, AnyType, Some(IntegerType))
+  case object DenseRank     extends WindowFn("DENSE_RANK", Required, NotSupported, AnyType, Some(IntegerType))
+  case object PercentRank   extends WindowFn("PERCENT_RANK", Required, NotSupported, AnyType, Some(FloatType))
+  case object NTile         extends WindowFn("N_TILE", Required, NotSupported, Numeric, Some(IntegerType))
+  case object RowNumber     extends WindowFn("ROW_NUMBER", Required, NotSupported, AnyType, Some(IntegerType))
+  case object Median        extends WindowFn("MEDIAN", Required, NotSupported, AnyNumeric, Some(DoubleType))
   case object ContinuousPercentile
-      extends WindowFn("CONTINUOUS_PERCENTILE", Required, NotSupported, NotSupported, Numeric, Some(DoubleType))
+      extends WindowFn("CONTINUOUS_PERCENTILE", NotSupported, NotSupported, Numeric, Some(DoubleType))
   case object DiscretePercentile
-      extends WindowFn("DISCRETE_PERCENTILE", Required, Required, NotSupported, Numeric, None)
-  case object Lead          extends WindowFn("LEAD", Required, Required, NotSupported, AnyType, None)
-  case object Lag           extends WindowFn("LAG", Required, Required, NotSupported, AnyType, None)
-  case object First         extends WindowFn("FIRST", Required, Required, Optional, AnyType, None)
-  case object Last          extends WindowFn("LAST", Required, Required, Optional, AnyType, None)
+      extends WindowFn("DISCRETE_PERCENTILE", Required, NotSupported, Numeric, None)
+  case object Lead          extends WindowFn("LEAD", Required, NotSupported, AnyType, None)
+  case object Lag           extends WindowFn("LAG", Required, NotSupported, AnyType, None)
+  case object First         extends WindowFn("FIRST", Required, Optional, AnyType, None)
+  case object Last          extends WindowFn("LAST", Required, Optional, AnyType, None)
   case object CumulativeDistribution
-      extends WindowFn("CUMULATIVE_DISTRIBUTION", Required, Required, NotSupported, Numeric, Some(DoubleType))
-  case object Accumulate    extends WindowFn("ACCUMULATE", Required, Optional, Optional, Numeric, None)
+      extends WindowFn("CUMULATIVE_DISTRIBUTION", Required, NotSupported, Numeric, Some(DoubleType))
+  case object Accumulate    extends WindowFn("ACCUMULATE", Optional, Optional, Numeric, None)
 
   // lazy: a case object's <clinit> can trigger this companion's init before
   // that object finishes constructing — eager evaluation here would capture
@@ -183,12 +176,13 @@ object FnArg {
 case class OrderSpec(field: String, direction: SortDirection = SortDirection.Ascending)
 
 /** Full window-aggregation query spec — the engine's input IR.
-  * Mirrors the reference config surface (WindowAggregationConfig.java:46-109).
+  * Mirrors the reference config surface (WindowAggregationConfig.java:46-109);
+  * `frame` is None for the reference's frame type NONE.
   */
 case class WindowQuerySpec(
     partitionFields: Seq[String],
     order: Seq[OrderSpec] = Seq.empty,
-    frame: FrameSpec = FrameSpec(),
+    frame: Option[FrameSpec] = None,
     aggregates: Seq[AggregateSpec] = Seq.empty,
     numberOfPartitions: Option[Int] = None)
 

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types._
   * walk of [[WindowEngine.outputSchema]] (`WindowEngine.layout`), an argument
   * is the value [[WindowFn.parseArg]] read, and a declared type is CAST where
   * `castsToDeclared` says Spark's result differs from it.
-  * Every name is quoted (see `quote`). The one divergence from the engine
-  * left is BigQuery's navigation functions (see `partitionOnly`).
+  * Every name is quoted (see `quote`), and a value-offset RANGE frame orders
+  * by an INT key as a BIGINT (see `overClause`). The one divergence from the
+  * engine left is BigQuery's navigation functions (see `partitionOnly`).
   * The Spark dialect's percentile family is the engine's kernel
   * ([[WindowExtensions]]), with one exception: [[emit]] prints Spark's own
   * `percentile` for MEDIAN and CONTINUOUS_PERCENTILE where the engine's items
@@ -65,7 +66,7 @@ object SqlEmitter {
     // the cast wraps the whole windowed expression — CAST(fn() AS t) OVER
     // (...) is a syntax error in every dialect
     def windowed(agg: AggregateSpec, declared: DataType): String = {
-      val base = s"${aggregateSql(agg, dialect, kernel)} ${overClause(spec, dialect, partitionOnly(agg, dialect))}"
+      val base = s"${aggregateSql(agg, dialect, kernel)} ${overClause(spec, schema, dialect, partitionOnly(agg, dialect))}"
       outputCast(agg, declared, dialect).fold(base)(t => s"CAST($base AS $t)") + s" AS ${name(agg.alias)}"
     }
     WindowEngine.layout(schema, spec).map {
@@ -133,9 +134,16 @@ object SqlEmitter {
     if (castsToDeclared(agg.fn) || duckNative) Some(typeName(declared)) else None
   }
 
-  private def overClause(spec: WindowQuerySpec, dialect: Dialect, partitionOnly: Boolean): String = {
+  private def overClause(spec: WindowQuerySpec, schema: StructType, dialect: Dialect, partitionOnly: Boolean): String = {
     val partition = s"PARTITION BY ${spec.partitionFields.map(quote(_, dialect)).mkString(", ")}"
     if (partitionOnly) return s"OVER ($partition)"
+    // Spark and DuckDB add a RANGE offset to an INT key in INT and fail past
+    // its range (2147483647 FOLLOWING does from key 1), so they order by the
+    // key as a BIGINT; BigQuery's INT64 is one already.
+    val widened = dialect != Dialect.BigQuery &&
+      spec.frame.exists(f => f.frameType == FrameType.Range && f.offsets.nonEmpty)
+    def key(f: String) = if (widened && schema.find(_.name == f).exists(_.dataType == IntegerType))
+      s"CAST(${quote(f, dialect)} AS BIGINT)" else quote(f, dialect)
     val order =
       if (spec.order.isEmpty) ""
       else " ORDER BY " + spec.order.map { o =>
@@ -148,25 +156,23 @@ object SqlEmitter {
           case (SortDirection.Ascending, _)               => "ASC"
           case (SortDirection.Descending, _)              => "DESC"
         }
-        s"${quote(o.field, dialect)} $dir"
+        s"${key(o.field)} $dir"
       }.mkString(", ")
-    val frame = spec.frame.frameType match {
-      case FrameType.NoFrame => ""
-      case ft =>
-        val kw = if (ft == FrameType.Row) "ROWS" else "RANGE"
-        s" $kw BETWEEN ${bound(spec.frame.startBound)} AND ${bound(spec.frame.endBound)}"
+    val frame = spec.frame.fold("") { f =>
+      val kw = if (f.frameType == FrameType.Row) "ROWS" else "RANGE"
+      s" $kw BETWEEN ${bound(f.start)} AND ${bound(f.end)}"
     }
     s"OVER ($partition$order$frame)"
   }
 
-  /** Signed engine bound → SQL bound (reference sign convention: users write
-    * -2 for "2 preceding"; sentinels are Long.MinValue/MaxValue). */
+  /** Signed [[FrameSpec]] bound → SQL bound (reference sign convention: users
+    * write -2 for "2 preceding"). */
   private def bound(b: Long): String = b match {
-    case Long.MinValue     => "UNBOUNDED PRECEDING"
-    case Long.MaxValue     => "UNBOUNDED FOLLOWING"
-    case 0L                => "CURRENT ROW"
-    case n if n < 0        => s"${-n} PRECEDING"
-    case n                 => s"$n FOLLOWING"
+    case FrameSpec.UnboundedPreceding => "UNBOUNDED PRECEDING"
+    case FrameSpec.UnboundedFollowing => "UNBOUNDED FOLLOWING"
+    case 0L                           => "CURRENT ROW"
+    case n if n < 0                   => s"${-n} PRECEDING"
+    case n                            => s"$n FOLLOWING"
   }
 
   /** FIRST/LAST ignoreNulls: config flag OR'd with an optional boolean arg

@@ -28,14 +28,6 @@ object StreamingWindows {
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Sliding-window variant. */
-  def slidingAgg(events: DataFrame, windowLength: String, slide: String, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength, slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n_events"))
-
   /** Gap-based sessionization with the built-in session_window — the
     * streaming analogue of the batch q33 sessionize query. */
   def sessionAgg(events: DataFrame, gap: String, watermark: String): DataFrame =

@@ -108,9 +108,10 @@ object Validator {
           s"Function ${agg.fn.fnName} (alias '${agg.alias}') does not support a $clause clause.")
       case _ =>
     }
-    check(agg.fn.partition, spec.partitionFields.nonEmpty, "partition")
+    // every function requires a partition clause (the reference's clause table)
+    check(Constraint.Required, spec.partitionFields.nonEmpty, "partition")
     check(agg.fn.order, spec.order.nonEmpty, "order")
-    check(agg.fn.frame, spec.frame.frameType != FrameType.NoFrame, "frame")
+    check(agg.fn.frame, spec.frame.nonEmpty, "frame")
     fs.result()
   }
 
@@ -122,29 +123,24 @@ object Validator {
     * such a frame at analysis), and ANY bounded RANGE frame (true value
     * offsets) needs a single NUMERIC order key — matches Spark's own
     * rangeBetween restriction (reference states it in prose,
-    * WindowAggregationConfig.java:53-56). Bounds Spark would reject later
-    * are rejected here: a ROW bound must lie within ±2147483647 (Spark's
-    * INVALID_BOUNDARY; its SQL text fails analysis from 2147483648
-    * PRECEDING), and a RANGE offset over an INT order key must fit in an INT
-    * (Spark's CAST_OVERFLOW at run time).
+    * WindowAggregationConfig.java:53-56). A ROW bound must lie within
+    * ±2147483647, which Spark would reject later (its INVALID_BOUNDARY; its
+    * SQL text fails analysis from 2147483648 PRECEDING). A RANGE offset takes
+    * any value: over an INT key the Spark and DuckDb dialects order by the key
+    * as a BIGINT ([[SqlEmitter]]), so an offset past INT's range runs.
     */
   private def validateSpecialCase(
       spec: WindowQuerySpec, fieldTypes: Map[String, DataType]): Seq[ValidationFailure] = {
-    if (spec.frame.frameType == FrameType.NoFrame) return Seq.empty
+    if (spec.frame.isEmpty) return Seq.empty
+    val frame = spec.frame.get
     val fs = Seq.newBuilder[ValidationFailure]
-    if (spec.frame.startBound > spec.frame.endBound)
+    if (frame.start > frame.end)
       fs += ValidationFailure(
-        s"Window frame start ${spec.frame.startBound} must not be after frame end ${spec.frame.endBound}.",
+        s"Window frame start ${frame.start} must not be after frame end ${frame.end}.",
         "Use negative values for preceding bounds, e.g. -2 for 2 preceding.")
-    val range = spec.frame.frameType == FrameType.Range
-    // Generalized guard: only true VALUE offsets constrain all other
-    // functions; unbounded sentinels and current-row (0) endpoints are legal
-    // with any order keys (RANGE UNBOUNDED PRECEDING AND CURRENT ROW is
-    // Spark's own default).
-    def isValueOffset(b: Long) = b != Long.MinValue && b != Long.MaxValue && b != 0L
-    val offsets = Seq(spec.frame.startBound, spec.frame.endBound).filter(isValueOffset)
+    val range = frame.frameType == FrameType.Range
     if (!range)
-      for (b <- offsets if b < -Int.MaxValue || b > Int.MaxValue)
+      for (b <- frame.offsets if b < -Int.MaxValue || b > Int.MaxValue)
         fs += ValidationFailure(
           s"ROW frame bound $b must lie within -2147483647 and 2147483647.",
           "Use an unbounded frame side for a larger bound.")
@@ -155,24 +151,18 @@ object Validator {
         "partitionOrder needs to have exactly one clause when using RANGE frametype " +
           "for function ACCUMULATE.",
         "Make sure there is only 1 ordering field.")
-    if (range && offsets.nonEmpty) {
+    // Generalized guard: only true VALUE offsets constrain all other
+    // functions; unbounded sentinels and current-row (0) endpoints are legal
+    // with any order keys (RANGE UNBOUNDED PRECEDING AND CURRENT ROW is
+    // Spark's own default).
+    if (range && frame.offsets.nonEmpty) {
       if (spec.order.size != 1)
         fs += ValidationFailure(
           "A bounded RANGE frame requires exactly one order clause.",
           "Provide a single numeric order field.")
-      else {
-        val key = spec.order.head.field
-        fieldTypes.get(key) match {
-          case Some(IntegerType) =>
-            for (b <- offsets if !b.isValidInt)
-              fs += ValidationFailure(
-                s"RANGE frame offset $b does not fit the int order field '$key'.",
-                "Use an offset within -2147483648 and 2147483647, or a long order field.")
-          case Some(t) if InputTypes.Numeric.accepts(t) =>
-          case _ =>
-            fs += ValidationFailure(s"RANGE frame order field '$key' must be numeric (int, long, float, double).")
-        }
-      }
+      else if (!fieldTypes.get(spec.order.head.field).exists(InputTypes.Numeric.accepts))
+        fs += ValidationFailure(
+          s"RANGE frame order field '${spec.order.head.field}' must be numeric (int, long, float, double).")
     }
     fs.result()
   }

@@ -34,7 +34,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   private def runOne(agg: AggregateSpec,
-      frame: FrameSpec = FrameSpec(),
+      frame: Option[FrameSpec] = None,
       order: Seq[OrderSpec] = Seq(OrderSpec("ord"))): Map[(String, Int), Any] = {
     val out = WindowEngine.run(df, WindowQuerySpec(Seq("k"), order, frame, Seq(agg)))
     out.collect().map(r => (r.getString(0), r.getInt(1)) -> r.get(3)).toMap
@@ -42,20 +42,20 @@ class EngineSpec extends AnyFunSuite {
 
   test("ROW frame bounds: signed preceding/current row") {
     val m = runOne(AggregateSpec("s", WindowFn.Accumulate, "ord"),
-      FrameSpec(FrameType.Row, Some(-1L), Some(0L)))
+      Some(FrameSpec(FrameType.Row, -1L, 0L)))
     assert(m(("a", 1)) == 1 && m(("a", 2)) == 3 && m(("a", 3)) == 5 && m(("a", 4)) == 7)
   }
 
   test("unbounded sentinels map to full partition") {
     val m = runOne(AggregateSpec("s", WindowFn.Accumulate, "ord"),
-      FrameSpec(FrameType.Row, unboundedPreceding = true, unboundedFollowing = true))
+      Some(FrameSpec(FrameType.Row, FrameSpec.UnboundedPreceding, FrameSpec.UnboundedFollowing)))
     assert(m(("a", 1)) == 10 && m(("a", 4)) == 10 && m(("b", 2)) == 3)
   }
 
   test("RANGE frame uses value distance on the order key") {
     // order by ord, range [-1, 0]: at ord=3 includes ord 2 and 3
     val m = runOne(AggregateSpec("s", WindowFn.Accumulate, "ord"),
-      FrameSpec(FrameType.Range, Some(-1L), Some(0L)))
+      Some(FrameSpec(FrameType.Range, -1L, 0L)))
     assert(m(("a", 3)) == 5)
   }
 
@@ -285,16 +285,49 @@ class EngineSpec extends AnyFunSuite {
     assert(GraftFunctionBridge.lookup(fresh, ident).map(_.getClassName) == Some(info.getClassName))
   }
 
-  test("run rejects a ROW bound past ±2147483647 and a RANGE offset past its INT order key") {
-    def acc(frame: FrameSpec) = WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), frame,
-      Seq(AggregateSpec("s", WindowFn.Accumulate, "ord")))
-    for (frame <- Seq(FrameSpec(FrameType.Row, Some(-(1L << 31)), Some(0L)),
-        FrameSpec(FrameType.Row, Some(0L), Some(3000000000L)),
-        FrameSpec(FrameType.Range, Some(-3000000000L), Some(0L)),
-        FrameSpec(FrameType.Range, Some(0L), Some(1L << 31)))) {
+  /** `spec` over `in` runs on the engine, on its emitted Spark SQL and on
+    * DuckDB, and each gives the engine's rows of `spec` over `in` with its INT
+    * column `key` cast to LONG. */
+  private def assertRunsAsOverLong(in: DataFrame, key: String, specs: Seq[WindowQuerySpec]): Unit = {
+    def text(rows: Seq[Row]) = rows.map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+    val long = in.withColumn(key, org.apache.spark.sql.functions.col(key).cast(LongType))
+    in.createOrReplaceTempView("int_key")
+    val engine = specs.map(spec => WindowEngine.run(in, spec).collect().toSeq)
+    for ((spec, rows) <- specs.zip(engine)) {
+      val want = text(WindowEngine.run(long, spec).collect().toSeq)
+      assert(text(rows) == want, spec)
+      assert(text(spark.sql(SqlEmitter.emit(spec, "int_key", in.schema)).collect().toSeq) == want, spec)
+    }
+    val duck = DuckDbOracle.viaDuckDb(in, "int_key",
+      specs.map(SqlEmitter.emit(_, "int_key", in.schema, SqlEmitter.Dialect.DuckDb)))
+    for (((spec, rows), d) <- specs.zip(engine).zip(duck))
+      assert(DuckDbOracle.duckMismatch(WindowEngine.outputSchema(in.schema, spec), rows, d).isEmpty, s"$d: $spec")
+  }
+
+  test("run rejects a ROW bound past ±2147483647 and runs a RANGE offset past its INT key") {
+    def acc(frame: FrameSpec) = WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), Some(frame),
+      Seq(AggregateSpec("s", WindowFn.Accumulate, "v")))
+    for (frame <- Seq(FrameSpec(FrameType.Row, -(1L << 31), 0L), FrameSpec(FrameType.Row, 0L, 3000000000L))) {
       val e = intercept[GraftValidationException](WindowEngine.run(df, acc(frame)))
       assert(e.failures.size == 1, e.getMessage)
     }
+    assertRunsAsOverLong(df, "ord", Seq(
+      FrameSpec(FrameType.Range, -3000000000L, 0L), FrameSpec(FrameType.Range, 0L, 1L << 31),
+      FrameSpec(FrameType.Range, -(1L << 31), Int.MaxValue.toLong), FrameSpec(FrameType.Range, -1L, 3000000000L)
+    ).map(acc))
+  }
+
+  test("RANGE BETWEEN CURRENT ROW AND 2147483647 FOLLOWING over INT keys runs with one result on every backend") {
+    // Spark adds the INT key and the offset in INT: ordered by the key itself,
+    // this frame fails with ARITHMETIC_OVERFLOW from key 1
+    val keys = (0 until 20).map(k => (if (k % 2 == 0) "even" else "odd", k)).toDF("p", "k")
+    val spec = WindowQuerySpec(Seq("p"), Seq(OrderSpec("k")), Some(FrameSpec(FrameType.Range, 0L, Int.MaxValue.toLong)),
+      Seq(AggregateSpec("s", WindowFn.Accumulate, "k")))
+    assert(SqlEmitter.emit(spec, "t", keys.schema).contains(
+      "ORDER BY CAST(`k` AS BIGINT) ASC RANGE BETWEEN CURRENT ROW AND 2147483647 FOLLOWING"))
+    val sums = WindowEngine.run(keys, spec).collect().map(r => r.getInt(1) -> r.getInt(2)).toMap
+    assert(sums == (0 until 20).map(k => k -> (k until 20 by 2).sum).toMap)
+    assertRunsAsOverLong(keys, "k", Seq(spec))
   }
 
   test("one select: the analyzed plan has one Window node and the same shape for 1 aggregate as for 13") {

@@ -33,6 +33,29 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("register twice lists each function once, keeps one of the same class and replaces a foreign one") {
+    import org.apache.spark.sql.GraftFunctionBridge
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    // a new session shares the context but not the function registry
+    val fresh = spark.newSession()
+    val names = GraftExtensions.descriptions.map(_._1.funcName)
+    GraftExtensions.register(fresh)
+    GraftExtensions.register(fresh)
+    assert(fresh.catalog.listFunctions().collect().map(_.name).filter(names.contains).sorted.toSeq == names.sorted)
+    val (ident, info, builder) = GraftExtensions.descriptions.find(_._1.funcName == "graft_dot").get
+    // one registered under the same class stays the one registered
+    val copy = new ExpressionInfo(info.getClassName, null, ident.funcName, info.getUsage, "")
+    GraftFunctionBridge.register(fresh, ident, copy, builder)
+    GraftExtensions.register(fresh)
+    assert(GraftFunctionBridge.lookup(fresh, ident).exists(_ eq copy))
+    // a foreign function of the same name is replaced
+    GraftFunctionBridge.register(fresh, ident, new ExpressionInfo("other.Fn", ident.funcName), builder)
+    GraftExtensions.register(fresh)
+    assert(GraftFunctionBridge.lookup(fresh, ident).exists(_ eq info))
+    assert(fresh.catalog.listFunctions().collect().count(_.name == "graft_dot") == 1)
+    assert(fresh.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head().getDouble(0) == 11.0)
+  }
+
   test("hash-family SQL functions match the Column API kernels") {
     withRegistered {
       import spark.implicits._

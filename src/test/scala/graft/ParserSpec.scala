@@ -67,6 +67,32 @@ class ParserSpec extends AnyFunSuite {
     assert(fs.exists(_.message.contains("Missing 'aggregates' property")))
   }
 
+  test("the five frame settings make one frame: NONE is none, a flag overrides a value, a missing bound is the current row") {
+    def frame(ft: String, p: Option[Long] = None, f: Option[Long] = None, up: Boolean = false, uf: Boolean = false) =
+      DslParser.parseSpec("k", "v:Ascending", "x:first(v,,)", ft, p, f, up, uf).map(_.frame)
+    import FrameSpec.{UnboundedFollowing => UF, UnboundedPreceding => UP}
+    // NONE (any case, or empty) is no frame, whatever bounds are set
+    for (none <- Seq("NONE", "none", " None ", ""))
+      assert(frame(none, Some(-2L), Some(3L), up = true, uf = true) == Right(None), none)
+    assert(frame("ROW", Some(-2L), Some(3L)) == Right(Some(FrameSpec(FrameType.Row, -2L, 3L))))
+    assert(frame(" range ", Some(-2L), Some(3L)) == Right(Some(FrameSpec(FrameType.Range, -2L, 3L))))
+    // an unbounded flag overrides the value beside it
+    assert(frame("ROW", Some(-2L), Some(3L), up = true) == Right(Some(FrameSpec(FrameType.Row, UP, 3L))))
+    assert(frame("ROW", Some(-2L), Some(3L), uf = true) == Right(Some(FrameSpec(FrameType.Row, -2L, UF))))
+    assert(frame("RANGE", up = true, uf = true) == Right(Some(FrameSpec(FrameType.Range, UP, UF))))
+    // a missing bound is the current row, as 0 is
+    assert(frame("ROW") == Right(Some(FrameSpec(FrameType.Row, 0L, 0L))))
+    assert(frame("ROW", Some(0L), Some(0L)) == frame("ROW"))
+    assert(frame("RANGE", up = true) == Right(Some(FrameSpec(FrameType.Range, UP, 0L))))
+    assert(frame("RANGE", f = Some(5L)) == Right(Some(FrameSpec(FrameType.Range, 0L, 5L))))
+    // a value equal to a sentinel is that sentinel
+    assert(frame("ROW", Some(Long.MinValue)) == frame("ROW", up = true))
+    // an unknown type fails beside the spec's other failures
+    assert(DslParser.parseSpec("k", "v:Sideways", "x:first(v,,)", "ROWS").left.map(_.map(_.message)) ==
+      Left(Seq("Invalid sort direction 'sideways'. Must be Ascending or Descending.",
+        "Invalid frame type 'ROWS'. Must be NONE, ROW or RANGE.")))
+  }
+
   test("order clause parses directions, accumulates bad pairs") {
     val Right(os) = DslParser.parseOrder("a:Ascending, b:Descending")
     assert(os == Seq(OrderSpec("a"), OrderSpec("b", SortDirection.Descending)))

@@ -93,7 +93,7 @@ class PropertySpec extends AnyFunSuite {
     forAll(rowsGen) { rows =>
       val df = rows.toDF("k", "ord", "x")
       val out = WindowEngine.run(df, WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
-        FrameSpec(FrameType.Row, preceding = Some(-2L), following = Some(1L)),
+        Some(FrameSpec(FrameType.Row, -2L, 1L)),
         Seq(AggregateSpec("s", WindowFn.Accumulate, "x")))).collect()
       for ((_, part0) <- out.groupBy(_.getString(0))) {
         val part = part0.sortBy(_.getInt(1))

@@ -1,14 +1,10 @@
 package graft
 
-import java.io.File
-
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
-import scala.sys.process.{Process, ProcessLogger}
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The emitted SQL must be a drop-in for the engine: running the Spark
@@ -19,101 +15,31 @@ import org.scalatest.funsuite.AnyFunSuite
 class SqlEmitterSpec extends AnyFunSuite {
   private lazy val spark = { GraftExtensions.register(TestSpark.spark); TestSpark.spark }
   import spark.implicits._
+  import DuckDbOracle.{duckMismatch, viaDuckDb}
 
   private lazy val df = Seq(
     ("a", 1, Option(10.0)), ("a", 2, Option.empty[Double]), ("a", 3, Option(30.0)),
     ("a", 4, Option(20.0)), ("b", 1, Option(5.0)), ("b", 2, Option(7.0))
   ).toDF("k", "ord", "v")
 
-  /** Runs `sqls` over a parquet copy of `df`, viewed as `table`, in one
-    * `python3` call to duckdb, as winbench's oracle and tools/check.py do:
-    * per query its column names, DuckDB type names and rows, or the error
-    * DuckDB raised. Decimals come back as text, timestamps as epoch
-    * microseconds (Spark writes the instant; DuckDB may read it as UTC).
-    * One thread and one file: rows tied on the order keys meet the window in
-    * the file's order, as they do on Spark over one input partition. */
-  private def viaDuckDb(df: DataFrame, table: String, sqls: Seq[String]): Seq[JsonNode] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-duckdb").toFile
-    try {
-      df.coalesce(1).write.parquet(s"$dir/$table")
-      val mapper = new ObjectMapper()
-      mapper.writeValue(new File(dir, "request.json"),
-        Map[String, AnyRef]("table" -> table, "parquet" -> s"$dir/$table", "queries" -> sqls.asJava).asJava)
-      val err = new StringBuilder
-      val code = Process(Seq("python3", "-c", duckScript, s"$dir/request.json", s"$dir/response.json"))
-        .!(ProcessLogger(_ => (), line => err ++= line + "\n"))
-      assert(code == 0, s"python3 with duckdb failed:\n$err")
-      mapper.readTree(new File(dir, "response.json")).elements().asScala.toSeq
-    } finally new scala.reflect.io.Directory(dir).deleteRecursively()
-  }
+  /** A frame bound of the randomized tests: a small offset or the current
+    * row, an offset past an INT (Spark rejects it in a ROW frame; over an INT
+    * key, a RANGE frame orders by the key as a BIGINT), or its side's
+    * unbounded sentinel. */
+  private def boundGen(unbounded: Long): Gen[Long] = Gen.frequency(
+    5 -> Gen.oneOf(0L, -3L, -1L, 2L, 4L),
+    4 -> Gen.oneOf(-(1L << 31), 1L << 31, -3000000000L, 3000000000L),
+    2 -> Gen.const(unbounded))
 
-  private val duckScript =
-    """import datetime, decimal, json, math, sys
-      |import duckdb
-      |req = json.load(open(sys.argv[1]))
-      |con = duckdb.connect()
-      |con.execute("SET threads = 1")
-      |con.execute(f"CREATE VIEW {req['table']} AS SELECT * FROM read_parquet('{req['parquet']}/*.parquet')")
-      |utc = datetime.timezone.utc
-      |epoch = datetime.datetime(1970, 1, 1, tzinfo=utc)
-      |def cell(v):
-      |    if isinstance(v, float) and not math.isfinite(v):
-      |        return {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}[str(v)]
-      |    if isinstance(v, decimal.Decimal):
-      |        return str(v)
-      |    if isinstance(v, datetime.datetime):
-      |        return ((v if v.tzinfo else v.replace(tzinfo=utc)) - epoch) // datetime.timedelta(microseconds=1)
-      |    if isinstance(v, datetime.date):
-      |        return v.isoformat()
-      |    return v
-      |out = []
-      |for sql in req["queries"]:
-      |    try:
-      |        rel = con.sql(sql)
-      |        out.append({"columns": rel.columns, "types": [str(t) for t in rel.types],
-      |                    "rows": [[cell(v) for v in r] for r in rel.fetchall()]})
-      |    except duckdb.Error as e:
-      |        out.append({"error": str(e).splitlines()[0]})
-      |json.dump(out, open(sys.argv[2], "w"))
-      |""".stripMargin
-
-  /** How DuckDB's answer differs from the engine's `rows` under `schema`:
-    * names, DuckDB type names, then the rows as a multiset, floating values
-    * within winbench's relative tolerance (DuckDB sums frames in another
-    * order). None when it does not. */
-  private def duckMismatch(schema: StructType, rows: Seq[Row], duck: JsonNode): Option[String] = {
-    def duckType(dt: DataType) = dt match {
-      case IntegerType => "INTEGER"
-      case StringType  => "VARCHAR"
-      case other       => other.sql
-    }
-    def same(v: Any, j: JsonNode): Boolean = v match {
-      case null                    => j.isNull
-      case x: Float                => same(x.toDouble, j)
-      case x: Double               =>
-        if (j.isNumber) x == j.asDouble || math.abs(x - j.asDouble) <= 1e-9 * math.abs(x) else j.asText == x.toString
-      case x: java.math.BigDecimal => j.isTextual && new java.math.BigDecimal(j.asText).compareTo(x) == 0
-      case x: java.sql.Timestamp   =>
-        j.isIntegralNumber && j.asLong == x.toInstant.getEpochSecond * 1000000L + x.toInstant.getNano / 1000
-      case x: java.sql.Date        => j.isTextual && j.asText == x.toString
-      case x: Boolean              => j.isBoolean && j.asBoolean == x
-      case x: String               => j.isTextual && j.asText == x
-      case x: Number               => j.isIntegralNumber && j.asLong == x.longValue
-    }
-    def texts(field: String) = duck.get(field).elements().asScala.map(_.asText).toSeq
-    val want = schema.fields.map(f => f.name -> duckType(f.dataType)).toSeq
-    if (duck.has("error")) Some(s"DuckDB raised ${duck.get("error").asText}")
-    else if (texts("columns").zip(texts("types")) != want) Some(s"DuckDB columns ${texts("columns").zip(texts("types"))} != $want")
-    else {
-      val left = ArrayBuffer(duck.get("rows").elements().asScala.toSeq: _*)
-      val unmatched = rows.filterNot { r =>
-        val at = left.indexWhere(j => (0 until r.length).forall(c => same(r.get(c), j.get(c))))
-        at >= 0 && { left.remove(at); true }
-      }
-      if (unmatched.isEmpty && left.isEmpty) None
-      else Some(s"DuckDB rows != engine rows, e.g. engine ${unmatched.headOption.getOrElse("-")} / DuckDB ${left.headOption.getOrElse("-")}")
-    }
-  }
+  /** No frame (weight `noFrame` against 2), or a ROW or RANGE frame over
+    * [[boundGen]]'s bounds. */
+  private def frameGen(noFrame: Int): Gen[Option[FrameSpec]] = Gen.frequency(
+    noFrame -> Gen.const(None),
+    2 -> (for {
+      ft <- Gen.oneOf(FrameType.Row, FrameType.Range)
+      start <- boundGen(FrameSpec.UnboundedPreceding)
+      end <- boundGen(FrameSpec.UnboundedFollowing)
+    } yield Some(FrameSpec(ft, start, end))))
 
   private def assertParity(spec: WindowQuerySpec): Unit = {
     df.createOrReplaceTempView("t")
@@ -147,7 +73,7 @@ class SqlEmitterSpec extends AnyFunSuite {
 
   test("accumulate + median with frames, including in-place overwrite") {
     assertParity(WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
-      FrameSpec(FrameType.Row, Some(-1L), Some(0L)),
+      Some(FrameSpec(FrameType.Row, -1L, 0L)),
       aggregates = Seq(AggregateSpec("run", WindowFn.Accumulate, "ord"))))
     assertParity(WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")), // MEDIAN: frame NOT_SUPPORTED
       aggregates = Seq(AggregateSpec("med", WindowFn.Median, "ord"))))
@@ -218,16 +144,23 @@ class SqlEmitterSpec extends AnyFunSuite {
 
   test("frame bounds render the reference sign convention") {
     val spec = WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord")),
-      FrameSpec(FrameType.Range, Some(-5L), Some(3L)),
+      Some(FrameSpec(FrameType.Range, -5L, 3L)),
       Seq(AggregateSpec("s", WindowFn.Accumulate, "ord")))
     val sql = SqlEmitter.emit(spec, "t", df.schema)
     assert(sql.contains("RANGE BETWEEN 5 PRECEDING AND 3 FOLLOWING"))
+    // a value-offset RANGE frame orders by an INT key as a BIGINT, except in
+    // BigQuery, whose INT64 is one; a ROW frame and a frame without offsets do not
+    assert(sql.contains("ORDER BY CAST(`ord` AS BIGINT) ASC RANGE"))
+    assert(SqlEmitter.emit(spec, "t", df.schema, SqlEmitter.Dialect.DuckDb)
+      .contains("ORDER BY CAST(\"ord\" AS BIGINT) ASC NULLS FIRST RANGE"))
+    assert(SqlEmitter.emit(spec, "t", df.schema, SqlEmitter.Dialect.BigQuery).contains("ORDER BY `ord` ASC RANGE"))
+    for (frame <- Seq(FrameSpec(FrameType.Row, -5L, 3L), FrameSpec(FrameType.Range, FrameSpec.UnboundedPreceding, 0L)))
+      assert(SqlEmitter.emit(spec.copy(frame = Some(frame)), "t", df.schema).contains("ORDER BY `ord` ASC "), frame)
     // ACCUMULATE casts the whole windowed expression back to the input type
     assert(sql.contains("CAST(SUM(`ord`) OVER") && sql.contains("AS INT) AS `s`"))
   }
 
   test("emitted Spark SQL is engine-parity across randomized specs") {
-    import org.scalacheck.Gen
     val frameless: Seq[AggregateSpec] = Seq(
       AggregateSpec("r", WindowFn.Rank, "ord"),
       AggregateSpec("d", WindowFn.DenseRank, "ord"),
@@ -261,11 +194,8 @@ class SqlEmitterSpec extends AnyFunSuite {
             WindowQuerySpec(Seq("k"), aggregates = aggs.toSeq))
         case _ => for {
           aggs <- Gen.someOf(framed).suchThat(_.nonEmpty)
-          ft <- Gen.oneOf(FrameType.Row, FrameType.Range)
-          lo <- Gen.oneOf(Some(-3L), Some(-1L), None)
-          hi <- Gen.oneOf(Some(0L), Some(2L), None)
-        } yield WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord", dir)),
-          FrameSpec(ft, lo, hi), aggs.toSeq)
+          frame <- frameGen(noFrame = 1)
+        } yield WindowQuerySpec(Seq("k"), Seq(OrderSpec("ord", dir)), frame, aggs.toSeq)
       }
     } yield spec
     val params = Gen.Parameters.default
@@ -398,7 +328,6 @@ class SqlEmitterSpec extends AnyFunSuite {
   }
 
   test("validator => analysis: every accepted spec runs on both backends with one schema and one result") {
-    import org.scalacheck.Gen
     // `order` is a word DuckDB and BigQuery reserve: a dialect that prints it
     // bare fails here
     val schema = StructType(Seq(
@@ -450,31 +379,24 @@ class SqlEmitterSpec extends AnyFunSuite {
       alias <- Gen.frequency(3 -> Gen.oneOf("x", "y", "z", "w", "my col", "select"), 2 -> Gen.oneOf(cols),
         1 -> Gen.oneOf("K", "D", "X"))
     } yield AggregateSpec(alias, fn, field, a, ignoreNulls)
-    // and bounds past an INT, which Spark rejects for a ROW frame and for a
-    // RANGE frame over an INT order key
-    val bound = Gen.oneOf(None, Some(-3L), Some(-1L), Some(0L), Some(2L), Some(4L),
-      Some(-(1L << 31)), Some(1L << 31), Some(-3000000000L), Some(3000000000L))
-    val frameGen: Gen[FrameSpec] = Gen.frequency(
-      4 -> Gen.const(FrameSpec()),
-      2 -> (for {
-        ft <- Gen.oneOf(FrameType.Row, FrameType.Range)
-        lo <- bound
-        hi <- bound
-        up <- Gen.frequency(3 -> false, 1 -> true)
-        uf <- Gen.frequency(3 -> false, 1 -> true)
-      } yield FrameSpec(ft, lo, hi, up, uf)))
-    // one spec in six draws only the two functions an unordered spec takes
+    // one spec in eight draws only the two functions an unordered spec takes,
+    // and one in four only the three a frame is legal for, always framed and
+    // mostly by one order key; its bounds in order, as those of a frame that
+    // starts after it ends are tested by the other specs
     val unordered = Seq(WindowFn.ContinuousPercentile, WindowFn.Accumulate)
+    val framed = Seq(WindowFn.First, WindowFn.Last, WindowFn.Accumulate)
     val specGen: Gen[WindowQuerySpec] = for {
-      fns <- Gen.frequency(5 -> WindowFn.all, 1 -> unordered)
+      fns <- Gen.frequency(5 -> WindowFn.all, 1 -> unordered, 2 -> framed)
       parts <- Gen.frequency(8 -> Gen.oneOf(Seq("k"), Seq("order"), Seq("k", "order"), Seq("a.b"), Seq("b")),
         1 -> Gen.oneOf(Seq("nope"), Nil))
-      nOrder <- if (fns == unordered) Gen.frequency(3 -> 0, 1 -> 1) else Gen.frequency(1 -> 0, 5 -> 1, 2 -> 2)
+      nOrder <- if (fns == unordered) Gen.frequency(3 -> 0, 1 -> 1)
+        else if (fns == framed) Gen.frequency(1 -> 0, 8 -> 1, 1 -> 2) else Gen.frequency(1 -> 0, 5 -> 1, 2 -> 2)
       order <- Gen.listOfN(nOrder, for {
         f <- Gen.frequency(3 -> Gen.oneOf(numeric), 2 -> Gen.oneOf(cols))
         dir <- Gen.oneOf(SortDirection.Ascending, SortDirection.Descending)
       } yield OrderSpec(f, dir))
-      frame <- frameGen
+      frame <- if (fns != framed) frameGen(noFrame = 4)
+        else frameGen(noFrame = 0).map(_.map(f => f.copy(start = f.start min f.end, end = f.start max f.end)))
       n <- Gen.frequency(3 -> 1, 2 -> 2, 1 -> 3)
       aggs <- Gen.listOfN(n, aggGen(fns))
     } yield WindowQuerySpec(parts, order, frame, aggs)
@@ -485,14 +407,20 @@ class SqlEmitterSpec extends AnyFunSuite {
     val problems = Seq.newBuilder[String]
     // (spec, engine schema, engine rows, DuckDb text) of every spec that passed on Spark
     val toDuckDb = Seq.newBuilder[(WindowQuerySpec, StructType, Seq[Row], String)]
-    var accepted, rejected, readOrder = 0
+    var accepted, rejected, readOrder, intRange, pastInt = 0
     var drawn = Set.empty[WindowFn]
-    for (seed <- 0L until 500L; spec <- specGen.apply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))) {
+    for (seed <- 0L until 1000L; spec <- specGen.apply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))) {
       if (Validator.validate(spec, schema).nonEmpty) rejected += 1
       else {
         accepted += 1
         if ((spec.partitionFields ++ spec.order.map(_.field) ++ spec.aggregates.map(_.field)).contains("order")) readOrder += 1
         drawn ++= spec.aggregates.map(_.fn)
+        // a value-offset RANGE frame over an INT key, which orders by it as a BIGINT
+        for (f <- spec.frame if f.frameType == FrameType.Range && f.offsets.nonEmpty &&
+             schema(spec.order.head.field).dataType == IntegerType) {
+          intRange += 1
+          if (f.offsets.exists(!_.isValidInt)) pastInt += 1
+        }
         try {
           val engine = WindowEngine.run(in, spec)
           val declared = WindowEngine.outputSchema(schema, spec)
@@ -518,12 +446,15 @@ class SqlEmitterSpec extends AnyFunSuite {
       problems += s"$why: $spec"
     info(f"DuckDB leg: ${onSpark.size} specs in ${(System.nanoTime() - duckStart) / 1e9}%.1f s")
     val found = problems.result()
-    info(s"$accepted accepted, $rejected rejected; $readOrder read the column `order`")
+    info(s"$accepted accepted, $rejected rejected; $readOrder read the column `order`; " +
+      s"$intRange have a RANGE offset over an INT key, $pastInt of them past an INT")
     assert(found.isEmpty, s"${found.size} of $accepted accepted specs broke the property:\n" +
       found.take(10).mkString("\n"))
     assert(accepted >= 100 && rejected >= 100, s"generator too narrow: $accepted accepted, $rejected rejected")
     assert(drawn == WindowFn.all.toSet, s"accepted specs never drew ${WindowFn.all.toSet -- drawn}")
     assert(readOrder >= 50, s"only $readOrder accepted specs read the column `order`")
+    assert(intRange >= 10 && pastInt >= 3,
+      s"only $intRange accepted specs have a RANGE offset over an INT key, $pastInt of them past an INT")
   }
 
   test("DuckDb reads a running MEDIAN's FLOAT input as a DOUBLE, as the engine does") {

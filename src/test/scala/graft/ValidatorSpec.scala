@@ -15,9 +15,11 @@ class ValidatorSpec extends AnyFunSuite {
   private def spec(
       parts: Seq[String] = Seq("k"),
       order: Seq[OrderSpec] = Seq(OrderSpec("v")),
-      frame: FrameSpec = FrameSpec(),
+      frame: Option[FrameSpec] = None,
       aggs: Seq[AggregateSpec]) =
     WindowQuerySpec(parts, order, frame, aggs)
+
+  import FrameSpec.{UnboundedFollowing, UnboundedPreceding}
 
   test("valid spec has no failures") {
     assert(Validator.validate(
@@ -58,9 +60,37 @@ class ValidatorSpec extends AnyFunSuite {
       spec(order = Seq.empty, aggs = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))), schema).isEmpty)
   }
 
+  test("a spec with no partition fields reports that each aggregate requires a partition clause") {
+    def args(fn: WindowFn) = fn match {
+      case WindowFn.NTile => Seq("2")
+      case WindowFn.ContinuousPercentile | WindowFn.DiscretePercentile => Seq("0.5")
+      case WindowFn.Lead | WindowFn.Lag => Seq("1")
+      case _ => Nil
+    }
+    val fs = Validator.validate(
+      spec(parts = Nil, aggs = WindowFn.all.map(fn => AggregateSpec(fn.fnName.toLowerCase, fn, "v", args(fn)))), schema)
+    assert(fs.map(_.toString) == Seq(
+      "At least one partition field must be specified.",
+      "Function RANK (alias 'rank') requires a partition clause.",
+      "Function DENSE_RANK (alias 'dense_rank') requires a partition clause.",
+      "Function PERCENT_RANK (alias 'percent_rank') requires a partition clause.",
+      "Function N_TILE (alias 'n_tile') requires a partition clause.",
+      "Function ROW_NUMBER (alias 'row_number') requires a partition clause.",
+      "Function MEDIAN (alias 'median') requires a partition clause.",
+      "Function CONTINUOUS_PERCENTILE (alias 'continuous_percentile') requires a partition clause.",
+      "Function CONTINUOUS_PERCENTILE (alias 'continuous_percentile') does not support a order clause.",
+      "Function DISCRETE_PERCENTILE (alias 'discrete_percentile') requires a partition clause.",
+      "Function LEAD (alias 'lead') requires a partition clause.",
+      "Function LAG (alias 'lag') requires a partition clause.",
+      "Function FIRST (alias 'first') requires a partition clause.",
+      "Function LAST (alias 'last') requires a partition clause.",
+      "Function CUMULATIVE_DISTRIBUTION (alias 'cumulative_distribution') requires a partition clause.",
+      "Function ACCUMULATE (alias 'accumulate') requires a partition clause."))
+  }
+
   test("frame clause not supported for rank family") {
     val fs = Validator.validate(
-      spec(frame = FrameSpec(FrameType.Row, Some(-2L), Some(0L)),
+      spec(frame = Some(FrameSpec(FrameType.Row, -2L, 0L)),
         aggs = Seq(AggregateSpec("r", WindowFn.Rank, "v"))), schema)
     assert(fs.exists(_.message.contains("does not support a frame")))
   }
@@ -119,7 +149,7 @@ class ValidatorSpec extends AnyFunSuite {
   }
 
   test("bounded RANGE frame needs exactly one numeric order key") {
-    val f = FrameSpec(FrameType.Range, Some(-5L), Some(0L))
+    val f = Some(FrameSpec(FrameType.Range, -5L, 0L))
     def acc = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))
     assert(Validator.validate(
       spec(order = Seq(OrderSpec("v"), OrderSpec("i")), frame = f, aggs = acc),
@@ -132,12 +162,12 @@ class ValidatorSpec extends AnyFunSuite {
     // fully unbounded RANGE frame is exempt from the VALUE-offset rule —
     // probe with LAST (ACCUMULATE has its own stricter rule, below)
     def lst = Seq(AggregateSpec("a", WindowFn.Last, "v"))
-    val unb = FrameSpec(FrameType.Range, unboundedPreceding = true, unboundedFollowing = true)
+    val unb = Some(FrameSpec(FrameType.Range, UnboundedPreceding, UnboundedFollowing))
     assert(Validator.validate(
       spec(order = Seq(OrderSpec("v"), OrderSpec("i")), frame = unb, aggs = lst), schema).isEmpty)
     // unbounded-preceding-to-current-row (Spark's default frame) is exempt too:
     // only true value offsets need a single numeric order key
-    val runToCur = FrameSpec(FrameType.Range, unboundedPreceding = true)
+    val runToCur = Some(FrameSpec(FrameType.Range, UnboundedPreceding, 0L))
     assert(Validator.validate(
       spec(order = Seq(OrderSpec("s"), OrderSpec("i")), frame = runToCur, aggs = lst), schema).isEmpty)
   }
@@ -146,7 +176,7 @@ class ValidatorSpec extends AnyFunSuite {
     // the reference rule (WindowAggregation.java:272-289) keys on the frame
     // TYPE alone, not its bounds — 0 or 2 order fields must fail
     def acc = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))
-    val unb = FrameSpec(FrameType.Range, unboundedPreceding = true, unboundedFollowing = true)
+    val unb = Some(FrameSpec(FrameType.Range, UnboundedPreceding, UnboundedFollowing))
     assert(Validator.validate(
       spec(order = Seq(OrderSpec("v"), OrderSpec("i")), frame = unb, aggs = acc),
       schema).exists(_.message.contains("exactly one clause")))
@@ -159,50 +189,50 @@ class ValidatorSpec extends AnyFunSuite {
 
   test("a ROW or RANGE frame that starts after it ends is rejected") {
     def acc = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))
-    def check(frame: FrameSpec) = Validator.validate(spec(frame = frame, aggs = acc), schema)
+    def check(frame: FrameSpec) = Validator.validate(spec(frame = Some(frame), aggs = acc), schema)
     // "2" written for "2 preceding": start 2 > end 0
     for (ft <- Seq(FrameType.Row, FrameType.Range)) {
-      assert(check(FrameSpec(ft, Some(2L), Some(0L))).map(_.message) ==
+      assert(check(FrameSpec(ft, 2L, 0L)).map(_.message) ==
         Seq("Window frame start 2 must not be after frame end 0."))
-      assert(check(FrameSpec(ft, Some(5L), Some(-5L)))
+      assert(check(FrameSpec(ft, 5L, -5L))
         .exists(_.message.contains("start 5 must not be after frame end -5")))
       // equal bounds and the unbounded sentinels stay valid
-      assert(check(FrameSpec(ft, Some(3L), Some(3L))).isEmpty)
-      assert(check(FrameSpec(ft, Some(-3L), Some(-3L))).isEmpty)
-      assert(check(FrameSpec(ft)).isEmpty)
-      assert(check(FrameSpec(ft, unboundedPreceding = true, unboundedFollowing = true)).isEmpty)
-      assert(check(FrameSpec(ft, Some(5L), unboundedFollowing = true)).isEmpty)
-      assert(check(FrameSpec(ft, unboundedPreceding = true, following = Some(-5L))).isEmpty)
+      assert(check(FrameSpec(ft, 3L, 3L)).isEmpty)
+      assert(check(FrameSpec(ft, -3L, -3L)).isEmpty)
+      assert(check(FrameSpec(ft, 0L, 0L)).isEmpty)
+      assert(check(FrameSpec(ft, UnboundedPreceding, UnboundedFollowing)).isEmpty)
+      assert(check(FrameSpec(ft, 5L, UnboundedFollowing)).isEmpty)
+      assert(check(FrameSpec(ft, UnboundedPreceding, -5L)).isEmpty)
     }
   }
 
   test("a ROW bound past ±2147483647 is rejected; the unbounded sentinels are not") {
     def acc = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))
-    def check(frame: FrameSpec) = Validator.validate(spec(frame = frame, aggs = acc), schema).map(_.message)
+    def check(frame: FrameSpec) = Validator.validate(spec(frame = Some(frame), aggs = acc), schema).map(_.message)
     val limit = Int.MaxValue.toLong
-    assert(check(FrameSpec(FrameType.Row, Some(-limit), Some(limit))).isEmpty)
-    assert(check(FrameSpec(FrameType.Row, unboundedPreceding = true, unboundedFollowing = true)).isEmpty)
+    assert(check(FrameSpec(FrameType.Row, -limit, limit)).isEmpty)
+    assert(check(FrameSpec(FrameType.Row, UnboundedPreceding, UnboundedFollowing)).isEmpty)
     // -2147483648 is a bound Spark's Column API takes, but its SQL text
     // `2147483648 PRECEDING` fails analysis
     for (b <- Seq(-limit - 1, -3000000000L, limit + 1, 3000000000L)) {
-      val frame = if (b < 0) FrameSpec(FrameType.Row, Some(b), Some(0L)) else FrameSpec(FrameType.Row, Some(0L), Some(b))
+      val frame = if (b < 0) FrameSpec(FrameType.Row, b, 0L) else FrameSpec(FrameType.Row, 0L, b)
       assert(check(frame) == Seq(s"ROW frame bound $b must lie within -2147483647 and 2147483647."))
     }
-    assert(check(FrameSpec(FrameType.Row, Some(-3000000000L), Some(3000000000L))).size == 2)
+    assert(check(FrameSpec(FrameType.Row, -3000000000L, 3000000000L)).size == 2)
   }
 
-  test("a RANGE offset over an INT order key must fit in an INT") {
+  test("a RANGE offset over an INT order key takes any value, as over a DOUBLE key") {
+    // the Spark and DuckDb dialects order by the INT key as a BIGINT, so the
+    // key plus the offset cannot overflow (EngineSpec runs these frames)
     def acc = Seq(AggregateSpec("a", WindowFn.Accumulate, "v"))
     def check(key: String, frame: FrameSpec) =
-      Validator.validate(spec(order = Seq(OrderSpec(key)), frame = frame, aggs = acc), schema).map(_.message)
-    assert(check("i", FrameSpec(FrameType.Range, Some(Int.MinValue.toLong), Some(Int.MaxValue.toLong))).isEmpty)
-    for (b <- Seq(Int.MinValue - 1L, -3000000000L, Int.MaxValue + 1L, 3000000000L)) {
-      val frame = if (b < 0) FrameSpec(FrameType.Range, Some(b), Some(0L)) else FrameSpec(FrameType.Range, Some(0L), Some(b))
-      assert(check("i", frame) == Seq(s"RANGE frame offset $b does not fit the int order field 'i'."))
-      // a DOUBLE order key takes it, and so does an unbounded frame over the INT key
-      assert(check("v", frame).isEmpty)
+      Validator.validate(spec(order = Seq(OrderSpec(key)), frame = Some(frame), aggs = acc), schema).map(_.message)
+    for (b <- Seq(Int.MinValue.toLong, Int.MaxValue.toLong, Int.MinValue - 1L, -3000000000L, Int.MaxValue + 1L, 3000000000L)) {
+      val frame = if (b < 0) FrameSpec(FrameType.Range, b, 0L) else FrameSpec(FrameType.Range, 0L, b)
+      assert(check("i", frame).isEmpty, b)
+      assert(check("v", frame).isEmpty, b)
     }
-    assert(check("i", FrameSpec(FrameType.Range, unboundedPreceding = true, unboundedFollowing = true)).isEmpty)
+    assert(check("i", FrameSpec(FrameType.Range, UnboundedPreceding, UnboundedFollowing)).isEmpty)
   }
 
   test("MEDIAN takes any numeric input, and no string") {
